@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Storm-retry decision (VERDICT r12 #1, economics reworked per
   * VERDICT r13 #1), kept pure so BenchRetrySpec can pin it. The bench
@@ -105,99 +104,15 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Confs.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      // same pin as Verify: the events ts normalization (NTZ-layout
-      // parquet → session-TZ timestamp) must be an identity on the
-      // stored micros, and window alignment must match the oracle's
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 84 queries × several codegen'd stages each overflow the default
-      // 100-entry generated-class cache; eviction then causes Janino
-      // recompile storms mid-bench (jstack: threads blocked in
-      // GeneratedClass.generate) that land on arbitrary queries
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // shuffle/spill scratch on the RAM-backed tmpfs: the bench host's
-      // /tmp is a virtio disk whose write stalls dominated run-to-run
-      // variance (see ScratchDirs)
-      .config("spark.local.dir", ScratchDirs.dir("spark_local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM/codegen/parquet-reader paths once so the first timed
-    // query doesn't absorb session startup: exercise the GENERIC
-    // operator shapes (scan, shuffle agg, broadcast join, window, sort)
-    // on the 25-row `nation` table — compiles the shared generated-code
-    // infrastructure without touching fact data or the measured queries.
-    locally {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      spark.range(1000).select(sum(col("id")))
-        .write.format("noop").mode("overwrite").save()
-      val n = spark.read.parquet(s"$sfDir/nation.parquet")
-      n.write.format("noop").mode("overwrite").save()
-      n.groupBy(col("n_regionkey")).agg(count(lit(1)), collect_list(col("n_name")))
-        .write.format("noop").mode("overwrite").save()
-      n.join(broadcast(n.select(col("n_regionkey").as("rk")).distinct()),
-          col("n_regionkey") === col("rk"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("n_regionkey").orderBy("n_nationkey")))
-        .orderBy(col("rn")).limit(5)
-        .write.format("noop").mode("overwrite").save()
-      // streaming INFRASTRUCTURE warmup (r14 optimization): the first
-      // measured t-query otherwise absorbs the one-time cost of the
-      // micro-batch engine's class loading, the offset/commit WAL
-      // machinery, and the RocksDB state-store provider's JNI library
-      // load. Two rows through a stateful drain touch all of it without
-      // touching any measured query's data or expressions — the same
-      // session-startup principle as the generic batch shapes above.
-      locally {
-        val wbase = ScratchDirs.dir("warmup_stream")
-        val wfeed = s"$wbase/feed"; val wckpt = s"$wbase/ckpt"
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
-        rm(new java.io.File(wbase))
-        spark.range(2).select(col("id")).write.mode("overwrite").parquet(wfeed)
-        Confs.withSessionConf(spark,
-          "spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-          Confs.withShufflePartitions(spark, 2) {
-            val q = spark.readStream
-              .schema(org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("id",
-                  org.apache.spark.sql.types.LongType))))
-              .parquet(wfeed)
-              .groupBy(col("id")).agg(count(lit(1)))
-              .writeStream.format("memory").queryName("warmup_stream")
-              .option("checkpointLocation", wckpt)
-              .outputMode("complete")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-        }
-        spark.sql("DROP TABLE IF EXISTS warmup_stream")
-      }
-      // force CollationAwareUTF8String.<clinit>: Spark 4 builds its ICU
-      // case-mapping tables lazily on the first NON-ASCII case op,
-      // a 20-30 s one-time cost that otherwise lands on whichever
-      // measured query's data first trips it (jstack: one RUNNABLE
-      // thread in com.ibm.icu CaseMapImpl.toTitle for the whole stall,
-      // under CollationAwareUTF8String.<clinit>)
-      spark.range(1).select(
-          lower(lit("Étude")), upper(lit("ß")), initcap(lit("élan")))
-        .write.format("noop").mode("overwrite").save()
-    }
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.build()
+    GraftSession.warmUp(spark, sfDir)
     // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the run to named
     // queries; SPARK_GRAFT_REPEAT=n times each query n times; the
     // reported value is the min over non-errored samples (first-run
     // codegen compile cost falls out of the min; the repeat tooling
     // also mins over the full stderr vectors)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val repeat = math.max(1,
-      sys.env.get("SPARK_GRAFT_REPEAT").flatMap(_.toIntOption).getOrElse(1))
+    val repeat = GraftSession.repeat
     // a query that throws is LOGGED and COUNTED — the stdout JSON carries
     // "errors":N so a broken round can't masquerade as a fast one (a
     // swallowed crash times at near-zero and the total still parses)
@@ -219,8 +134,7 @@ object Bench {
     def steadyOf(name: String): Double =
       steadyMap.getOrElse(name,
         BenchRetry.familySteady(name, steadyMap).getOrElse(Double.MaxValue))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val selected = GraftSession.selected
     val byNameFn = selected.toMap
     val retryEnabled = repeat == 1 && steadyMap.nonEmpty &&
       !sys.env.contains("SPARK_GRAFT_NO_RETRY")
@@ -249,13 +163,7 @@ object Bench {
       val p1 = HostStat.procCpuSec()
       val (r1, w1) = ShuffleTelemetry.snapshot(spark)
       shuffleBytes(name) = (r1 - r0, w1 - w0) // last sample wins (bytes are plan-deterministic)
-      // drop per-query persisted frames (Verify does the same): cached
-      // blocks accumulating across 182 queries age the session and skew
-      // the later queries' times
-      spark.catalog.clearCache()
-      // RDD-level blocks (localCheckpoint) survive catalog.clearCache —
-      // drop them explicitly
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.release(spark)
       val s = Sample(dt, HostStat.stormFrac(c0, c1),
         f1.minor - f0.minor, f1.major - f0.major,
         if (dt > 0) (p1 - p0) / dt else 0.0, errored)

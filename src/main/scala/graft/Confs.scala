@@ -23,8 +23,8 @@ object Confs {
   def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
     withSessionConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
 
-  /** Engine tuning shared by the driver-facing sessions (Bench / Verify
-    * / Profile) — r14 optimization round, guide §2.2 + §6:
+  /** Engine tuning every session gets through [[GraftSession.build]]
+    * — r14 optimization round, guide §2.2 + §6:
     *
     *  - SIZE-BASED AQE partition coalescing. With the default
     *    `parallelismFirst=true` AQE refuses to coalesce a post-shuffle

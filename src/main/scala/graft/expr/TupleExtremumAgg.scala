@@ -87,7 +87,8 @@ object tupleagg {
   /** `max_tuple(a, b, ...)` ≡ `max(struct(a, b, ...))`, planned as a
     * HashAggregate (primitive fields only — a string/array field silently
     * de-optimizes the buffer back to SortAggregate territory; keep those
-    * on `max(struct(...))`). Field names follow the columns/aliases. */
+    * on `max(struct(...))`). Field names follow the columns/aliases; an
+    * unaliased computed field is rejected, since it has no name to carry. */
   def max_tuple(fields: Column*): Column = make(fields, isMax = true)
 
   /** `min_tuple(a, b, ...)` ≡ `min(struct(a, b, ...))` — see [[max_tuple]]. */
@@ -98,7 +99,9 @@ object tupleagg {
     // Bridge.expression returns a lazy ColumnNodeExpression wrapper, so
     // the catalyst NamedExpression shape is not visible pre-analysis
     val names = fields.zipWithIndex.map { case (c, i) =>
-      Bridge.columnName(c).getOrElse(s"col${i + 1}")
+      Bridge.columnName(c).getOrElse(throw new IllegalArgumentException(
+        s"${if (isMax) "max_tuple" else "min_tuple"}: argument ${i + 1} ($c) " +
+          "has no field name; alias it, e.g. (expr).as(\"name\")"))
     }
     Bridge.column(TupleExtremum(fields.map(Bridge.expression), names, isMax)
       .toAggregateExpression())

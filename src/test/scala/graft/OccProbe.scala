@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: band/chunk bucket occupancy of the LSH fences at a given
@@ -8,11 +7,8 @@ import org.apache.spark.sql.functions._
   * Run: sbt "Test/runMain graft.OccProbe /root/testdata/sf0.1" */
 object OccProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .appName("occ-probe").getOrCreate()
+    val dir = args.headOption.getOrElse(GraftSession.sfDir)
+    val spark = GraftSession.build()
     import graft.queries.DedupQueries
     val banded = DedupQueries.bandedDocs(DedupQueries.shingleTable(spark, dir))
     println("top band buckets:")
@@ -33,11 +29,8 @@ object OccProbe {
   * Run: sbt "Test/runMain graft.BitBalanceProbe /root/testdata/sf0.1" */
 object BitBalanceProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .appName("bit-balance-probe").getOrCreate()
+    val dir = args.headOption.getOrElse(GraftSession.sfDir)
+    val spark = GraftSession.build()
     val s = Tables.documents(spark, dir)
       .select(graft.expr.hashfunctions.simhash64(split(col("text"), " ")).as("sh"))
     val aggs = (0 until 60).map(b =>

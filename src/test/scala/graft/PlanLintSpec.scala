@@ -93,8 +93,8 @@ class PlanLintSpec extends SparkSpecBase {
         case _ => false
       }))
       // per-query persisted frames (shingle caches etc.) would otherwise
-      // accumulate across the 131-query sweep — same hygiene as Verify
-      spark.catalog.clearCache()
+      // accumulate across the whole-registry sweep
+      GraftSession.release(spark)
       if (hasUdf) Some(name) else None
     }
     assert(offenders.isEmpty,
@@ -115,8 +115,7 @@ class PlanLintSpec extends SparkSpecBase {
           case _: org.apache.spark.sql.execution.joins.CartesianProductExec => true
           case _ => false
         }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        GraftSession.release(spark)
         if (hasCartesian) Some(name) else None
       }
     }
@@ -135,8 +134,7 @@ class PlanLintSpec extends SparkSpecBase {
     // the corpus to every executor at scale, so it fails here.
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val bad = PlanLintSpec.hasFactBroadcast(fn(spark, sfDir))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.release(spark)
       if (bad) Some(name) else None
     }
     assert(offenders.isEmpty,
@@ -170,8 +168,7 @@ class PlanLintSpec extends SparkSpecBase {
     // pass via the bareFact reducer rule.
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val bad = PlanLintSpec.hasGlobalWindowOverFact(fn(spark, sfDir))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.release(spark)
       if (bad) Some(name) else None
     }
     assert(offenders.isEmpty,
@@ -208,8 +205,7 @@ class PlanLintSpec extends SparkSpecBase {
     try {
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         val bad = PlanLintSpec.hasUnprunedPartitionedScan(fn(spark, sfDir))
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        GraftSession.release(spark)
         if (bad) Some(name) else None
       }
       assert(offenders.isEmpty,
@@ -250,7 +246,7 @@ class PlanLintSpec extends SparkSpecBase {
                   f.dataType.isInstanceOf[MapType] ||
                   f.dataType.isInstanceOf[StructType] => f.name
       }
-      spark.catalog.clearCache()
+      GraftSession.release(spark)
       if (bad.nonEmpty) Some(s"$name(${bad.mkString(",")})") else None
     }
     assert(offenders.isEmpty,

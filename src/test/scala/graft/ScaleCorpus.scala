@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Bench-only N× corpus generator for the measured scale curves
@@ -32,15 +31,12 @@ import org.apache.spark.sql.functions._
   */
 object ScaleCorpus {
   def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val src = args.headOption.getOrElse(GraftSession.sfDir)
     val reps = args.lift(1).map(_.toInt).getOrElse(10)
     val out = args.lift(2).getOrElse(s"${ScratchDirs.root}/scale${reps}x")
     val scaled = args.lift(3).map(_.split(",").toSet)
       .getOrElse(Set("documents", "embeddings"))
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .appName("scale-corpus").getOrCreate()
+    val spark = GraftSession.build()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     val repDf = spark.range(reps).select(col("id").cast("int").as("rep"))
 

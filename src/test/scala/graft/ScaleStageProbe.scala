@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: per-stage row counts + wall times for the heavy dedup
@@ -10,12 +9,7 @@ import org.apache.spark.sql.functions._
 object ScaleStageProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/dev/shm/graft_scratch/scale1x")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("scale-stage-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     import graft.queries.DedupQueries
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -9,7 +9,8 @@ package graft
   * a >2× move in either direction.
   *
   * The pins were measured with graft.ShuffleProbe under this exact
-  * session config (local[4], 4 shuffle partitions, AQE on) and are
+  * session config (the GraftSession test session: bench confs on
+  * local[4], 4 shuffle partitions, see SparkSpecBase) and are
   * byte-for-byte reproducible: shuffle totals at a fixed SF are a pure
   * function of data + plan (lz4 is deterministic; AQE coalescing moves
   * partition boundaries, not totals). Each query measures COLD (cache
@@ -48,8 +49,7 @@ class ShuffleDriftSpec extends SparkSpecBase {
 
   test("shuffle bytes stay within their pinned sf0.001 band") {
     pins.foreach { case (name, pinR, pinW, band) =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.release(spark)
       val fn = SparkEntry.queries(name)
       val (_, r, w) = ShuffleTelemetry.measure(spark) {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()

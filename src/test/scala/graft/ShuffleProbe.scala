@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: per-query shuffle read/write bytes under the TEST session
-  * config (local[4], 4 shuffle partitions, AQE on) — the numbers behind
+  * config (the GraftSession test session: bench confs on local[4], 4
+  * shuffle partitions, see SparkSpecBase) — the numbers behind
   * ShuffleDriftSpec's pins. Run:
   *   sbt 'Test/runMain graft.ShuffleProbe q1_pricing_summary,dedup_exact' */
 object ShuffleProbe {
@@ -19,8 +18,7 @@ object ShuffleProbe {
         }
         println(s"[shuffle-probe] $n run$i read=$r write=$w")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.release(spark)
     }
     spark.stop()
   }

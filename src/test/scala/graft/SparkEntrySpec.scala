@@ -67,6 +67,22 @@ class SparkEntrySpec extends AnyFunSuite {
         "(SPARK_GRAFT_REPEAT=3 SPARK_GRAFT_BENCH_OUT=... runMain graft.Bench)")
   }
 
+  test("only GraftSession builds a SparkSession") {
+    // every main and spec shares one session config, so a plan a dev
+    // tool prints or a spec pins is the plan the bench runs
+    import scala.jdk.CollectionConverters._
+    val builder = "SparkSession\\.builder".r
+    val hits = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filter { f =>
+      f.getFileName.toString != "GraftSession.scala" &&
+        builder.findFirstIn(java.nio.file.Files.readString(f)).isDefined
+    }
+    assert(hits.isEmpty, s"SparkSession built outside GraftSession in: ${hits.mkString(", ")}")
+  }
+
   test("oracle coverage: EVERY registered query has a DuckDB oracle") {
     // round 3 closed the last rows-only gaps: the former hash-seeded
     // five (minhash-LSH, simhash, sign-bucket LSH, IVF, winnowing) now

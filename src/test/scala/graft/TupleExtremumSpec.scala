@@ -41,6 +41,13 @@ class TupleExtremumSpec extends SparkSpecBase {
     assert(viaTuple.collect().toSeq === viaStruct.collect().toSeq)
   }
 
+  test("an unaliased computed field fails, naming its position and column") {
+    val computed = $"pos" + 1
+    val e = intercept[IllegalArgumentException](min_tuple($"doc_id", computed))
+    assert(e.getMessage.contains(s"argument 2 ($computed)") && e.getMessage.contains("alias"),
+      e.getMessage)
+  }
+
   test("NaN ranks largest and equal to itself — Spark struct-order parity") {
     val df = Seq(("g", Double.NaN, 1L), ("g", 100.0, 2L), ("g", Double.NaN, 0L))
       .toDF("g", "v", "id")
