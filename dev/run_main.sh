@@ -5,10 +5,10 @@
 # elsewhere is NOT safe for timing; use sequentially for measurements).
 #
 #   dev/run_main.sh graft.Bench [args...]
-#   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_REPEAT=3 dev/run_main.sh graft.Bench
+#   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_BENCH_OUT=out.json dev/run_main.sh graft.Bench
 #   SPARK_GRAFT_ONLY=q1,q2 dev/run_main.sh graft.Explain census
 #   SPARK_GRAFT_ONLY=q1,q2 dev/run_main.sh graft.Explain plan [outDir suffix]
-#   SPARK_GRAFT_ONLY=q1,q2 dev/run_main.sh graft.Explain jobs
+#   SPARK_GRAFT_ONLY=q1,q2 SPARK_GRAFT_REPEAT=3 dev/run_main.sh graft.Explain jobs
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*"

@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (default: every available processor).
   *  - `SPARK_GRAFT_SF_DIR`: the data dir mains read (default sf0.1).
   *  - `SPARK_GRAFT_ONLY=q1,q2`: restrict a run to the named queries.
-  *  - `SPARK_GRAFT_REPEAT=n`: run each query n times (Bench, Explain jobs).
+  *  - `SPARK_GRAFT_REPEAT=n`: run each query n times (`Explain jobs`
+  *    only; Bench samples on its own fixed protocol).
   */
 object GraftSession {
   type Query = (SparkSession, String) => DataFrame

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * unchanged plan shape — a wider key, a lost early projection, a
   * fatter aggregation buffer. This listener accumulates task-level
   * shuffle read/write bytes; [[Bench]] snapshots it around every query
-  * (into the stderr detail + the committed steady artifact), and
+  * (into the stderr detail and the `SPARK_GRAFT_BENCH_OUT` artifact), and
   * ShuffleDriftSpec pins a representative query set against committed
   * sf0.001 byte counts with a 2× band.
   *

@@ -84,14 +84,17 @@ object Similarity {
       assigned = df.withColumn("cluster",
         nearestCluster(roundedCentroids(assigned, vecCol), col(vecCol)))
     }
-    // materialize the k-row centroid table (the ann_pq codebook treatment,
-    // r15): every consumer of `cents` — the nprobe probe pick, the
+    // collect the k-row centroid table into a local relation (k × dim
+    // doubles, the same model-parameter transfer nearestCluster makes):
+    // every consumer of `cents` — the nprobe probe pick, the
     // recall/drift contracts' joins, the partitioned write's pruning
     // collect — otherwise re-derives the full centroid aggregation
     // lineage (corpus scan + posexplode + 2 exchanges) PER REFERENCE in
-    // its plan. localCheckpoint is inside the timed query; the build
-    // still runs from the parquet inputs on every invocation.
-    (assigned, roundedCentroids(assigned, vecCol).localCheckpoint())
+    // its plan. A local relation holds no cached blocks, so the plan
+    // stays executable after GraftSession.release drops them.
+    val cents = roundedCentroids(assigned, vecCol)
+    (assigned, df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(cents.collect(): _*), cents.schema))
   }
 
   /** Literal-argmax nearest-centroid assignment: collect the (tiny)

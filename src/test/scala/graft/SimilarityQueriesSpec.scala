@@ -93,6 +93,14 @@ class SimilarityQueriesSpec extends SparkSpecBase {
     }
   }
 
+  test("IVF search stays executable after the session releases cached blocks") {
+    // the centroid table must not live in blocks that release() drops
+    // and nothing can recompute (a localCheckpoint did)
+    val df = SimilarityQueries.queries("ann_ivf_topk")(spark, sfDir)
+    GraftSession.release(spark)
+    assert(df.count() > 0)
+  }
+
   test("LSH near-dup achieves >=80% recall vs exact all-pairs") {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
