@@ -842,7 +842,7 @@ object CurationQueries {
     // keep-best picks from the session-memoized ARTIFACT (r15): the
     // drop list has two release consumers (t19's stream finalize and
     // the batch shard capstone), and each used to re-run the full
-    // keep-best pipeline — label-propagation loop + corpus quality
+    // keep-best pipeline — component labelling + corpus quality
     // scan — inside its own invocation. The registered dedup_keep_best
     // stays on the live pipeline; this is the same two-consumer memo
     // rule as exactPairs itself.

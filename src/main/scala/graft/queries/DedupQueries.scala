@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables
 import graft.ops.Dedup._
 import graft.expr.hashfunctions.simhash64
@@ -611,91 +612,53 @@ object DedupQueries {
     * step a real training-data dedup pipeline runs AFTER pair
     * generation — transitively close the pairs so each near-dup
     * CLUSTER keeps one canonical doc (pairs alone would keep both ends
-    * of an a–b–c chain). Iterative min-label propagation: each round,
-    * every node takes the min component id among itself and its
-    * neighbors; converges in O(component diameter) rounds — near-dup
-    * chains are short, so a handful of distributed joins, each
-    * shuffling only the (tiny) edge set. The driver-side loop tests a
-    * zero-count convergence predicate, not data. Oracle: DuckDB
-    * recursive-CTE transitive closure over the identical pair query. */
-  def dedupComponents(spark: SparkSession, dir: String): DataFrame = {
-    // pair generation (the PPJoin pipeline) runs under the session's
-    // normal AQE/partition tuning — only the label loop below gets the
-    // narrow no-AQE treatment, so materialize the edges first
-    val edges = exactPairs(spark, dir)
-      .select(col("id_a"), col("id_b")).persist()
-    edges.count()
-    // the pair graph is orders of magnitude smaller than the corpus
-    // (near-dup edges only), but the loop below schedules ~3 shuffle
-    // stages per iteration — at the session's fact-tuned partition
-    // count that is pure task-scheduling overhead. Run the loop's
-    // shuffles narrow; restore afterwards. (At 100 TB the edge set is
-    // still small relative to the corpus — sizing the loop's shuffle
-    // width to the EDGE volume, not the fact volume, is the same
-    // decision there.)
-    // (measured: disabling AQE for the loop doubles its time — the
-    // coalesced-partition replanning outweighs its per-stage barriers
-    // even on tiny frames, so only the partition count is tuned)
-    graft.Confs.withShufflePartitions(spark, 8) { dedupComponentsLoop(edges) }
-  }
-
-  private def dedupComponentsLoop(edges: DataFrame): DataFrame = {
-    val labels = componentLabels(edges)
-    labels.groupBy(col("comp").as("comp_id"))
+    * of an a–b–c chain). Labels come from [[componentLabels]]. Oracle:
+    * DuckDB recursive-CTE transitive closure over the identical pair
+    * query. */
+  def dedupComponents(spark: SparkSession, dir: String): DataFrame =
+    componentLabels(exactPairs(spark, dir))
+      .groupBy(col("comp").as("comp_id"))
       .agg(count(lit(1)).as("n_docs"), max(col("node")).as("max_doc"))
-  }
 
-  /** Min-label propagation to convergence; returns (node, comp) labels
-    * for every node of the symmetrized edge graph. See
-    * [[dedupComponents]] for the loop's scale rationale. */
-  private def componentLabels(edges: DataFrame): DataFrame = {
-    val sym = edges.union(edges.select(col("id_b"), col("id_a")))
-      .toDF("src", "dst").persist()
-    sym.count()
-    // sym carries everything the loop needs — drop the edge cache now so
-    // repeated invocations (the bench) don't accumulate dead blocks
-    edges.unpersist()
-    // localCheckpoint, NOT persist: each iteration references `labels`
-    // TWICE (neighbor join + right-join back), so the un-truncated
-    // analyzed plan doubles per round and the FINAL consumer's plan hit
-    // ~32k nodes after convergence — at which point the driver spent
-    // ~60 s (!) canonicalizing that tree for cache lookup before
-    // executing a join over a few thousand cached rows. persist() only
-    // caches EXECUTION; localCheckpoint truncates the LOGICAL lineage
-    // to a LogicalRDD leaf (same cure as pagerankFrom), so every
-    // downstream plan — including dedupCanonical's degree join — stays
-    // node-count-bounded. Label frames are one row per pair-graph node,
-    // so the executor-memory cost is trivial.
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("comp", col("node")).localCheckpoint()
-    var converged = false
-    var iters = 0
-    while (!converged && iters < 20) {
-      // (measured: a pointer-jumping variant — labels(labels(x)) per
-      // round — LOST here: the near-dup graph's diameter is tiny (the
-      // loop converges in 2-4 rounds at every SF, see the [cc] stderr
-      // line), so the extra self-join per round cost more than the
-      // rounds it could save. Revisit only if [cc] ever shows the
-      // 20-round cap being approached.)
-      val viaNeighbors = sym.join(labels, col("dst") === col("node"))
-        .select(col("src").as("node"), col("comp"))
-      // least() skips the NULL minNbr of isolated nodes; the eager
-      // localCheckpoint materializes the round, and the count() after
-      // it is the convergence test over the checkpointed blocks.
-      val next = viaNeighbors
-        .groupBy(col("node")).agg(min(col("comp")).as("minNbr"))
-        .join(labels.select(col("node"), col("comp").as("prev")), Seq("node"), "right")
-        .select(col("node"), least(col("minNbr"), col("prev")).as("comp"), col("prev"))
-        .localCheckpoint()
-      val t0 = System.nanoTime()
-      val changed = next.filter(col("comp") =!= col("prev")).count()
-      converged = changed == 0
-      System.err.println(f"[cc] iter=$iters changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      labels = next.select(col("node"), col("comp"))
-      iters += 1
+  /** Most near-dup edges [[componentLabels]] takes to the driver. The
+    * pair graph has 25 edges at sf0.01, 256 at sf0.1 and 2,560 at the
+    * 10x ScaleCorpus. At the bound the driver holds 1M collected edge
+    * rows and a union-find over at most 2M nodes (one long and one int
+    * each). A larger graph is an error that names this constant, not a
+    * slower path. */
+  val MaxComponentEdges = 1000000
+
+  /** (node, comp) for every node of the pair graph `edges` (id_a, id_b):
+    * comp is the smallest doc_id of the node's connected component,
+    * the oracle's min-label closure. One union-find on the driver over
+    * the collected edges; the collect stops at `maxEdges` + 1 rows, so
+    * an over-bound graph fails before it is held. The labels come back
+    * as a local relation, so consumers hold no cached blocks and no
+    * lineage. */
+  private[graft] def componentLabels(edges: DataFrame,
+                                     maxEdges: Int = MaxComponentEdges): DataFrame = {
+    val got = edges.select(col("id_a"), col("id_b")).limit(maxEdges + 1).collect()
+    if (got.length > maxEdges)
+      throw new IllegalStateException(s"near-dup pair graph has more than " +
+        s"$maxEdges edges (MaxComponentEdges); component labels are built on the driver")
+    val (a, b) = (got.map(_.getLong(0)), got.map(_.getLong(1)))
+    // union-find over sorted-id indices: index order is id order, so
+    // linking the larger root under the smaller roots each set at its min
+    val ids = (a ++ b).sorted.distinct
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
     }
-    sym.unpersist()
-    labels // checkpointed blocks are reclaimed by the harness's per-query RDD sweep
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    a.indices.foreach { k =>
+      val (ra, rb) = (find(at(a(k))), find(at(b(k))))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val schema = StructType(Seq(StructField("node", LongType), StructField("comp", LongType)))
+    edges.sparkSession.createDataFrame(
+      java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), ids(find(i)))): _*), schema)
   }
 
   val PagerankIters = 10
@@ -731,8 +694,7 @@ object DedupQueries {
     * materialized inside that setting via a final localCheckpoint: the
     * edge frame is the near-dup pair set — orders of magnitude smaller
     * than the corpus — so at the session's fact-tuned width each of the
-    * 10 iterations paid ~3 stages of near-empty-task scheduling (the
-    * same measurement that narrowed [[dedupComponents]]'s loop; this
+    * 10 iterations paid ~3 stages of near-empty-task scheduling (this
     * loop was the suite's #1 standalone cost before). Sizing iterative
     * graph shuffles to the EDGE volume, not the corpus volume, is the
     * identical decision at 100 TB. */
@@ -928,9 +890,7 @@ object DedupQueries {
     * O(|E|) with |E| the near-dup pairs only — orders of magnitude
     * under the corpus — and every join is an equi-join on node id. */
   def graphKcore(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = exactPairs(spark, dir)
-      .select(col("id_a"), col("id_b")).persist()
-    pairs.count()
+    val pairs = exactPairs(spark, dir).select(col("id_a"), col("id_b"))
     graft.Confs.withShufflePartitions(spark, 8) {
       var ed = pairs.union(pairs.select(col("id_b"), col("id_a")))
         .toDF("s", "d").localCheckpoint()
@@ -941,10 +901,8 @@ object DedupQueries {
           .join(keep.select(col("s").as("d")), "d")
           .select(col("s"), col("d")).localCheckpoint()
       }
-      val out = ed.groupBy(col("s").as("doc_id"))
+      ed.groupBy(col("s").as("doc_id"))
         .agg(count(lit(1)).as("deg_core")).localCheckpoint()
-      pairs.unpersist()
-      out
     }
   }
 
@@ -956,21 +914,14 @@ object DedupQueries {
     * set — iterating PageRank inside this composition fused two
     * iterative lineages into one AQE plan and ran 3-7x slower with
     * wild variance; the standalone [[graphPagerank]] operator covers
-    * iterative centrality. One shared pair-gen pass feeds both the
-    * label loop and the degree count. */
+    * iterative centrality. The memoized pair artifact feeds both the
+    * component labels and the degree count. */
   def dedupCanonical(spark: SparkSession, dir: String): DataFrame = {
     val pairs = exactPairs(spark, dir)
-      .select(col("id_a"), col("id_b")).persist()
-    pairs.count()
-    // detached projection: the loop unpersists ITS edge frame; the
-    // shared pair cache must survive for the degree pass
-    val labels = graft.Confs.withShufflePartitions(spark, 8) {
-      componentLabels(pairs.select(col("id_a"), col("id_b")))
-    }
-    val deg = pairs.select(col("id_a").as("s"), col("id_b").as("d"))
-      .union(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
+    val deg = pairs.select(col("id_a").as("s"))
+      .union(pairs.select(col("id_b").as("s")))
       .groupBy(col("s").as("doc_id")).agg(count(lit(1)).as("degree"))
-    labels.join(deg, col("node") === col("doc_id"))
+    componentLabels(pairs).join(deg, col("node") === col("doc_id"))
       .groupBy(col("comp").as("comp_id"))
       .agg(count(lit(1)).as("n_docs"),
         // max_tuple ≡ max(struct(degree, nd)) but hash-aggregable — the
@@ -985,8 +936,8 @@ object DedupQueries {
     * picks each cluster's most-CONNECTED member; production curation
     * pipelines usually keep the highest-QUALITY member instead (the
     * richest variant survives, boilerplate-padded or truncated copies
-    * drop). Same cluster machinery — one shared pair-gen pass feeds
-    * the label-propagation loop — but the per-member score is a
+    * drop). Same cluster machinery ([[componentLabels]] over the
+    * memoized pair artifact), but the per-member score is a
     * document signal (distinct-word count, an exact integer both
     * engines compute identically) joined onto the labels, and the
     * arg-max is one `max(struct)` partial aggregate per cluster, no
@@ -994,17 +945,11 @@ object DedupQueries {
     * shuffle of the (tiny) cluster-member set against the corpus
     * scores; ties break to the lowest doc_id, so the pick is total. */
   def dedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = exactPairs(spark, dir)
-      .select(col("id_a"), col("id_b")).persist()
-    pairs.count()
-    val labels = graft.Confs.withShufflePartitions(spark, 8) {
-      componentLabels(pairs.select(col("id_a"), col("id_b")))
-    }
     val quality = Tables.documents(spark, dir)
       .select(col("doc_id"),
         expr("size(array_distinct(filter(split(text, ' '), w -> length(w) > 0)))")
           .cast("long").as("quality"))
-    labels.join(quality, col("node") === col("doc_id"))
+    componentLabels(exactPairs(spark, dir)).join(quality, col("node") === col("doc_id"))
       .groupBy(col("comp").as("comp_id"))
       .agg(count(lit(1)).as("n_docs"),
         // hash-aggregable argmax — see dedupCanonical (r15)
@@ -1024,9 +969,7 @@ object DedupQueries {
     * equi-joins close the wedges; all counts are exact integers (no FP
     * anywhere). */
   def graphTriangles(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = exactPairs(spark, dir)
-      .select(col("id_a"), col("id_b")).persist()
-    pairs.count()
+    val pairs = exactPairs(spark, dir).select(col("id_a"), col("id_b"))
     val sym = pairs.union(pairs.select(col("id_b"), col("id_a")))
       .toDF("src", "dst")
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -1041,7 +984,7 @@ object DedupQueries {
     val tri = wedges.join(ed.select(col("u"), col("v").as("w")), Seq("u", "w"))
     tri.agg(count(lit(1)).as("n_triangles"))
       .crossJoin(pairs.agg(count(lit(1)).as("n_edges")))
-    // `pairs`/`ed` stay persisted until the consumer drains the result
+    // `ed` stays persisted until the consumer drains the result
   }
 
   /** Gram width of [[dedupExactSubstring]] — the minimum repeat length

@@ -103,8 +103,9 @@ object StreamOps {
     * `MapState` of event types seen (a distributed distinct-set per
     * key), a `ValueState` running max — against the RocksDB state store
     * the API requires, which is also the store a 100 TB deployment
-    * wants: state lives off-heap with changelog checkpointing, so
-    * per-executor state is bounded by disk, not heap. Every emitted
+    * wants: state lives off-heap, so per-executor state is bounded by
+    * disk, not heap. Each commit uploads a RocksDB snapshot (changelog
+    * checkpointing is left at the provider's default, off). Every emitted
     * field is MONOTONE across microbatches, so the drained update-mode
     * rows reduce to the final state with one max(struct) downstream —
     * batching-independent, hence exactly replayable by the SQL oracle. */

@@ -229,6 +229,24 @@ class DedupQueriesSpec extends SparkSpecBase {
     }
   }
 
+  test("component labels: a 25-hop chain and a disjoint pair each close to their min id") {
+    import spark.implicits._
+    // the chain is longer than any small fixed round count, so every
+    // node must reach label 1 however far it sits from node 1
+    val edges = ((1L to 25L).map(i => (i, i + 1)) :+ ((100L, 101L))).toDF("id_a", "id_b")
+    val labels = DedupQueries.componentLabels(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == ((1L to 26L).map(_ -> 1L) ++ Seq(100L -> 100L, 101L -> 100L)).toMap)
+  }
+
+  test("component labels: more edges than the bound fail, naming MaxComponentEdges") {
+    import spark.implicits._
+    val edges = (1L to 10L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val err = intercept[IllegalStateException](DedupQueries.componentLabels(edges, maxEdges = 5))
+    assert(err.getMessage.contains("MaxComponentEdges"), err.getMessage)
+    assert(DedupQueries.componentLabels(edges, maxEdges = 10).count() == 11)
+  }
+
   test("keep-best pick: same clusters as canonical, keeper has max quality") {
     val best = DedupQueries.dedupKeepBest(spark, sfDir).collect()
     val canon = DedupQueries.dedupCanonical(spark, sfDir).collect()
