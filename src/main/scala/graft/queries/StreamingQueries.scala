@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.Tables
 import graft.streaming.StreamOps
 
@@ -23,11 +23,6 @@ import graft.streaming.StreamOps
   */
 object StreamingQueries {
 
-  /** Row count of the staged events feed — the drain-completeness
-    * expectation for every events-fed streaming query. */
-  private def eventRows(spark: SparkSession, dir: String): Long =
-    spark.read.parquet(s"$dir/events.parquet").count()
-
   /** Recursive delete for per-run scratch roots (feeds, checkpoints,
     * state/index targets). */
   private def rmrf(p: java.io.File): Unit = {
@@ -35,18 +30,6 @@ object StreamingQueries {
     p.delete(); ()
   }
 
-  /** Start an AvailableNow drain and VERIFY it consumed the whole staged
-    * feed, retrying with a fresh query if it came up short. Observed
-    * about once in ten full-sweep drains: a query completed
-    * "successfully" having ingested exactly 2 of the 4 staged files —
-    * the source's start-time snapshot missed files — which downstream is
-    * indistinguishable from a correctness bug. The source-reported
-    * `numInputRows` total is the input-completeness accounting a
-    * production pipeline alarms on; here a short drain restarts from
-    * scratch (memory-sink queries are stateless across attempts — a
-    * fresh start re-registers the sink table empty and re-snapshots the
-    * feed). `expectedFactor` covers plans that scan the feed once per
-    * SIDE (the stream-stream self-join counts its input per branch). */
   /** Stage a parquet table into a stream-feed dir, handling BOTH
     * shipped layouts: the driver's single-file testdata tables AND a
     * Spark-written DIRECTORY of part files (ScaleCorpus's 10× corpora).
@@ -61,9 +44,9 @@ object StreamingQueries {
     // clear THIS table's previously staged files first (r13 ADVICE): a
     // corpus rebuilt at the same path with fewer part files (or
     // switched between single-file and directory layout) would
-    // otherwise leave stale NNNN_-prefixed copies in the feed,
-    // inflating drained rows and tripping the drain guard. Other
-    // tables' staged files in a shared feed dir are left alone.
+    // otherwise leave stale NNNN_-prefixed copies in the feed, which
+    // the drain would ingest as extra rows. Other tables' staged files
+    // in a shared feed dir are left alone.
     Option(feed.toFile.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName == table || f.getName.matches(s"\\d{4}_${java.util.regex.Pattern.quote(table)}"))
       .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
@@ -81,27 +64,6 @@ object StreamingQueries {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def drainVerified(expectedRows: Long, what: String, expectedFactor: Int = 1)
-                           (start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val want = expectedRows * expectedFactor
-    var attempt = 0
-    var consumed = -1L
-    while (consumed != want && attempt < 3) {
-      val q = start
-      q.awaitTermination()
-      consumed = q.recentProgress.map(_.numInputRows).sum
-      attempt += 1
-      if (consumed > want) attempt = 3 // plan-determined (scan-count change), retry can't converge
-      else if (consumed != want)
-        System.err.println(s"[graft] $what drained $consumed of $want staged rows " +
-          s"(attempt $attempt) — retrying from a fresh snapshot")
-    }
-    require(consumed == want,
-      s"$what drained $consumed of $want staged rows after $attempt attempts" +
-      (if (consumed > want) " — an overcount means the plan's source-scan count " +
-        "changed; update this call's expectedFactor" else ""))
-  }
-
   /** The staged feed files a drain is expected to consume (FileStream
     * sources skip hidden/metadata names, so the expectation does too). */
   private def stagedFileNames(feed: String): Set[String] =
@@ -112,15 +74,14 @@ object StreamingQueries {
 
   /** Feed files recorded in the checkpoint's file-source log for
     * batches with a COMMIT entry — the committed-offset view of what a
-    * drain actually consumed. This is the completeness signal for
-    * durable-checkpoint drains: unlike the progress metric's
-    * numInputRows it is plan-independent (a kernel that scans the
-    * arriving batch twice, or an exchange-reuse re-plan, never changes
-    * it) and unbounded (recentProgress retains only the last
-    * numRecentProgressUpdates entries). Reads the two driver-local
-    * metadata logs directly: `sources/0/<batchId>` lists the files a
-    * batch ingests (JSON entries, `.compact` files absorb earlier
-    * ones), `commits/<batchId>` marks the batch fully processed. */
+    * drain actually consumed. Unlike the progress metric's
+    * numInputRows it is plan-independent (a self-join that scans the
+    * feed once per side, a kernel that scans the arriving batch twice,
+    * or an exchange-reuse re-plan never changes it) and needs no Spark
+    * job. Reads the two driver-local metadata logs directly:
+    * `sources/0/<batchId>` lists the files a batch ingests (JSON
+    * entries, `.compact` files absorb earlier ones), `commits/<batchId>`
+    * marks the batch fully processed. */
   private def committedFeedFiles(ckpt: String): Set[String] = {
     def logFiles(d: String): Array[java.io.File] =
       Option(new java.io.File(s"$ckpt/$d").listFiles()).getOrElse(Array.empty[java.io.File])
@@ -145,30 +106,68 @@ object StreamingQueries {
       }.toSet
   }
 
-  /** Drain-completeness loop for queries on a DURABLE checkpoint: a
-    * retry CONTINUES from the committed offsets (restart semantics),
-    * picking up exactly the staged files the previous attempt left
-    * uncommitted. Completeness is judged from the checkpoint itself
-    * ([[committedFeedFiles]]), so there is no per-plan scan-count
-    * factor to maintain and no overcount mode at all. */
-  private def drainCommitted(feed: String, ckpt: String, what: String)
-                            (start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val staged = stagedFileNames(feed)
-    require(staged.nonEmpty, s"$what has no staged feed files under $feed")
-    var attempt = 0
-    var missing = staged
-    while (missing.nonEmpty && attempt < 3) {
-      val q = start
-      q.awaitTermination()
-      missing = staged -- committedFeedFiles(ckpt)
-      attempt += 1
-      if (missing.nonEmpty)
-        System.err.println(s"[graft] $what left ${missing.size} of ${staged.size} staged " +
-          s"files uncommitted (attempt $attempt) — resuming from the checkpoint")
+  /** Attempts a [[drain]] makes before it fails. */
+  private val DrainAttempts = 3
+
+  /** Run an AvailableNow drain and check that it consumed the whole
+    * staged feed: every file staged under `feed` must appear in the
+    * committed source log of `ckpt` ([[committedFeedFiles]]). Observed
+    * about once in ten full-sweep drains: a query completed
+    * "successfully" having ingested 2 of its 4 staged files — the
+    * source's start-time snapshot missed files — which downstream is
+    * indistinguishable from a correctness bug. The cause is not known,
+    * so a short drain is retried, up to [[DrainAttempts]] times. Every
+    * attempt starts from an EMPTY checkpoint, and `start` resets its
+    * own sink (a memory sink re-registers its table empty): the memory
+    * sink refuses checkpoint recovery in append and update mode, so a
+    * fresh restart is the one retry that is valid for every sink. The
+    * staged set is read after each attempt, so an attempt may stage its
+    * own feed (t14 ships it in two halves). */
+  private[graft] def drain(feed: String, ckpt: String, what: String)
+                          (start: => StreamingQuery): Unit = {
+    @annotation.tailrec
+    def attempt(n: Int): Unit = {
+      rmrf(new java.io.File(ckpt))
+      start.awaitTermination()
+      val staged = stagedFileNames(feed)
+      require(staged.nonEmpty, s"$what has no staged feed files under $feed")
+      val missing = (staged -- committedFeedFiles(ckpt)).toSeq.sorted
+      if (missing.nonEmpty) {
+        val msg = s"$what left ${missing.size} of ${staged.size} staged files " +
+          s"uncommitted after $n of $DrainAttempts attempts: ${missing.take(5).mkString(", ")}"
+        require(n < DrainAttempts, msg)
+        System.err.println(s"[graft] $msg — retrying from an empty checkpoint")
+        attempt(n + 1)
+      }
     }
-    require(missing.isEmpty,
-      s"$what left ${missing.size} of ${staged.size} staged files uncommitted " +
-      s"after $attempt attempts: ${missing.toSeq.sorted.take(5).mkString(", ")}")
+    attempt(1)
+  }
+
+  /** Shuffle width of the stateful drains. The per-microbatch cost of
+    * a stateful query scales with the state store count = shuffle
+    * partitions at query start (each partition commits its own store
+    * files every batch — a stream-stream join keeps FOUR stores per
+    * partition). The drained backlog is small relative to the
+    * session's 32-partition batch tuning, so stateful drains run at 8
+    * through [[graft.Confs.withShufflePartitions]], which restores the
+    * setting afterwards. At 100 TB the knob goes the other way — state
+    * partitioning is sized at FIRST start and pinned by the checkpoint. */
+  private val StatePartitions = 8
+
+  /** [[drain]] `frame` from `feed` into the memory table of query
+    * `name` over `dir`, on that query's own scratch checkpoint, and
+    * return the table. */
+  private def drainToMemory(spark: SparkSession, dir: String, feed: String, name: String,
+                            mode: String)(frame: DataFrame): DataFrame = {
+    val qname = s"${name}_${java.lang.Integer.toHexString(dir.hashCode)}"
+    val ckpt = graft.ScratchDirs.dir("stream", "checkpoints", qname)
+    graft.Confs.withShufflePartitions(spark, StatePartitions) {
+      drain(feed, ckpt, qname) {
+        frame.writeStream.format("memory").queryName(qname).outputMode(mode)
+          .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      }
+    }
+    spark.table(qname)
   }
 
   /** Idempotent per-batch parquet publish for `foreachBatch` sinks: the
@@ -235,58 +234,29 @@ object StreamingQueries {
   /** Stage `events.parquet` into a drop-folder (the T1 file feed is a
     * DIRECTORY of arriving files — baseline + updatefiles) and open it
     * as a streaming source with the file's raw schema (long nanos OR
-    * µs timestamp — both shipped layouts, see [[Tables.normalizeTs]]).
-    * `decodeTs` normalizes to the µs TimestampType the event-time
-    * operators need. */
-  private def stagedEventFeed(spark: SparkSession, dir: String): DataFrame = {
+    * µs timestamp — both shipped layouts, see [[Tables.normalizeTs]]),
+    * its `ts` normalized to the µs TimestampType the event-time
+    * operators need. Returns the feed dir and the stream. */
+  private def stagedEventFeed(spark: SparkSession, dir: String): (String, DataFrame) = {
     val feed = java.nio.file.Paths.get(
       graft.ScratchDirs.dir("stream", dir.replaceAll("[^a-zA-Z0-9]", "_"), "events_feed"))
     java.nio.file.Files.createDirectories(feed)
     stageTable(dir, "events.parquet", feed)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    StreamOps.fileFeed(spark, feed.toString, raw, maxFilesPerTrigger = 1)
+    val stream = StreamOps.fileFeed(spark, feed.toString, raw, maxFilesPerTrigger = 1)
+    (feed.toString, stream.withColumn("ts", Tables.normalizeTs(stream.schema("ts").dataType)))
   }
 
-  private def decodeTs(stream: DataFrame): DataFrame =
-    stream.withColumn("ts", Tables.normalizeTs(stream.schema("ts").dataType))
-
-  /** The per-microbatch cost of a stateful query scales with the state
-    * store count = shuffle partitions at query start (each partition
-    * commits its own store files every batch — a stream-stream join
-    * keeps FOUR stores per partition). The drained backlog is small
-    * relative to the session's 32-partition batch tuning, so stateful
-    * drains run at 8; the setting is restored afterwards. At 100 TB the
-    * knob goes the other way — state partitioning is sized at FIRST
-    * start and pinned by the checkpoint. */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
-    graft.Confs.withShufflePartitions(spark, n) {
-      // the drain accounting sums q.recentProgress, whose retention is
-      // capped at numRecentProgressUpdates (default 100): a feed that
-      // drains in more micro-batches would silently undercount and
-      // hard-fail the completeness require. Raise the buffer far past
-      // any plausible drain length; restored with the session conf.
-      graft.Confs.withSessionConf(spark,
-        "spark.sql.streaming.numRecentProgressUpdates", "100000")(body)
-    }
-
   def t1StreamTumbling(spark: SparkSession, dir: String): DataFrame = {
-    val stream = decodeTs(stagedEventFeed(spark, dir))
+    val (feed, stream) = stagedEventFeed(spark, dir)
     val agg = stream
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 6).as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
-    val qname = "t1_stream_tumbling_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        agg.writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
+    drainToMemory(spark, dir, feed, "t1_stream_tumbling", "complete")(agg)
   }
 
   /** T2: key-level streaming dedup with watermark-bounded state — the
@@ -300,18 +270,10 @@ object StreamingQueries {
     * per key inside the watermark horizon, evicted as event time
     * advances. */
   def t2StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val stream = decodeTs(stagedEventFeed(spark, dir))
+    val (feed, stream) = stagedEventFeed(spark, dir)
     val deduped = StreamOps.dedupByKeys(stream, Seq("user_id", "event_type"), "ts", "24 hours")
       .select(col("user_id"), col("event_type"))
-    val qname = "t2_stream_dedup_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        deduped.writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
+    drainToMemory(spark, dir, feed, "t2_stream_dedup", "append")(deduped)
   }
 
   /** Custom per-key state (north-star `mapGroupsWithState`): running
@@ -322,20 +284,11 @@ object StreamingQueries {
     * resolution the oracle's `ORDER BY ts DESC` sees, for either
     * shipped parquet layout. */
   def t4StreamStateful(spark: SparkSession, dir: String): DataFrame = {
-    val stream = decodeTs(stagedEventFeed(spark, dir))
-      .withColumn("ts", unix_micros(col("ts")))
-    val agg = StreamOps.statefulUserAgg(spark, stream.toDF())
+    val (feed, stream) = stagedEventFeed(spark, dir)
+    val agg = StreamOps.statefulUserAgg(spark, stream.withColumn("ts", unix_micros(col("ts"))))
       .select(col("user_id"), col("n_events"),
         col("last_event_id"), col("last_type"))
-    val qname = "t4_stream_stateful_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        agg.writeStream.format("memory").queryName(qname)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
+    drainToMemory(spark, dir, feed, "t4_stream_stateful", "update")(agg)
   }
 
   /** Stream-stream interval join (north-star Structured Streaming
@@ -349,7 +302,7 @@ object StreamingQueries {
     * feed once per microbatch and the self-join is two stateful sides.
     */
   def t5StreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val stream = decodeTs(stagedEventFeed(spark, dir))
+    val (feed, stream) = stagedEventFeed(spark, dir)
     val clicks = stream.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
@@ -362,17 +315,7 @@ object StreamingQueries {
         expr("c_user = p_user AND purchase_ts >= click_ts AND " +
              "purchase_ts <= click_ts + interval 30 minutes"))
       .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"))
-    val qname = "t5_stream_stream_join_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      // the self-join scans the one staged feed once PER SIDE, so the
-      // progress metric reports every staged row twice (measured)
-      drainVerified(nStaged, qname, expectedFactor = 2) {
-        joined.writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
+    drainToMemory(spark, dir, feed, "t5_stream_stream_join", "append")(joined)
   }
 
   /** Session windows through the REAL streaming path (net-new): the
@@ -386,28 +329,11 @@ object StreamingQueries {
     * harness data has no exact-30:00 gaps (checked at all three SFs),
     * so the two definitions coincide on every oracle row. */
   def t6StreamSession(spark: SparkSession, dir: String): DataFrame = {
-    val stream = decodeTs(stagedEventFeed(spark, dir))
+    val (feed, stream) = stagedEventFeed(spark, dir)
     val agg = StreamOps.sessionCounts(stream, "30 minutes", "1 hour")
-    val qname = "t6_stream_session_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        agg.writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
+    drainToMemory(spark, dir, feed, "t6_stream_session", "complete")(agg)
   }
 
-  /** t1's APPEND-MODE twin — the continuous 100 TB form: only
-    * watermark-CLOSED windows reach the sink, each exactly once, so
-    * sink volume tracks closed windows (complete mode re-emits the
-    * whole aggregate state every trigger — fine for a bounded drain,
-    * unviable continuously). The trailing no-data microbatch flushes
-    * windows closed by the final watermark; windows still inside the
-    * horizon are held back BY DESIGN, and the oracle applies the same
-    * cutoff: window_end <= max(ts) − 1h, with the watermark's
-    * millisecond floor replicated exactly. */
   /** Stream–STATIC broadcast join (the enrichment-dimension pattern the
     * pack lacked: t5 is stream-stream): every microbatch joins against
     * a small static dimension with NO join state at all — the dim is
@@ -424,7 +350,7 @@ object StreamingQueries {
       ("click", "engagement", 1.0), ("view", "engagement", 0.5),
       ("purchase", "revenue", 5.0), ("signup", "acquisition", 3.0),
       ("error", "ops", 0.0)).toDF("event_type", "category", "weight")
-    val stream = decodeTs(stagedEventFeed(spark, dir))
+    val (feed, stream) = stagedEventFeed(spark, dir)
     val agg = stream.join(broadcast(dim), "event_type")
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("category"))
@@ -432,15 +358,7 @@ object StreamingQueries {
         round(sum(col("value") * col("weight")), 6).as("wsum"))
       .select(col("w.start").as("window_start"), col("category"),
         col("n_events"), col("wsum"))
-    val qname = "t9_stream_static_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        agg.writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
+    drainToMemory(spark, dir, feed, "t9_stream_static", "append")(agg)
   }
 
   /** t10: streaming read through the CUSTOM DSv2 connector
@@ -459,41 +377,43 @@ object StreamingQueries {
       .select(explode(split(col("text"), " ")).as("value"))
       .filter(col("value") =!= "").distinct()
       .repartition(3).write.mode("overwrite").text(out)
-    // count the staged artifact itself (one line per term) — cheaper
-    // than re-running the distinct pipeline, and it IS the feed
-    val nStaged = spark.read.text(out).count()
     val stream = spark.readStream.format("graft.sources.LineListSource")
       .option("path", out).option("maxFilesPerTrigger", "1").load()
     val qname = "t10_custom_stream_" + java.lang.Integer.toHexString(dir.hashCode)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        stream.select(col("value"), col("len"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-    }
+    val q = stream.select(col("value"), col("len"))
+      .writeStream.format("memory").queryName(qname)
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    // the source's offset is a count of consumed files and it pins its
+    // own AvailableNow target, so a complete drain ends exactly at the
+    // staged file count; it has no file log for [[drain]] to check
+    val staged = stagedFileNames(out).size
+    val end = Option(q.lastProgress).flatMap(_.sources.headOption).map(_.endOffset)
+    require(end.contains(staged.toString),
+      s"$qname ended at file offset ${end.getOrElse("none")} of $staged staged files")
     spark.table(qname)
       .groupBy(substring(col("value"), 1, 1).as("letter"))
       .agg(count(lit(1)).as("n_terms"), max(col("len")).cast("long").as("max_len"))
   }
 
+  /** t1's APPEND-MODE twin — the continuous 100 TB form: only
+    * watermark-CLOSED windows reach the sink, each exactly once, so
+    * sink volume tracks closed windows (complete mode re-emits the
+    * whole aggregate state every trigger — fine for a bounded drain,
+    * unviable continuously). The trailing no-data microbatch flushes
+    * windows closed by the final watermark; windows still inside the
+    * horizon are held back BY DESIGN, and the oracle applies the same
+    * cutoff: window_end <= max(ts) − 1h, with the watermark's
+    * millisecond floor replicated exactly. */
   def t1StreamTumblingAppend(spark: SparkSession, dir: String): DataFrame = {
-    val stream = decodeTs(stagedEventFeed(spark, dir))
+    val (feed, stream) = stagedEventFeed(spark, dir)
     val agg = stream
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 6).as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
-    val qname = "t1_stream_tumbling_append_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        agg.writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
+    drainToMemory(spark, dir, feed, "t1_stream_tumbling_append", "append")(agg)
   }
 
   /** t6's APPEND-MODE twin (see [[t1StreamTumblingAppend]]): emits a
@@ -502,17 +422,9 @@ object StreamingQueries {
     * bounded-sink continuous form. Oracle = the islands relation
     * restricted to sessions whose end clears the final watermark. */
   def t6StreamSessionAppend(spark: SparkSession, dir: String): DataFrame = {
-    val stream = decodeTs(stagedEventFeed(spark, dir))
+    val (feed, stream) = stagedEventFeed(spark, dir)
     val agg = StreamOps.sessionCounts(stream, "30 minutes", "1 hour")
-    val qname = "t6_stream_session_append_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        agg.writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
+    drainToMemory(spark, dir, feed, "t6_stream_session_append", "append")(agg)
   }
 
   /** STREAMING MinHash-LSH dedup (net-new): continuous near-dup
@@ -549,17 +461,10 @@ object StreamingQueries {
     // see the retention contract on StreamOps.lshCandidatePairs
     val banded = DedupQueries.streamBandedDocs(stream)
       .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-    val qname = "t7_stream_lsh_dedup_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = raw.count()
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        StreamOps.lshCandidatePairs(spark, banded, failOnHotBucket = true)
-          .toDF("id_a", "id_b")
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    DedupQueries.verifyPairs(spark, dir, spark.table(qname))
+    val pairs = StreamOps.lshCandidatePairs(spark, banded, failOnHotBucket = true)
+      .toDF("id_a", "id_b")
+    DedupQueries.verifyPairs(spark, dir,
+      drainToMemory(spark, dir, feed.toString, "t7_stream_lsh_dedup", "append")(pairs))
   }
 
   /** T3: idempotent re-publish — the busiest day's summary is written
@@ -600,13 +505,11 @@ object StreamingQueries {
     // the read-modify-write merge below would never see an existing row
     // for a key and the cross-batch path would go untested
     ev.repartition(4).write.mode("overwrite").parquet(feed)
+    val ckpt = graft.ScratchDirs.dir("stream", tag, "upsert_checkpoint")
     val stream = StreamOps.fileFeed(spark, feed, ev, maxFilesPerTrigger = 1)
-    val nStaged = eventRows(spark, dir)
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, "t8_stream_merge_upsert") {
-        // reset the merge target per attempt (idempotent re-run AND a
-        // clean slate if a short drain retries with a fresh checkpoint)
-        rmrf(new java.io.File(state))
+    graft.Confs.withShufflePartitions(spark, StatePartitions) {
+      drain(feed, ckpt, "t8_stream_merge_upsert") {
+        rmrf(new java.io.File(state)) // each attempt merges into an empty table
         stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           val sp = batch.sparkSession
@@ -631,6 +534,7 @@ object StreamingQueries {
           merged.unpersist()
           ()
         }
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       }
     }
@@ -651,13 +555,12 @@ object StreamingQueries {
     * the final state is recovered with one max(struct) — the same
     * relation the oracle computes directly. */
   def t11TransformWithState(spark: SparkSession, dir: String): DataFrame = {
-    val stream = stagedTwsFeed(spark, dir)
-    val qname = "t11_tws_" + java.lang.Integer.toHexString(dir.hashCode)
-    drainUpdateToMemory(spark, qname, eventRows(spark, dir)) {
-      StreamOps.userProfiles(spark, stream).toDF()
+    val (feed, stream) = stagedTwsFeed(spark, dir)
+    val drained = StreamOps.withRocksDBStateStore(spark) {
+      drainToMemory(spark, dir, feed, "t11_tws", "update")(
+        StreamOps.userProfiles(spark, stream).toDF())
     }
-    spark.table(qname)
-      .groupBy(col("user_id"))
+    drained.groupBy(col("user_id"))
       // hash-aggregable tuple max (≡ max(struct(...)), r15) — all fields
       // monotone per key, so the lexicographic max is the final state
       .agg(graft.expr.tupleagg.max_tuple(
@@ -672,30 +575,15 @@ object StreamingQueries {
     * ROUND-ROBIN into four files so every key spans multiple
     * microbatches under `maxFilesPerTrigger=1`. Staged once per dir
     * per invocation (idempotent overwrite); both consumers read the
-    * same files. */
-  private def stagedTwsFeed(spark: SparkSession, dir: String): DataFrame = {
+    * same files. Returns the feed dir and the stream. */
+  private def stagedTwsFeed(spark: SparkSession, dir: String): (String, DataFrame) = {
     val feed = graft.ScratchDirs.dir("stream",
       dir.replaceAll("[^a-zA-Z0-9]", "_"), "tws_feed")
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"))
     ev.repartition(4).write.mode("overwrite").parquet(feed)
-    StreamOps.fileFeed(spark, feed, ev, maxFilesPerTrigger = 1)
+    (feed, StreamOps.fileFeed(spark, feed, ev, maxFilesPerTrigger = 1))
   }
-
-  /** Shared drain scaffold for the typed-state queries: RocksDB
-    * provider + narrow state partitioning + update-mode memory sink,
-    * AvailableNow backlog drain. */
-  private def drainUpdateToMemory(spark: SparkSession, qname: String,
-                                  expectedRows: Long)
-                                 (frame: => DataFrame): Unit =
-    StreamOps.withRocksDBStateStore(spark) {
-      withStatePartitions(spark, 8) {
-        drainVerified(expectedRows, qname) {
-          frame.writeStream.format("memory").queryName(qname)
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        }
-      }
-    }
 
   /** T12: warm-started streaming state (`StatefulProcessorWithInitial
     * State`) — the backfill + incremental migration pattern. The
@@ -710,7 +598,7 @@ object StreamingQueries {
     * — is exercised end-to-end, and the monotone count picks the
     * final emission. */
   def t12WarmStartState(spark: SparkSession, dir: String): DataFrame = {
-    val stream = stagedTwsFeed(spark, dir)
+    val (feed, stream) = stagedTwsFeed(spark, dir)
     // the "historical backfill": a deterministic per-user bootstrap the
     // oracle can replay in closed form (1000·(uid mod 3) + uid events
     // seen "before" the stream; running max floored at uid mod 7)
@@ -718,12 +606,11 @@ object StreamingQueries {
       .select(col("user_id"),
         (lit(1000) * pmod(col("user_id"), lit(3)) + col("user_id")).as("n_events"),
         pmod(col("user_id"), lit(7)).cast("double").as("max_value"))
-    val qname = "t12_warm_" + java.lang.Integer.toHexString(dir.hashCode)
-    drainUpdateToMemory(spark, qname, eventRows(spark, dir)) {
-      StreamOps.warmStartTotals(spark, stream, initial).toDF()
+    val drained = StreamOps.withRocksDBStateStore(spark) {
+      drainToMemory(spark, dir, feed, "t12_warm", "update")(
+        StreamOps.warmStartTotals(spark, stream, initial).toDF())
     }
-    spark.table(qname)
-      .groupBy(col("user_id"))
+    drained.groupBy(col("user_id"))
       // hash-aggregable tuple max (≡ max(struct(...)), r15)
       .agg(graft.expr.tupleagg.max_tuple(col("n_events"), col("max_value")).as("s"))
       .select(col("user_id"), col("s.n_events").as("n_events"),
@@ -743,18 +630,10 @@ object StreamingQueries {
     * ([[SketchQueries.sketchMgHeavyTokens]]'s batch query). */
   def t13StreamFrequentItems(spark: SparkSession, dir: String): DataFrame = {
     import graft.expr.mgfunctions.misra_gries
-    val stream = stagedTwsFeed(spark, dir)
-    val qname = "t13_mg_" + java.lang.Integer.toHexString(dir.hashCode)
-    withStatePartitions(spark, 8) {
-      drainVerified(eventRows(spark, dir), qname) {
-        stream.groupBy()
-          .agg(misra_gries(col("event_type"), 16).as("sk"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname)
-      .select(explode(col("sk")).as("e"))
+    val (feed, stream) = stagedTwsFeed(spark, dir)
+    val drained = drainToMemory(spark, dir, feed, "t13_mg", "complete")(
+      stream.groupBy().agg(misra_gries(col("event_type"), 16).as("sk")))
+    drained.select(explode(col("sk")).as("e"))
       .select(col("e.term").as("event_type"), col("e.est").as("n_events"))
   }
 
@@ -777,9 +656,9 @@ object StreamingQueries {
   def t14CheckpointRecovery(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val base = graft.ScratchDirs.dir("stream", tag, "ckpt_recovery")
-    rmrf(new java.io.File(base)) // fresh feed + checkpoint per invocation
+    rmrf(new java.io.File(base)) // fresh stage per invocation
     val stage = s"$base/stage"; val feed = s"$base/feed"; val ckpt = s"$base/checkpoint"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))
+    val out1 = s"$base/out_p1"; val out2 = s"$base/out_p2"
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"))
     // ROUND-ROBIN staging (see stagedTwsFeed): keys span both halves,
@@ -796,42 +675,29 @@ object StreamingQueries {
     // the memory sink refuses checkpoint recovery, so each session's
     // update-mode emissions land in a per-session parquet dir via
     // foreachBatch — the recoverable-sink shape production uses, made
-    // replay-idempotent by batch-keyed dynamic-overwrite partitions
-    def drainSession(out: String): Unit =
-      StreamOps.withRocksDBStateStore(spark) {
-        withStatePartitions(spark, 8) {
-          val stream = StreamOps.fileFeed(spark, feed, ev, maxFilesPerTrigger = 1)
-          val q = StreamOps.userProfiles(spark, stream.toDF()).toDF()
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-              publishBatch(batch.toDF(), bid, out)
-            }
-            .outputMode("update").option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
+    // replay-idempotent by batch-keyed partitions
+    def session(out: String): StreamingQuery =
+      StreamOps.userProfiles(spark, StreamOps.fileFeed(spark, feed, ev, maxFilesPerTrigger = 1))
+        .toDF().writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
+          publishBatch(batch.toDF(), bid, out)
+        }
+        .outputMode("update").option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+    StreamOps.withRocksDBStateStore(spark) {
+      graft.Confs.withShufflePartitions(spark, StatePartitions) {
+        // one attempt is the whole restart scenario, so a retry re-runs
+        // both sessions from an empty checkpoint and feed
+        drain(feed, ckpt, "t14_checkpoint_recovery") {
+          Seq(feed, out1, out2).foreach(p => rmrf(new java.io.File(p)))
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))
+          ship(firstHalf)
+          session(out1).awaitTermination() // session 1: half the feed, then stop
+          ship(secondHalf)
+          session(out2) // session 2: same checkpoint, new files only
         }
       }
-    ship(firstHalf)
-    drainSession(s"$base/out_p1") // session 1: half the feed, then stop
-    ship(secondHalf)
-    drainSession(s"$base/out_p2") // session 2: same checkpoint, new files only
-    // drain-completeness accounting across BOTH sessions, judged from
-    // the checkpoint's committed file-source log (plan-independent and
-    // immune to the recentProgress retention cap): on a short drain the
-    // durable checkpoint makes another session a pure RESUME — it picks
-    // up exactly the unseen files, so the restart-recovery semantics
-    // under test are preserved
-    val staged = stagedFileNames(feed)
-    def missing: Set[String] = staged -- committedFeedFiles(ckpt)
-    var extra = 0
-    while (missing.nonEmpty && extra < 2) {
-      System.err.println(s"[graft] t14 left ${missing.size} of ${staged.size} staged " +
-        "files uncommitted — resuming")
-      drainSession(s"$base/out_p2")
-      extra += 1
     }
-    require(missing.isEmpty,
-      s"t14 left ${missing.size} of ${staged.size} staged files uncommitted across sessions")
     // a session whose drain landed zero micro-batches (documented
     // partial-snapshot flake) writes no parquet dir at all — read each
     // side back guarded, with the other side's schema as the fallback
@@ -840,7 +706,7 @@ object StreamingQueries {
         .select(col("user_id"), col("n_events"), col("n_types"), col("max_value"))
       else spark.range(0).select(col("id").as("user_id"), lit(0L).as("n_events"),
         lit(0L).as("n_types"), lit(0.0).as("max_value"))
-    sessionOut(s"$base/out_p1").unionByName(sessionOut(s"$base/out_p2"))
+    sessionOut(out1).unionByName(sessionOut(out2))
       .groupBy(col("user_id"))
       // hash-aggregable tuple max (≡ max(struct(...)), r15)
       .agg(graft.expr.tupleagg.max_tuple(
@@ -883,7 +749,8 @@ object StreamingQueries {
     val assign = graft.ops.Similarity.nearestCluster(cents, col("embedding"))
     e.repartition(4).write.mode("overwrite").parquet(feed)
     val stream = StreamOps.fileFeed(spark, feed, e, maxFilesPerTrigger = 1)
-    drainCommitted(feed, ckpt, "t15_stream_ivf_ingest") {
+    drain(feed, ckpt, "t15_stream_ivf_ingest") {
+      rmrf(new java.io.File(index))
       stream.withColumn("cluster", assign)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
@@ -938,12 +805,9 @@ object StreamingQueries {
       .select(col("doc_id"), col("text"))
     delta.repartition(4).write.mode("overwrite").parquet(feed)
     val stream = StreamOps.fileFeed(spark, feed, delta, maxFilesPerTrigger = 1)
-    // completeness comes from the checkpoint's committed file log, so
-    // the kernel scanning the arriving batch twice (prefix side +
-    // verify side) needs no per-plan scan factor here — a plan change
-    // (exchange reuse, batch materialization) cannot break the drain
     try {
-      drainCommitted(feed, ckpt, "t16_stream_containment") {
+      drain(feed, ckpt, "t16_stream_containment") {
+        rmrf(new java.io.File(out))
         stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
             publishBatch(
@@ -1013,15 +877,7 @@ object StreamingQueries {
       .agg(min(col("seed")).as("cluster_rep"), count(lit(1)).as("n_renderings"))
       .select(col("cluster_rep"),
         (col("n_renderings") / 3).cast("long").as("n_mols"), col("n_renderings"))
-    val qname = "t17_chem_" + java.lang.Integer.toHexString(dir.hashCode)
-    val nStaged = rendered.count()
-    withStatePartitions(spark, 8) {
-      drainVerified(nStaged, qname) {
-        agg.writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    spark.table(qname).select(col("cluster_rep"), col("n_mols"), col("n_renderings"))
+    drainToMemory(spark, dir, feed.toString, "t17_chem", "complete")(agg).select(col("cluster_rep"), col("n_mols"), col("n_renderings"))
   }
 
   /** T18 — streaming shard-delivery ingest: the streaming twin of
@@ -1053,7 +909,8 @@ object StreamingQueries {
     val delta = docs.filter(col("doc_id") % 2 === 1)
     delta.repartition(4).write.mode("overwrite").parquet(feed)
     val stream = StreamOps.fileFeed(spark, feed, delta, maxFilesPerTrigger = 1)
-    drainCommitted(feed, ckpt, "t18_stream_shard_append") {
+    drain(feed, ckpt, "t18_stream_shard_append") {
+      rmrf(new java.io.File(delivery))
       stream
         .select(col("doc_id"), CurationQueries.releaseShardId.as("shard_id"))
         .writeStream
@@ -1087,7 +944,7 @@ object StreamingQueries {
     * any micro-batch split equals the one-shot batch relation and t19
     * shares `e2e_shard_release`'s DuckDB oracle VERBATIM; the
     * exact-integer `order_digest` pins exactly-once delivery across
-    * the drain (guarded by committed-offset accounting like t15-t18). */
+    * the drain (see [[drain]]). */
   def t19StreamRelease(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val base = graft.ScratchDirs.dir("stream", tag, "release")
@@ -1104,7 +961,8 @@ object StreamingQueries {
     val dropped = CurationQueries.releaseDropList(spark, dir).persist()
     dropped.count()
     try {
-      drainCommitted(feed, ckpt, "t19_stream_release") {
+      drain(feed, ckpt, "t19_stream_release") {
+        rmrf(new java.io.File(delivery))
         stream
           .filter(col("n_chars") >= CurationQueries.ReleaseMinChars)
           .join(dropped, Seq("doc_id"), "left_anti")
@@ -1142,12 +1000,12 @@ object StreamingQueries {
     * gram set is kept bounded by the epoch merge+expire cycle of
     * [[t21IndexRetention]] / [[graft.ops.IndexRetention]] (entries
     * unseen for the retention horizon leave at the next republish);
-    * the drain here probes one frozen version, as a reader would. Every per-doc result is a pure function of
+    * the drain here probes one frozen version, as a reader would.
+    * Every per-doc result is a pure function of
     * (doc, index) — [[DedupQueries.substringIncrementalOfDelta]] is
     * shared verbatim with the batch query — so the union over any
     * micro-batch split equals the one-shot relation and t20 shares
-    * `dedup_substring_incremental`'s DuckDB oracle verbatim.
-    * Drain-guarded by committed-offset accounting like t15-t19. */
+    * `dedup_substring_incremental`'s DuckDB oracle verbatim. */
   def t20StreamSubstringDedup(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val base = graft.ScratchDirs.dir("stream", tag, "substr_stream")
@@ -1161,7 +1019,8 @@ object StreamingQueries {
     delta.repartition(4).write.mode("overwrite").parquet(feed)
     val stream = StreamOps.fileFeed(spark, feed, delta, maxFilesPerTrigger = 1)
     try {
-      drainCommitted(feed, ckpt, "t20_stream_substring_dedup") {
+      drain(feed, ckpt, "t20_stream_substring_dedup") {
+        rmrf(new java.io.File(out))
         stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
             publishBatch(

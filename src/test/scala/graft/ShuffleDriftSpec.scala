@@ -46,8 +46,9 @@ class ShuffleDriftSpec extends SparkSpecBase {
     ("dedup_containment", 348287L, 348287L, 2L), // prefix × full-postings join
     ("ann_ivf_topk", 478466L, 476956L, 2L), // k-means build + pruned probe search
     // streaming drain: input-side shuffle + state-store exchanges pin;
-    // band 4 because drainVerified may legitimately RERUN a short drain
-    // (~1-in-10 partial AvailableNow snapshots), roughly doubling bytes
+    // band 4 because StreamingQueries.drain may legitimately rerun a
+    // short drain from an empty checkpoint (~1-in-10 partial
+    // AvailableNow snapshots), roughly doubling bytes
     ("t20_stream_substring_dedup", 222611L, 222611L, 4L))
 
   test("shuffle bytes stay within their pinned sf0.001 band") {

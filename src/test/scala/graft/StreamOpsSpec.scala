@@ -272,4 +272,43 @@ class StreamOpsSpec extends SparkSpecBase {
     StreamOps.republish(df, out, "2026-08-12") // re-run same day
     assert(spark.read.parquet(s"$out/date=2026-08-12").count() == 10)
   }
+
+  /** [[graft.queries.StreamingQueries.drain]] a 4-file feed of ids
+    * 0..39 into a fresh memory sink. An attempt `n` with `short(n)`
+    * reads only part-00000: the partial snapshot the drain guards
+    * against. Returns the attempts made and the sink's sorted ids. */
+  private def drainFourFiles(short: Int => Boolean): (Int, scala.util.Try[Seq[Long]]) = {
+    val feed = Files.createTempDirectory("drain_feed").toString
+    spark.range(40).repartition(4).write.mode("overwrite").parquet(feed)
+    val ckpt = Files.createTempDirectory("drain_ckpt").toString
+    val out = s"stream_drain_${System.nanoTime()}"
+    val schemaFrom = spark.read.parquet(feed)
+    var attempts = 0
+    val ids = scala.util.Try {
+      graft.queries.StreamingQueries.drain(feed, ckpt, out) {
+        attempts += 1
+        val src = if (short(attempts)) s"$feed/part-00000-*" else feed
+        StreamOps.fileFeed(spark, src, schemaFrom, maxFilesPerTrigger = 1)
+          .writeStream.format("memory").queryName(out).outputMode("append")
+          .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      }
+      spark.table(out).collect().map(_.getLong(0)).sorted.toSeq
+    }
+    (attempts, ids)
+  }
+
+  test("drain: a short first attempt reruns from an empty checkpoint, each row once") {
+    val (attempts, ids) = drainFourFiles(_ == 1)
+    assert(attempts == 2, s"expected one retry, got $attempts attempts")
+    assert(ids.get == (0L until 40L), s"sink holds ${ids.get}")
+  }
+
+  test("drain: a feed that never drains fully fails after 3 attempts, naming a missing file") {
+    val (attempts, ids) = drainFourFiles(_ => true)
+    assert(attempts == 3, s"expected 3 attempts, got $attempts")
+    val err = ids.failed.get
+    assert(err.isInstanceOf[IllegalArgumentException] &&
+      err.getMessage.contains("after 3 of 3 attempts") &&
+      err.getMessage.contains("part-00001-"), err.toString)
+  }
 }
