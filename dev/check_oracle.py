@@ -4,9 +4,13 @@
 Usage: after `sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"`,
 run  : python3 dev/check_oracle.py /root/testdata/sf0.01 /tmp/verify_out
 
+Prints each query's line as soon as it is checked, with the seconds its
+oracle SQL and the canonicalisation of both sides took, then the
+"N/M ok" total and the 10 slowest queries.
+
 Not part of the Spark library — local feedback loop only.
 """
-import sys, json, glob, os
+import sys, json, glob, os, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -36,44 +40,51 @@ def main(sf_dir, out_dir):
             p = f"{p}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    results = {}
-    for name in sorted(os.listdir(out_dir)):
-        d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
-            continue
-        files = glob.glob(f"{d}/*.parquet")
-        got = con.execute(f"SELECT * FROM read_parquet({files!r})").df() if files else pd.DataFrame()
-        if name not in oracle:
-            results[name] = f"ROWS_ONLY rows={len(got)}" + (" EMPTY!" if len(got) == 0 else "")
-            continue
-        try:
-            exp = con.execute(oracle[name]).df()
-        except Exception as e:
-            results[name] = f"ORACLE_SQL_ERROR {e}"
-            continue
-        g, e = canon(got), canon(exp)
-        if list(g.columns) != list(e.columns):
-            results[name] = f"SCHEMA_MISMATCH got={list(g.columns)} exp={list(e.columns)}"
-        elif len(g) != len(e):
-            results[name] = f"ROWCOUNT got={len(g)} exp={len(e)}"
-        elif not g.equals(e):
-            neq = (g != e) & ~(g.isna() & e.isna())
-            bad_cols = [c for c in g.columns if neq[c].any()]
-            idx = neq.any(axis=1)
-            results[name] = (f"VALUE_MISMATCH cols={bad_cols} nrows={int(idx.sum())} "
-                             f"sample_got={g[idx].head(2).to_dict('records')} "
-                             f"sample_exp={e[idx].head(2).to_dict('records')}")
-        else:
-            results[name] = f"OK rows={len(g)}"
-    width = max(len(k) for k in results)
+    names = [n for n in sorted(os.listdir(out_dir)) if os.path.isdir(os.path.join(out_dir, n))]
+    width = max((len(n) for n in names), default=0)
     fails = 0
-    for k in sorted(results):
-        v = results[k]
-        if not v.startswith(("OK", "ROWS_ONLY")):
+    timings = []  # (oracle SQL s + canonicalisation s, oracle s, canon s, name)
+    for name in names:
+        result, oracle_s, canon_s = check(con, oracle, out_dir, name)
+        timings.append((oracle_s + canon_s, oracle_s, canon_s, name))
+        if not result.startswith(("OK", "ROWS_ONLY")):
             fails += 1
-        print(f"{k:<{width}}  {v[:400]}")
-    print(f"\n{len(results) - fails}/{len(results)} ok")
+        print(f"{name:<{width}}  oracle={oracle_s:6.2f}s canon={canon_s:6.2f}s  {result[:400]}",
+              flush=True)
+    print(f"\n{len(names) - fails}/{len(names)} ok")
+    print("slowest (oracle SQL + canonicalisation):")
+    for total, o, c, name in sorted(timings, reverse=True)[:10]:
+        print(f"  {name:<{width}}  {total:6.2f}s  (oracle {o:.2f}s, canon {c:.2f}s)")
     sys.exit(1 if fails else 0)
+
+def check(con, oracle, out_dir, name):
+    """(verdict, oracle SQL seconds, canonicalisation seconds) for one query."""
+    files = glob.glob(f"{out_dir}/{name}/*.parquet")
+    got = con.execute(f"SELECT * FROM read_parquet({files!r})").df() if files else pd.DataFrame()
+    if name not in oracle:
+        return f"ROWS_ONLY rows={len(got)}" + (" EMPTY!" if len(got) == 0 else ""), 0.0, 0.0
+    t0 = time.perf_counter()
+    try:
+        exp = con.execute(oracle[name]).df()
+    except Exception as e:
+        return f"ORACLE_SQL_ERROR {e}", time.perf_counter() - t0, 0.0
+    t1 = time.perf_counter()
+    g, e = canon(got), canon(exp)
+    t2 = time.perf_counter()
+    if list(g.columns) != list(e.columns):
+        verdict = f"SCHEMA_MISMATCH got={list(g.columns)} exp={list(e.columns)}"
+    elif len(g) != len(e):
+        verdict = f"ROWCOUNT got={len(g)} exp={len(e)}"
+    elif not g.equals(e):
+        neq = (g != e) & ~(g.isna() & e.isna())
+        bad_cols = [c for c in g.columns if neq[c].any()]
+        idx = neq.any(axis=1)
+        verdict = (f"VALUE_MISMATCH cols={bad_cols} nrows={int(idx.sum())} "
+                   f"sample_got={g[idx].head(2).to_dict('records')} "
+                   f"sample_exp={e[idx].head(2).to_dict('records')}")
+    else:
+        verdict = f"OK rows={len(g)}"
+    return verdict, t1 - t0, t2 - t1
 
 if __name__ == "__main__":
     main(sys.argv[1], sys.argv[2])

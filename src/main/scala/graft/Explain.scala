@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 
 import java.nio.charset.StandardCharsets
@@ -18,8 +20,9 @@ import java.nio.file.{Files, Paths}
   *     `explain("formatted")` to stdout, or to `outDir/<query>_<suffix>.txt`
   *   dev/run_main.sh graft.Explain jobs
   *     runs each query into the noop sink (`SPARK_GRAFT_REPEAT` times)
-  *     and prints one line per Spark job: duration, stage task counts
-  *     and the callsite — the Spark UI's Jobs page with the UI off
+  *     and prints one line per Spark job: the query run it belongs to,
+  *     duration, stage task counts and the callsite — the Spark UI's
+  *     Jobs page with the UI off
   */
 object Explain {
 
@@ -71,13 +74,9 @@ object Explain {
           }
         }
       case List("jobs") =>
-        spark.sparkContext.addSparkListener(new JobLog)
+        spark.sparkContext.addSparkListener(new JobLog(System.err.println))
         GraftSession.eachQuery(spark, "jobs") { (name, fn) =>
-          (1 to GraftSession.repeat).foreach { i =>
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            System.err.println(f"[prof-total] $name run $i ${(System.nanoTime() - t0) / 1e9}%.3fs")
-          }
+          runLabelled(spark, name, fn, sfDir, GraftSession.repeat)(System.err.println)
         }
       case _ =>
         System.err.println("usage: graft.Explain census | plan [outDir suffix] | jobs")
@@ -85,19 +84,44 @@ object Explain {
     spark.stop()
   }
 
-  /** Prints each Spark job over 5 ms, attributed by its result stage's
-    * callsite (the "X at file:line" the UI shows) and stage task shape. */
-  private final class JobLog extends SparkListener {
+  /** The local property [[JobLog]] labels a job with. Not the job
+    * description: a streaming query's micro-batch thread inherits the
+    * caller's local properties but sets its own description. */
+  private val RunProperty = "graft.explain.run"
+
+  /** Runs query `name` into the noop sink `repeat` times, each run
+    * (construct and execute) labelled `"<name> run <i>"` in
+    * [[RunProperty]], and logs the run's total once the listener bus
+    * has delivered every job of it. */
+  def runLabelled(spark: SparkSession, name: String, fn: GraftSession.Query, sfDir: String,
+                  repeat: Int)(log: String => Unit): Unit = {
+    val sc = spark.sparkContext
+    (1 to repeat).foreach { i =>
+      val t0 = System.nanoTime()
+      sc.setLocalProperty(RunProperty, s"$name run $i")
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      finally sc.setLocalProperty(RunProperty, null)
+      val dt = (System.nanoTime() - t0) / 1e9
+      ListenerBridge.drainListenerBus(sc)
+      log(f"[prof-total] $name run $i $dt%.3fs")
+    }
+  }
+
+  /** Logs every Spark job: the query run it belongs to
+    * ([[RunProperty]]), duration, stage task counts and the result
+    * stage's callsite (the "X at file:line" the UI shows). */
+  final class JobLog(log: String => Unit) extends SparkListener {
     private val started = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     override def onJobStart(js: SparkListenerJobStart): Unit = {
+      val run = Option(js.properties).flatMap(p => Option(p.getProperty(RunProperty)))
+        .getOrElse("?")
       val site = js.stageInfos.lastOption.map(_.name).getOrElse("?")
       val shape = js.stageInfos.map(_.numTasks).mkString("+")
-      started.put(js.jobId, (System.nanoTime(), s"[$shape tasks] $site"))
+      started.put(js.jobId, (System.nanoTime(), s"$run  [$shape tasks] $site"))
     }
     override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      Option(started.remove(je.jobId)).foreach { case (t0, site) =>
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (dt > 0.005) System.err.println(f"[prof-job] ${je.jobId}%4d ${dt}%8.3fs  $site")
+      Option(started.remove(je.jobId)).foreach { case (t0, label) =>
+        log(f"[prof-job] ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%8.3fs  $label")
       }
   }
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -174,7 +175,9 @@ object StreamingQueries {
     * batch lands under an `ingest_batch=<id>` partition, so a batch
     * replayed after a crash between the sink write and the offset
     * commit REPLACES its own partition instead of double-appending —
-    * the exactly-once half a blind `mode("append")` cannot give.
+    * the exactly-once half a blind `mode("append")` cannot give. Every
+    * file operation goes through the Hadoop `FileSystem` of `out`, so a
+    * publish works on any scheme, not only local disk.
     *
     * UNPARTITIONED publishes write DIRECTLY into the batch's own
     * `ingest_batch=<id>` directory with plain overwrite (r14
@@ -184,52 +187,53 @@ object StreamingQueries {
     * 0.1-0.3 s per micro-batch. The read-back is unchanged — the
     * directory name IS the `ingest_batch` partition column. Publishes
     * WITH extra partition columns (t15's cluster, t18/t19's shard)
-    * keep the dynamic path: their caller-supplied partitioning must
-    * stay the top-level layout (t15's cluster-dir locality is
-    * spec-asserted), which one-dir overwrite cannot express. */
-  private def publishBatch(batch: DataFrame, batchId: Long, out: String,
-                           partitionCols: Seq[String] = Nil): Unit =
+    * keep the caller's partitioning as the top-level layout (t15's
+    * cluster-dir locality is spec-asserted), which one-dir overwrite
+    * cannot express: the batch is written ONCE into a dot-prefixed
+    * staging dir, then each partition dir MOVES to
+    * `<out>/<part>/ingest_batch=<id>` with concurrent renames, the
+    * target deleted first so a replay replaces exactly its own output.
+    * This skips the dynamic committer's serial driver-side
+    * per-partition rename loop (~0.1-0.3 s per micro-batch across
+    * t15/t18/t19's 4-batch drains).
+    *
+    * A publish is complete once its marker
+    * `<out>/_published/ingest_batch=<id>` exists: the marker is deleted
+    * first and written after the last move, and a failed rename
+    * throws. Partition discovery skips the underscore-prefixed marker
+    * dir, so readers of `out` never see it. */
+  private[graft] def publishBatch(batch: DataFrame, batchId: Long, out: String,
+                                  partitionCols: Seq[String] = Nil): Unit = {
+    val outPath = new Path(out)
+    val fs = outPath.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val leaf = s"ingest_batch=$batchId"
+    val marker = new Path(outPath, s"_published/$leaf")
+    fs.delete(marker, false) // a replayed batch counts as partial until it ends
     if (partitionCols.isEmpty)
-      batch.write.mode("overwrite").parquet(s"$out/ingest_batch=$batchId")
+      batch.write.mode("overwrite").parquet(new Path(outPath, leaf).toString)
     else {
-      // PARTITIONED publish with a parallel leaf-dir commit (r15, the
-      // r14 round's deferred item): write the batch ONCE into a
-      // dot-prefixed staging dir (plain overwrite — no dynamic-
-      // overwrite staging tree), then MOVE each partition dir to
-      // <out>/<part>/ingest_batch=<id> with concurrent renames.
-      // Semantics are the dynamic path's replace-own-partition
-      // idempotence (the target ingest_batch dir is deleted before the
-      // move, so a replayed batch replaces exactly its own output);
-      // the published layout is byte-identical — caller partition
-      // columns stay the top level (t15's cluster locality is
-      // spec-asserted), `ingest_batch=<id>` under them, and readers
-      // infer both from the dir names. What it removes is the dynamic
-      // committer's serial driver-side per-partition rename loop plus
-      // its job-level staging bookkeeping (~0.1-0.3 s per micro-batch
-      // across t15/t18/t19's 4-batch drains). Mid-move failure can
-      // leave a partial publish — the same committed trade as the v2
-      // output committer, and these scratch feeds are re-staged per
-      // invocation.
-      val stage = new java.io.File(s"$out/.stage_ingest_batch_$batchId")
-      rmrf(stage)
-      batch.write.mode("overwrite").partitionBy(partitionCols: _*)
-        .parquet(stage.getPath)
-      def leaves(d: java.io.File, depth: Int): Seq[java.io.File] =
-        if (depth == 0) Seq(d)
-        else Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-          .filter(f => f.isDirectory && f.getName.contains("="))
-          .flatMap(leaves(_, depth - 1))
-      val stagePath = stage.toPath
+      val stage = new Path(outPath, s".stage_$leaf")
+      fs.delete(stage, true)
+      batch.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stage.toString)
+      // (staged partition dir, its partition dir names under the staging root)
+      def leaves(d: Path, rel: Seq[String], depth: Int): Seq[(Path, Seq[String])] =
+        if (depth == 0) Seq(d -> rel)
+        else fs.listStatus(d).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+          .flatMap(st => leaves(st.getPath, rel :+ st.getPath.getName, depth - 1))
       import scala.jdk.CollectionConverters._
-      leaves(stage, partitionCols.size).asJava.parallelStream().forEach { src =>
-        val rel = stagePath.relativize(src.toPath).toString
-        val dst = new java.io.File(s"$out/$rel/ingest_batch=$batchId")
-        rmrf(dst)
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.move(src.toPath, dst.toPath)
+      leaves(stage, Nil, partitionCols.size).asJava.parallelStream().forEach { l =>
+        val (src, rel) = l
+        val dst = (rel :+ leaf).foldLeft(outPath)(new Path(_, _))
+        fs.delete(dst, true)
+        fs.mkdirs(dst.getParent)
+        if (!fs.rename(src, dst))
+          throw new java.io.IOException(s"publish of batch $batchId: rename $src -> $dst failed")
       }
-      rmrf(stage)
+      fs.delete(stage, true)
     }
+    fs.create(marker, true).close()
+  }
 
   /** Stage `events.parquet` into a drop-folder (the T1 file feed is a
     * DIRECTORY of arriving files — baseline + updatefiles) and open it

@@ -311,4 +311,30 @@ class StreamOpsSpec extends SparkSpecBase {
       err.getMessage.contains("after 3 of 3 attempts") &&
       err.getMessage.contains("part-00001-"), err.toString)
   }
+
+  test("publishBatch: a file: URI publishes the rows a plain path does, with one marker per batch") {
+    val root = Files.createTempDirectory("publish").toString
+    val df = spark.range(20).select(col("id"), (col("id") % 3).as("shard"))
+    def publishTwice(out: String, partitionCols: Seq[String]): Seq[(Long, Long, Long)] = {
+      (0L to 1L).foreach { bid =>
+        graft.queries.StreamingQueries.publishBatch(
+          df.filter(col("id") % 2 === bid), bid, out, partitionCols)
+      }
+      // partition discovery infers int partition columns
+      spark.read.parquet(out)
+        .select(col("id"), col("shard").cast("long"), col("ingest_batch").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    }
+    for (partitionCols <- Seq(Nil, Seq("shard"))) {
+      val tag = partitionCols.mkString("_")
+      val plain = publishTwice(s"$root/plain$tag", partitionCols)
+      val uri = publishTwice(s"file://$root/uri$tag", partitionCols)
+      assert(plain.size == 20 && uri == plain, s"$partitionCols: $uri vs $plain")
+      for (dir <- Seq("plain", "uri")) {
+        val markers = new java.io.File(s"$root/$dir$tag/_published").list()
+          .filterNot(_.endsWith(".crc")).sorted.toSeq
+        assert(markers == Seq("ingest_batch=0", "ingest_batch=1"), s"$dir$tag: $markers")
+      }
+    }
+  }
 }
