@@ -82,7 +82,7 @@ object GraftSession {
     import org.apache.spark.sql.functions._
     spark.range(1000).select(sum(col("id")))
       .write.format("noop").mode("overwrite").save()
-    val n = spark.read.parquet(s"$sfDir/nation.parquet")
+    val n = Tables.nation(spark, sfDir)
     n.write.format("noop").mode("overwrite").save()
     n.groupBy(col("n_regionkey")).agg(count(lit(1)), collect_list(col("n_name")))
       .write.format("noop").mode("overwrite").save()

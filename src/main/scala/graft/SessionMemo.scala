@@ -80,6 +80,6 @@ object SessionMemo {
           throw t
       }
     }
-    spark.read.parquet(holder.join())
+    Tables.parquet(spark, holder.join())
   }
 }

@@ -1,20 +1,39 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Loaders for the harness parquet tables (TESTDATA.md / FIXTURES.md §B).
   *
-  * All reads go through `spark.read.parquet` so Catalyst handles column
-  * pruning and predicate pushdown into the parquet scan — at 100 TB the
-  * same code path benefits from row-group skipping and (on a real
-  * cluster) locality-aware split scheduling. Never cache here: callers
-  * decide materialization.
+  * Every table read, and every [[SessionMemo]] artifact read back, is a
+  * plain parquet scan through [[parquet]], so Catalyst handles column
+  * pruning and predicate pushdown into the scan — at 100 TB the same
+  * code path benefits from row-group skipping and (on a real cluster)
+  * locality-aware split scheduling. Never cache here: callers decide
+  * materialization.
+  *
+  * The schema comes from one footer read on the driver, not from
+  * Spark's schema inference: `spark.read.parquet(path)` reads footers
+  * inside a Spark job (`ParquetFileFormat.mergeSchemasInParallel`) even
+  * for one file with `mergeSchema=false`, and at sf0.01 those jobs were
+  * 23 of release_pipeline's 31 construct-time jobs per pass, ~25-30 ms
+  * each on a 4-core machine. [[parquet]] reads the file's footer (for a
+  * directory, that of its first data part file by name: inference with
+  * `mergeSchema=false` also reads one part and assumes the rest match)
+  * and converts it with Spark's own `readSchema` under the session conf,
+  * so `nanosAsLong` and both `events.ts` layouts resolve exactly as
+  * inference resolves them, and plans are unchanged.
   */
 object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
+  /** `spark.read.parquet(path)` with the schema read from the footer on
+    * the driver (see the object doc): starts no Spark job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FooterSchema.of(spark, path)).parquet(path)
+
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(path(dir, name))
+    parquet(spark, path(dir, name))
 
   /** Fact-table scan, redistributed across cores when the file layout
     * under-parallelizes the read. Parquet splits at row-group

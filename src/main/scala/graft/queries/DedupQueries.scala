@@ -1307,13 +1307,18 @@ object DedupQueries {
      "SELECT comp_id, n_docs, node AS canonical_doc, degree FROM x WHERE rn = 1")
 
   /** DuckDB twin of [[graphKcore]]: the fixed peel rounds unrolled as
-    * chained CTEs over the identical symmetric edge replay. */
+    * chained CTEs over the identical symmetric edge replay. The chain is
+    * `AS MATERIALIZED`: each `e<i>` reads `e<i-1>` three times (directly
+    * and twice through `k<i>`); left to DuckDB 1.0's CTE inlining, the
+    * all-pairs edge replay under `e0` can be re-run for each of up to
+    * 3^4 paths, and the query took 488 s against 10 s materialized for
+    * the same relation at sf0.001 on a 4-core machine. */
   private val kcoreSql = {
     val peels = (1 to KcorePeels).map { i =>
-      s"k$i AS (SELECT s FROM e${i - 1} GROUP BY s HAVING count(*) >= $KcoreK), " +
-      s"e$i AS (SELECT e.s, e.d FROM e${i - 1} e JOIN k$i a ON e.s = a.s JOIN k$i b ON e.d = b.s)"
+      s"k$i AS MATERIALIZED (SELECT s FROM e${i - 1} GROUP BY s HAVING count(*) >= $KcoreK), " +
+      s"e$i AS MATERIALIZED (SELECT e.s, e.d FROM e${i - 1} e JOIN k$i a ON e.s = a.s JOIN k$i b ON e.d = b.s)"
     }.mkString(", ")
-    (s"WITH $duckEdgesCte, e0 AS (SELECT s, d FROM edges), $peels " +
+    (s"WITH $duckEdgesCte, e0 AS MATERIALIZED (SELECT s, d FROM edges), $peels " +
      s"SELECT s AS doc_id, count(*)::BIGINT AS deg_core FROM e$KcorePeels GROUP BY s")
   }
 

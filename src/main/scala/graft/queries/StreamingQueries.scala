@@ -247,7 +247,7 @@ object StreamingQueries {
     java.nio.file.Files.createDirectories(feed)
     stageTable(dir, "events.parquet", feed)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.read(spark, dir, "events")
     val stream = StreamOps.fileFeed(spark, feed.toString, raw, maxFilesPerTrigger = 1)
     (feed.toString, stream.withColumn("ts", Tables.normalizeTs(stream.schema("ts").dataType)))
   }
@@ -449,7 +449,7 @@ object StreamingQueries {
       graft.ScratchDirs.dir("stream", dir.replaceAll("[^a-zA-Z0-9]", "_"), "docs_feed"))
     java.nio.file.Files.createDirectories(feed)
     stageTable(dir, "documents.parquet", feed)
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
+    val raw = Tables.documentsUnpinned(spark, dir)
     // drain in ≤4 micro-batches regardless of the corpus's part-file
     // count: a multi-part 10× corpus at maxFilesPerTrigger=1 would pay
     // one ~2.4 s state-commit floor PER FILE (32 commits dominated the

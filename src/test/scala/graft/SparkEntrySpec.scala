@@ -48,20 +48,39 @@ class SparkEntrySpec extends AnyFunSuite {
       s"README 'Current state' must read '$n queries, $n/$n oracle-ok' — update it")
   }
 
-  test("only GraftSession builds a SparkSession") {
-    // every main and spec shares one session config, so a plan a dev
-    // tool prints or a spec pins is the plan the bench runs
+  private def scalaSources(roots: String*): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    val builder = "SparkSession\\.builder".r
-    val hits = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+    roots.flatMap { root =>
       val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
-    }.filter { f =>
+    }
+  }
+
+  test("only GraftSession builds a SparkSession") {
+    // every main and spec shares one session config, so a plan a dev
+    // tool prints or a spec pins is the plan the bench runs
+    val builder = "SparkSession\\.builder".r
+    val hits = scalaSources("src/main/scala", "src/test/scala").filter { f =>
       f.getFileName.toString != "GraftSession.scala" &&
         builder.findFirstIn(java.nio.file.Files.readString(f)).isDefined
     }
     assert(hits.isEmpty, s"SparkSession built outside GraftSession in: ${hits.mkString(", ")}")
+  }
+
+  test("only Tables reads a harness table with spark.read.parquet") {
+    // a read.parquet of `$dir/<table>.parquet` infers its schema in a
+    // Spark job; Tables.parquet reads it from the footer on the driver
+    val harnessRead =
+      """\.read(?:\.\w+\([^)]*\))*\.parquet\(\s*(?:s"\$\{?\w+\}?/\w+\.parquet"|Tables\.path\()""".r
+    assert(harnessRead.findFirstIn("""val n = spark.read.parquet(s"$sfDir/nation.parquet")""").isDefined)
+    assert(harnessRead.findFirstIn("""spark.read.option("a", "b").parquet(Tables.path(dir, "x"))""").isDefined)
+    assert(harnessRead.findFirstIn("""spark.read.parquet(s"$out/date=$day")""").isEmpty)
+    val hits = scalaSources("src/main/scala").filter { f =>
+      f.getFileName.toString != "Tables.scala" &&
+        harnessRead.findFirstIn(java.nio.file.Files.readString(f)).isDefined
+    }
+    assert(hits.isEmpty, s"harness tables read around Tables.parquet in: ${hits.mkString(", ")}")
   }
 
   test("oracle coverage: EVERY registered query has a DuckDB oracle") {
