@@ -100,11 +100,8 @@ object GraftSession {
     // touching any measured query's data or expressions — the same
     // session-startup principle as the generic batch shapes above.
     locally {
-      val wbase = ScratchDirs.dir("warmup_stream")
+      val wbase = ScratchDirs.clear(ScratchDirs.dir("warmup_stream"))
       val wfeed = s"$wbase/feed"; val wckpt = s"$wbase/ckpt"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
-      rm(new java.io.File(wbase))
       spark.range(2).select(col("id")).write.mode("overwrite").parquet(wfeed)
       Confs.withSessionConf(spark,
         "spark.sql.streaming.stateStore.providerClass",

@@ -1,5 +1,6 @@
 package graft
 
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped parquet memo for SHARED derived tables: expensive
@@ -17,69 +18,48 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * on failure the entry is retracted so the next caller recomputes
   * instead of reading a half-written scratch file.
   *
-  * Keys embed a per-JVM tag, so a fresh session (fresh data) never
-  * reads a stale file, plus the data dir's sanitized name AND its
-  * SHA-256: the sanitizer alone is lossy (`/x/a.b` and `/x/a_b` both
-  * sanitize to `_x_a_b`), so the digest is what guarantees two dirs
-  * can never alias one scratch file. Assumes a dir's contents are
-  * immutable within a session, which the harness guarantees (testdata
-  * regen restarts the JVM). */
+  * An artifact lives at `memo/<sessionTag>/<kind>/<ScratchDirs.tag(dir)>`:
+  * the per-JVM tag means a fresh session (fresh data) never reads a
+  * stale file, and [[ScratchDirs.tag]] means two data dirs never alias
+  * one artifact. Assumes a dir's contents are immutable within a
+  * session, which the harness guarantees (testdata regen restarts the
+  * JVM). */
 object SessionMemo {
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
+  private val memo = new ConcurrentHashMap[(String, String, String), CompletableFuture[Any]]()
   private lazy val sessionTag = java.lang.Long.toHexString(System.nanoTime())
 
-  private val valueMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[Any]]()
-
-  /** Small DRIVER-SIDE memoized value for (`kind`, `dir`) — the scalar
-    * sibling of [[parquet]] for derived statistics that are a pure
-    * function of a corpus (the entropy-ranked simhash bit layout: 60
-    * ints) but cost a full corpus scan to compute. Same future-holder
-    * shape (build outside the bin lock, retract on failure); no
-    * sessionTag needed — the map itself is per-JVM, and a dir's
-    * contents are immutable within a session (see class doc). Only for
-    * BOUNDED values (the caller's `build` already ends in a 1-row
-    * collect); a big value belongs in [[parquet]]. */
-  def value[T](kind: String, dir: String)(build: => T): T = {
-    val key = s"$kind|$dir"
-    val fresh = new java.util.concurrent.CompletableFuture[Any]()
-    val prior = valueMemo.putIfAbsent(key, fresh)
-    val holder = if (prior == null) fresh else prior
+  /** `build` once per (`space`, `kind`, `dir`) key: the first caller
+    * builds, concurrent callers wait on its future. */
+  private def once[T](space: String, kind: String, dir: String)(build: => T): T = {
+    val key = (space, kind, dir)
+    val fresh = new CompletableFuture[Any]()
+    val prior = memo.putIfAbsent(key, fresh)
     if (prior == null) {
       try fresh.complete(build)
       catch {
-        case t: Throwable =>
-          valueMemo.remove(key, fresh)
-          fresh.completeExceptionally(t)
-          throw t
-      }
-    }
-    holder.join().asInstanceOf[T]
-  }
-
-  /** The memoized frame for (`kind`, `dir`), building it via `build`
-    * exactly once per JVM. */
-  def parquet(spark: SparkSession, kind: String, dir: String)(build: => DataFrame): DataFrame = {
-    val key = s"$kind|$dir"
-    val fresh = new java.util.concurrent.CompletableFuture[String]()
-    val prior = memo.putIfAbsent(key, fresh)
-    val holder = if (prior == null) fresh else prior
-    if (prior == null) {
-      try {
-        val dirDigest = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val p = ScratchDirs.dir("memo", sessionTag, kind,
-          dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + dirDigest)
-        build.write.mode("overwrite").parquet(p)
-        fresh.complete(p)
-      } catch {
         case t: Throwable =>
           memo.remove(key, fresh)
           fresh.completeExceptionally(t)
           throw t
       }
     }
-    Tables.parquet(spark, holder.join())
+    (if (prior == null) fresh else prior).join().asInstanceOf[T]
   }
+
+  /** Small DRIVER-SIDE memoized value for (`kind`, `dir`) — the scalar
+    * sibling of [[parquet]] for derived statistics that are a pure
+    * function of a corpus (the entropy-ranked simhash bit layout: 60
+    * ints) but cost a full corpus scan to compute. Only for BOUNDED
+    * values (the caller's `build` already ends in a 1-row collect); a
+    * big value belongs in [[parquet]]. */
+  def value[T](kind: String, dir: String)(build: => T): T = once("value", kind, dir)(build)
+
+  /** The memoized frame for (`kind`, `dir`), building it via `build`
+    * exactly once per JVM. */
+  def parquet(spark: SparkSession, kind: String, dir: String)(build: => DataFrame): DataFrame =
+    Tables.parquet(spark, once("parquet", kind, dir) {
+      val p = ScratchDirs.dir("memo", sessionTag, kind, ScratchDirs.tag(dir))
+      build.write.mode("overwrite").parquet(p)
+      p
+    })
 }

@@ -1256,17 +1256,19 @@ object DedupQueries {
 
   /** Shared oracle prefix: replay the exact n-gram Jaccard pair
     * pipeline and symmetrize it into a directed edge list — used by
-    * both the components closure and the PageRank unroll. */
+    * both the components closure and the PageRank unroll. `pairs` and
+    * `edges` are `AS MATERIALIZED`, as in [[kcoreSql]]: every user reads
+    * `edges` several times, each a full all-pairs replay if inlined. */
   private[graft] val duckEdgesCte =
     ("t AS (SELECT doc_id, string_split(text, ' ') ws FROM documents), " +
      "sh AS (SELECT doc_id, CASE WHEN len(ws) >= 3 THEN list_distinct(" +
      "list_transform(generate_series(1, len(ws)-2), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) " +
      "ELSE [] END AS sg FROM t), " +
-     "pairs AS (SELECT id_a, id_b FROM (" +
+     "pairs AS MATERIALIZED (SELECT id_a, id_b FROM (" +
      "SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
      "len(list_intersect(a.sg, b.sg))::DOUBLE / (len(a.sg) + len(b.sg) - len(list_intersect(a.sg, b.sg))) AS j " +
      "FROM sh a, sh b WHERE a.doc_id < b.doc_id) WHERE j >= 0.7), " +
-     "edges AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs)")
+     "edges AS MATERIALIZED (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs)")
 
   /** DuckDB twin of [[graphPagerank]]: the ten rounded iterations
     * unrolled as chained CTEs over the identical edge replay. */

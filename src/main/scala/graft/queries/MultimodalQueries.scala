@@ -74,7 +74,7 @@ object MultimodalQueries {
     * VERIFIABLE provenance claims are what the oracle checks). */
   def p1Provenance(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => fcount}
-    val out = graft.ScratchDirs.dir("provenance", dir.replaceAll("[^a-zA-Z0-9]", "_"), "orders_summary")
+    val out = graft.ScratchDirs.of("provenance", dir, "orders_summary")
     val artifact = Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority"))
       .agg(fcount(lit(1)).as("n_orders"))
@@ -85,7 +85,7 @@ object MultimodalQueries {
     val recorded = spark.read.json(
       spark.createDataset(Seq(json))(org.apache.spark.sql.Encoders.STRING))
       .select(col("step"), col("rows").cast("long").as("recorded_rows"))
-    val actual = spark.read.parquet(out).agg(fcount(lit(1)).as("actual_rows"))
+    val actual = Tables.parquet(spark, out).agg(fcount(lit(1)).as("actual_rows"))
     recorded.crossJoin(actual)
       .select(col("step"), col("recorded_rows"),
         (col("recorded_rows") === col("actual_rows")).as("rows_match"))

@@ -24,8 +24,8 @@ object ScaleQueries {
     * zero-shuffle property comes from bucketing, not from a broadcast
     * fallback at this small SF. */
   def bucketedColocatedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val suffix = java.lang.Integer.toHexString(dir.hashCode)
-    val base = graft.ScratchDirs.dir("bucketed", suffix)
+    val suffix = graft.ScratchDirs.tag(dir)
+    val base = graft.ScratchDirs.of("bucketed", dir)
     val ordersT = s"orders_bkt_$suffix"
     val lineitemT = s"lineitem_bkt_$suffix"
     // repartition on the bucket key first: the write then runs one task
@@ -122,8 +122,7 @@ object ScaleQueries {
     * types|), not the fact volume. The oracle aggregates the raw facts
     * directly — pinning that merging partials loses nothing. */
   def incPartialRollup(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.ScratchDirs.dir("partials",
-      java.lang.Integer.toHexString(dir.hashCode))
+    val out = graft.ScratchDirs.of("partials", dir)
     // partials carry value as DECIMAL, not DOUBLE: decimal addition is
     // exact and associative, so the partial-merge total is bit-equal to
     // a direct aggregate no matter how rows split across partitions —
@@ -157,7 +156,7 @@ object ScaleQueries {
     * technique and works on any plan.) */
   def bloomSemiJoin(spark: SparkSession, dir: String): DataFrame = {
     graft.Functions.register(spark) // session-scoped, idempotent
-    val sfx = java.lang.Integer.toHexString(dir.hashCode)
+    val sfx = graft.ScratchDirs.tag(dir)
     Tables.lineitem(spark, dir).createOrReplaceTempView(s"lineitem_bloom_$sfx")
     Tables.orders(spark, dir).createOrReplaceTempView(s"orders_bloom_$sfx")
     spark.sql(s"""
@@ -214,8 +213,7 @@ object ScaleQueries {
     * happens at planning, before any file IO). The reference's dated
     * release dirs (P2) are this layout's publication edge. */
   def partitionedPrune(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.ScratchDirs.dir("partitioned",
-      java.lang.Integer.toHexString(dir.hashCode))
+    val out = graft.ScratchDirs.of("partitioned", dir)
     val ev = Tables.events(spark, dir).withColumn("event_date", to_date(col("ts")))
     ev.write.mode("overwrite").partitionBy("event_date").parquet(out)
     val maxDay = ev.agg(max(col("event_date"))).collect()(0).getDate(0)
@@ -237,8 +235,7 @@ object ScaleQueries {
     * file-source scans); the spec asserts `dynamicpruning` in the
     * fact scan's partition filters. */
   def dppJoin(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ScratchDirs.dir("dpp",
-      java.lang.Integer.toHexString(dir.hashCode))
+    val base = graft.ScratchDirs.of("dpp", dir)
     val ev = Tables.events(spark, dir).withColumn("event_date", to_date(col("ts")))
     ev.write.mode("overwrite").partitionBy("event_date").parquet(s"$base/facts")
     // date dimension with a deterministic "recent" flag — the filter
@@ -316,7 +313,7 @@ object ScaleQueries {
     * shares them with the read-side filter (one corpus scan, not two). */
   private def writeZorder(spark: SparkSession, dir: String,
                           maxOk: Long, maxPk: Long): String = {
-    val out = graft.ScratchDirs.dir("zorder", java.lang.Integer.toHexString(dir.hashCode))
+    val out = graft.ScratchDirs.of("zorder", dir)
     val bx = least(lit(255L), col("l_orderkey") * 256L / lit(maxOk + 1)).cast("long")
     val by = least(lit(255L), col("l_partkey") * 256L / lit(maxPk + 1)).cast("long")
     Tables.lineitem(spark, dir)
@@ -338,9 +335,8 @@ object ScaleQueries {
     * At scale this is the same op keyed per partition-dir, with the
     * row budget from target_file_bytes / avg_row_bytes. */
   def kCompaction(spark: SparkSession, dir: String): DataFrame = {
-    val suffix = java.lang.Integer.toHexString(dir.hashCode)
-    val frag = graft.ScratchDirs.dir("compact_in", suffix)
-    val out = graft.ScratchDirs.dir("compact_out", suffix)
+    val frag = graft.ScratchDirs.of("compact_in", dir)
+    val out = graft.ScratchDirs.of("compact_out", dir)
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     ev.repartition(64).write.mode("overwrite").parquet(frag)       // fragmented landing

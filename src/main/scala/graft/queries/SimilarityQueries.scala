@@ -263,7 +263,7 @@ object SimilarityQueries {
   def annIvfPartitioned(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val (assigned, cents) = ivfIndex(e, "vec_id", "embedding", k = 8, iters = 1)
-    val out = graft.ScratchDirs.dir("ivf_index", java.lang.Integer.toHexString(dir.hashCode))
+    val out = graft.ScratchDirs.of("ivf_index", dir)
     // cluster-align the write tasks: without this every scan task emits
     // a file into every cluster dir (tasks × k files + as many commit
     // renames); aligned, the build is k files for k partitions. At real

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{ScratchDirs, Tables}
 
 /** Sources & sinks pack (SURVEY §2.1): the reference's scan/sink
   * surface exercised as oracle-checkable roundtrips — gzipped TSV
@@ -19,12 +19,9 @@ import graft.Tables
   */
 object SourceQueries {
 
-  private def tmp(dir: String, name: String): String =
-    graft.ScratchDirs.dir("sources", dir.replaceAll("[^a-zA-Z0-9]", "_"), name)
-
   /** S1+K1: TSV-with-header write (gzip) → schema'd TSV scan. */
   def s1TsvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "lineitem_tsv")
+    val out = ScratchDirs.of("sources", dir, "lineitem_tsv")
     // partitioned gzip output: gzip text is unsplittable, so ONE file
     // would serialize both the write and the read-back on single tasks
     // (the round-1 shape; worst observed 24 s) — many files keep both
@@ -50,7 +47,7 @@ object SourceQueries {
     * both directions parallel. Writer and parser both sit in the
     * oracle-compared path. */
   def s8JsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "documents_jsonl")
+    val out = ScratchDirs.of("sources", dir, "documents_jsonl")
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
       .write.mode("overwrite").option("compression", "gzip").json(out)
@@ -67,7 +64,7 @@ object SourceQueries {
     * engine speaks; predicate pushdown and column pruning apply on the
     * read-back exactly as with parquet. */
   def s9OrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "lineitem_orc")
+    val out = ScratchDirs.of("sources", dir, "lineitem_orc")
     Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
         col("l_extendedprice"))
@@ -90,7 +87,7 @@ object SourceQueries {
     * silently shrink the row count; PERMISSIVE + quarantine keeps the
     * feed auditable. */
   def s10PermissiveBadRecords(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "orders_bad_tsv")
+    val out = ScratchDirs.of("sources", dir, "orders_bad_tsv")
     Tables.orders(spark, dir)
       .select(concat(col("o_orderkey"), lit("\t"),
         when(col("o_orderkey") % 13 === 0, lit("notanumber"))
@@ -134,7 +131,7 @@ object SourceQueries {
   /** S4+K3: sorted-unique line-list text sink → line scan (the
     * mesh-tag artifact shape: one value per line). */
   def s4LineListRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "types_txt")
+    val out = ScratchDirs.of("sources", dir, "types_txt")
     Tables.part(spark, dir)
       .select(concat(lit("TYPE:"), col("p_type")).as("value"))
       .distinct().orderBy(col("value"))
@@ -169,7 +166,7 @@ object SourceQueries {
     * distributed and no byte ever crosses the driver. */
   def k4FileConcatPublish(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val outDir = tmp(dir, "k4_parts")
+    val outDir = ScratchDirs.of("sources", dir, "k4_parts")
     Tables.supplier(spark, dir)
       .select(col("s_name").as("value"))
       .repartitionByRange(4, col("value"))
@@ -179,7 +176,7 @@ object SourceQueries {
     val parts = fs.listStatus(new Path(outDir))
       .filter(_.getPath.getName.startsWith("part-"))
       .sortBy(_.getPath.getName)
-    val single = new Path(tmp(dir, "k4_published") + "/all.txt")
+    val single = new Path(ScratchDirs.of("sources", dir, "k4_published", "all.txt"))
     val out = fs.create(single, true)
     try parts.foreach { p =>
       val in = fs.open(p.getPath)
@@ -243,7 +240,7 @@ object SourceQueries {
     * column, so the manifest is computed at the source, not trusted
     * from the producer — the other half of the P1 provenance story. */
   def s5IngestManifest(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "ingest_feed")
+    val out = ScratchDirs.of("sources", dir, "ingest_feed")
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), (col("o_orderkey") % 4).as("shard"))
       // explicit repartition on the shard key: each shard lives in
@@ -273,7 +270,7 @@ object SourceQueries {
     * The aggregate pins both that all rows arrive and that each row's
     * source file is attributed correctly. */
   def u1UnionAll(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "union_feed")
+    val out = ScratchDirs.of("sources", dir, "union_feed")
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"), col("l_quantity"))
     li.filter(col("l_linenumber") <= 4).write.mode("overwrite").parquet(s"$out/baseline")
@@ -304,7 +301,7 @@ object SourceQueries {
     * standard additive-evolution path (the footer-schema union is
     * planning-time work; no data rewrite). */
   def s11SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "orders_evolved")
+    val out = ScratchDirs.of("sources", dir, "orders_evolved")
     val o = Tables.orders(spark, dir)
     o.filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -327,7 +324,7 @@ object SourceQueries {
     * 2-char prefix; the oracle replays the whole thing from
     * `documents` directly (the staging is deterministic). */
   def s12CustomSource(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "linelist_v2")
+    val out = ScratchDirs.of("sources", dir, "linelist_v2")
     Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("value"))
       .filter(col("value") =!= "").distinct().orderBy(col("value"))
@@ -349,7 +346,7 @@ object SourceQueries {
     * this is the parquet-footer-stats shape for a footerless format:
     * the scan moves file-count rows, not line-count rows. */
   def s14AggPushdown(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "linelist_aggpush")
+    val out = ScratchDirs.of("sources", dir, "linelist_aggpush")
     Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("value"))
       .filter(col("value") =!= "").distinct().orderBy(col("value"))
@@ -368,7 +365,7 @@ object SourceQueries {
     * the oracle's direct replay, which proves the sink published
     * exactly one visible copy of every row (no temp leakage, no loss). */
   def s13CustomSink(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp(dir, "linelist_sink")
+    val out = ScratchDirs.of("sources", dir, "linelist_sink")
     Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("value"))
       .filter(col("value") =!= "").distinct()
@@ -400,7 +397,7 @@ object SourceQueries {
         lit("=HYPERLINK(\"https://example.org/brand/"), col("p_brand"),
         lit("\",\""), col("p_brand"), lit("\")")))
       .orderBy(col("p_brand"))
-    val out = tmp(dir, "k2_excel") + "/report.xlsx"
+    val out = ScratchDirs.of("sources", dir, "k2_excel", "report.xlsx")
     Xlsx.write(report, out, formulaColumns = Set("link"))
     Xlsx.read(spark, out).select(
       col("p_brand"),

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.Tables
+import graft.{ScratchDirs, Tables}
 import graft.streaming.StreamOps
 
 /** Streaming pack (SURVEY §2.9): the incremental layer driven through
@@ -24,24 +24,18 @@ import graft.streaming.StreamOps
   */
 object StreamingQueries {
 
-  /** Recursive delete for per-run scratch roots (feeds, checkpoints,
-    * state/index targets). */
-  private def rmrf(p: java.io.File): Unit = {
-    if (p.isDirectory) p.listFiles().foreach(rmrf)
-    p.delete(); ()
-  }
-
-  /** Stage a parquet table into a stream-feed dir, handling BOTH
-    * shipped layouts: the driver's single-file testdata tables AND a
-    * Spark-written DIRECTORY of part files (ScaleCorpus's 10× corpora).
-    * A naive Files.copy of a directory copies only the empty directory
-    * entry, and the feed silently goes blank — the t7 drain guard
-    * caught exactly that on the first streaming scale arm (r13). Part
-    * files keep their sorted order under a name prefix so multi-part
-    * corpora become a deterministic multi-batch feed (the realistic
-    * at-scale ingest shape: maxFilesPerTrigger batches). */
-  private def stageTable(dir: String, table: String, feed: java.nio.file.Path): Unit = {
+  /** Stage a parquet table into a stream-feed dir (made if absent),
+    * handling BOTH shipped layouts: the harness's single-file testdata
+    * tables AND a Spark-written DIRECTORY of part files (ScaleCorpus's
+    * 10× corpora). A naive Files.copy of a directory copies only the
+    * empty directory entry, and the feed silently goes blank — the t7
+    * drain guard caught exactly that on the first streaming scale arm
+    * (r13). Part files keep their sorted order under a name prefix so
+    * multi-part corpora become a deterministic multi-batch feed (the
+    * realistic at-scale ingest shape: maxFilesPerTrigger batches). */
+  private def stageTable(dir: String, table: String, feedDir: String): Unit = {
     val src = java.nio.file.Paths.get(s"$dir/$table")
+    val feed = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feedDir))
     // clear THIS table's previously staged files first (r13 ADVICE): a
     // corpus rebuilt at the same path with fewer part files (or
     // switched between single-file and directory layout) would
@@ -128,7 +122,7 @@ object StreamingQueries {
                           (start: => StreamingQuery): Unit = {
     @annotation.tailrec
     def attempt(n: Int): Unit = {
-      rmrf(new java.io.File(ckpt))
+      ScratchDirs.clear(ckpt)
       start.awaitTermination()
       val staged = stagedFileNames(feed)
       require(staged.nonEmpty, s"$what has no staged feed files under $feed")
@@ -160,8 +154,8 @@ object StreamingQueries {
     * return the table. */
   private def drainToMemory(spark: SparkSession, dir: String, feed: String, name: String,
                             mode: String)(frame: DataFrame): DataFrame = {
-    val qname = s"${name}_${java.lang.Integer.toHexString(dir.hashCode)}"
-    val ckpt = graft.ScratchDirs.dir("stream", "checkpoints", qname)
+    val qname = s"${name}_${ScratchDirs.tag(dir)}"
+    val ckpt = ScratchDirs.of("stream", dir, "checkpoints", name)
     graft.Confs.withShufflePartitions(spark, StatePartitions) {
       drain(feed, ckpt, qname) {
         frame.writeStream.format("memory").queryName(qname).outputMode(mode)
@@ -242,14 +236,12 @@ object StreamingQueries {
     * its `ts` normalized to the µs TimestampType the event-time
     * operators need. Returns the feed dir and the stream. */
   private def stagedEventFeed(spark: SparkSession, dir: String): (String, DataFrame) = {
-    val feed = java.nio.file.Paths.get(
-      graft.ScratchDirs.dir("stream", dir.replaceAll("[^a-zA-Z0-9]", "_"), "events_feed"))
-    java.nio.file.Files.createDirectories(feed)
+    val feed = ScratchDirs.of("stream", dir, "events_feed")
     stageTable(dir, "events.parquet", feed)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = Tables.read(spark, dir, "events")
-    val stream = StreamOps.fileFeed(spark, feed.toString, raw, maxFilesPerTrigger = 1)
-    (feed.toString, stream.withColumn("ts", Tables.normalizeTs(stream.schema("ts").dataType)))
+    val stream = StreamOps.fileFeed(spark, feed, raw, maxFilesPerTrigger = 1)
+    (feed, stream.withColumn("ts", Tables.normalizeTs(stream.schema("ts").dataType)))
   }
 
   def t1StreamTumbling(spark: SparkSession, dir: String): DataFrame = {
@@ -375,15 +367,14 @@ object StreamingQueries {
     * terms from `documents` directly; equality proves the incremental
     * file-slice batches covered the listing exactly once. */
   def t10CustomSourceStream(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.ScratchDirs.dir("streaming",
-      dir.replaceAll("[^a-zA-Z0-9]", "_"), "linelist_stream")
+    val out = ScratchDirs.of("streaming", dir, "linelist_stream")
     Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("value"))
       .filter(col("value") =!= "").distinct()
       .repartition(3).write.mode("overwrite").text(out)
     val stream = spark.readStream.format("graft.sources.LineListSource")
       .option("path", out).option("maxFilesPerTrigger", "1").load()
-    val qname = "t10_custom_stream_" + java.lang.Integer.toHexString(dir.hashCode)
+    val qname = "t10_custom_stream_" + ScratchDirs.tag(dir)
     val q = stream.select(col("value"), col("len"))
       .writeStream.format("memory").queryName(qname)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -445,9 +436,7 @@ object StreamingQueries {
     * that avoids re-joining the full corpus per increment: each new doc
     * touches only its 8 buckets. */
   def t7StreamLshDedup(spark: SparkSession, dir: String): DataFrame = {
-    val feed = java.nio.file.Paths.get(
-      graft.ScratchDirs.dir("stream", dir.replaceAll("[^a-zA-Z0-9]", "_"), "docs_feed"))
-    java.nio.file.Files.createDirectories(feed)
+    val feed = ScratchDirs.of("stream", dir, "docs_feed")
     stageTable(dir, "documents.parquet", feed)
     val raw = Tables.documentsUnpinned(spark, dir)
     // drain in ≤4 micro-batches regardless of the corpus's part-file
@@ -456,8 +445,8 @@ object StreamingQueries {
     // first streaming scale arm), measuring file layout instead of
     // data volume — while a single mega-batch would stop exercising
     // the cross-batch bucket state this query exists to drive
-    val nFeedFiles = feed.toFile.listFiles().count(_.getName.endsWith(".parquet"))
-    val stream = StreamOps.fileFeed(spark, feed.toString, raw,
+    val nFeedFiles = new java.io.File(feed).listFiles().count(_.getName.endsWith(".parquet"))
+    val stream = StreamOps.fileFeed(spark, feed, raw,
       maxFilesPerTrigger = math.max(1, (nFeedFiles + 3) / 4))
     // constant ingest timestamp: the TTL machinery is armed (watermark,
     // per-bucket timeouts) but can never fire inside the drain, so the
@@ -468,7 +457,7 @@ object StreamingQueries {
     val pairs = StreamOps.lshCandidatePairs(spark, banded, failOnHotBucket = true)
       .toDF("id_a", "id_b")
     DedupQueries.verifyPairs(spark, dir,
-      drainToMemory(spark, dir, feed.toString, "t7_stream_lsh_dedup", "append")(pairs))
+      drainToMemory(spark, dir, feed, "t7_stream_lsh_dedup", "append")(pairs))
   }
 
   /** T3: idempotent re-publish — the busiest day's summary is written
@@ -482,7 +471,7 @@ object StreamingQueries {
     val summary = ev.filter(to_date(col("ts")) === lit(day))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 6).as("sum_value"))
-    val out = graft.ScratchDirs.dir("stream", dir.replaceAll("[^a-zA-Z0-9]", "_"), "republish")
+    val out = ScratchDirs.of("stream", dir, "republish")
     StreamOps.republish(summary, out, day)
     StreamOps.republish(summary, out, day) // second publish must replace, not append
     spark.read.parquet(s"$out/date=$day")
@@ -500,20 +489,19 @@ object StreamingQueries {
     * lexicographic (ts, event_id) max is associative — which is exactly
     * what makes the DuckDB replay possible. */
   def t8StreamMergeUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val feed = graft.ScratchDirs.dir("stream", tag, "upsert_feed")
-    val state = graft.ScratchDirs.dir("stream", tag, "upsert_state")
+    val feed = ScratchDirs.of("stream", dir, "upsert_feed")
+    val state = ScratchDirs.of("stream", dir, "upsert_state")
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     // ROUND-ROBIN staging (not user-hashed): keys must span batches or
     // the read-modify-write merge below would never see an existing row
     // for a key and the cross-batch path would go untested
     ev.repartition(4).write.mode("overwrite").parquet(feed)
-    val ckpt = graft.ScratchDirs.dir("stream", tag, "upsert_checkpoint")
+    val ckpt = ScratchDirs.of("stream", dir, "upsert_checkpoint")
     val stream = StreamOps.fileFeed(spark, feed, ev, maxFilesPerTrigger = 1)
     graft.Confs.withShufflePartitions(spark, StatePartitions) {
       drain(feed, ckpt, "t8_stream_merge_upsert") {
-        rmrf(new java.io.File(state)) // each attempt merges into an empty table
+        ScratchDirs.clear(state) // each attempt merges into an empty table
         stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           val sp = batch.sparkSession
@@ -581,8 +569,7 @@ object StreamingQueries {
     * per invocation (idempotent overwrite); both consumers read the
     * same files. Returns the feed dir and the stream. */
   private def stagedTwsFeed(spark: SparkSession, dir: String): (String, DataFrame) = {
-    val feed = graft.ScratchDirs.dir("stream",
-      dir.replaceAll("[^a-zA-Z0-9]", "_"), "tws_feed")
+    val feed = ScratchDirs.of("stream", dir, "tws_feed")
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"))
     ev.repartition(4).write.mode("overwrite").parquet(feed)
@@ -658,9 +645,8 @@ object StreamingQueries {
     * recovery); the final state is one max(struct) over BOTH sessions'
     * output, exactly as t11. */
   def t14CheckpointRecovery(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.ScratchDirs.dir("stream", tag, "ckpt_recovery")
-    rmrf(new java.io.File(base)) // fresh stage per invocation
+    // fresh stage per invocation
+    val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "ckpt_recovery"))
     val stage = s"$base/stage"; val feed = s"$base/feed"; val ckpt = s"$base/checkpoint"
     val out1 = s"$base/out_p1"; val out2 = s"$base/out_p2"
     val ev = Tables.events(spark, dir)
@@ -693,7 +679,7 @@ object StreamingQueries {
         // one attempt is the whole restart scenario, so a retry re-runs
         // both sessions from an empty checkpoint and feed
         drain(feed, ckpt, "t14_checkpoint_recovery") {
-          Seq(feed, out1, out2).foreach(p => rmrf(new java.io.File(p)))
+          Seq(feed, out1, out2).foreach(ScratchDirs.clear)
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))
           ship(firstHalf)
           session(out1).awaitTermination() // session 1: half the feed, then stop
@@ -741,9 +727,8 @@ object StreamingQueries {
     * micro-batches — a lost or replayed batch breaks the sum before it
     * breaks the count. */
   def t15StreamIvfIngest(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.ScratchDirs.dir("stream", tag, "ivf_ingest")
-    rmrf(new java.io.File(base)) // fresh feed + index + checkpoint per run
+    // fresh feed + index + checkpoint per run
+    val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "ivf_ingest"))
     val feed = s"$base/feed"; val index = s"$base/index"; val ckpt = s"$base/checkpoint"
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val (_, cents) = graft.ops.Similarity.ivfIndex(
@@ -754,7 +739,7 @@ object StreamingQueries {
     e.repartition(4).write.mode("overwrite").parquet(feed)
     val stream = StreamOps.fileFeed(spark, feed, e, maxFilesPerTrigger = 1)
     drain(feed, ckpt, "t15_stream_ivf_ingest") {
-      rmrf(new java.io.File(index))
+      ScratchDirs.clear(index)
       stream.withColumn("cluster", assign)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
@@ -794,9 +779,8 @@ object StreamingQueries {
     * ordering tracks the live index); this drain probes one frozen
     * version, as a production reader would. */
   def t16StreamContainment(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.ScratchDirs.dir("stream", tag, "containment_stream")
-    rmrf(new java.io.File(base)) // fresh feed + out + checkpoint per run
+    // fresh feed + out + checkpoint per run
+    val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "containment_stream"))
     val feed = s"$base/feed"; val out = s"$base/out"; val ckpt = s"$base/checkpoint"
     // the stored index artifacts, session-memoized (shared with the
     // batch incremental query — see DedupQueries.containmentIndex) and
@@ -811,7 +795,7 @@ object StreamingQueries {
     val stream = StreamOps.fileFeed(spark, feed, delta, maxFilesPerTrigger = 1)
     try {
       drain(feed, ckpt, "t16_stream_containment") {
-        rmrf(new java.io.File(out))
+        ScratchDirs.clear(out)
         stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
             publishBatch(
@@ -847,13 +831,12 @@ object StreamingQueries {
     * containment oracle. */
   def t17StreamCanonicalDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.expr.chemfunctions._
-    val sane = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val rendered = graft.Tables.part(spark, dir)
       .select(col("p_partkey").cast("long").as("seed"))
       .select(col("seed"), explode(array(lit(0), lit(1), lit(2))).as("variant"))
       .select(col("seed"), col("variant"),
         mol_from_seed(col("seed"), col("variant")).as("smiles"))
-    val feed = java.nio.file.Paths.get(graft.ScratchDirs.dir("stream", sane, "chem_feed"))
+    val feed = java.nio.file.Paths.get(ScratchDirs.of("stream", dir, "chem_feed"))
     java.nio.file.Files.createDirectories(feed)
     // ONE variant-partitioned write instead of three sequential
     // coalesce(1) passes (r14 optimization): each filtered pass re-ran
@@ -863,7 +846,7 @@ object StreamingQueries {
     // variant, and still leaves exactly one part file per variant dir
     // (a variant's rows all share one partition). Batch contents are
     // identical — (seed, smiles) rows of one rendering per file.
-    val stage = graft.ScratchDirs.dir("stream", sane, "chem_stage")
+    val stage = ScratchDirs.of("stream", dir, "chem_stage")
     rendered.repartition(3, col("variant"))
       .write.mode("overwrite").partitionBy("variant").parquet(stage)
     for (v <- 0 to 2) {
@@ -905,16 +888,15 @@ object StreamingQueries {
     * digests pin exactly-once delivery: a lost or replayed batch
     * breaks `epoch_digest` before it breaks any count. */
   def t18StreamShardAppend(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.ScratchDirs.dir("stream", tag, "shard_append")
-    rmrf(new java.io.File(base)) // fresh feed + delivery + checkpoint per run
+    // fresh feed + delivery + checkpoint per run
+    val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "shard_append"))
     val feed = s"$base/feed"; val delivery = s"$base/delivery"; val ckpt = s"$base/checkpoint"
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
     val delta = docs.filter(col("doc_id") % 2 === 1)
     delta.repartition(4).write.mode("overwrite").parquet(feed)
     val stream = StreamOps.fileFeed(spark, feed, delta, maxFilesPerTrigger = 1)
     drain(feed, ckpt, "t18_stream_shard_append") {
-      rmrf(new java.io.File(delivery))
+      ScratchDirs.clear(delivery)
       stream
         .select(col("doc_id"), CurationQueries.releaseShardId.as("shard_id"))
         .writeStream
@@ -950,9 +932,8 @@ object StreamingQueries {
     * exact-integer `order_digest` pins exactly-once delivery across
     * the drain (see [[drain]]). */
   def t19StreamRelease(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.ScratchDirs.dir("stream", tag, "release")
-    rmrf(new java.io.File(base)) // fresh feed + delivery + checkpoint per run
+    // fresh feed + delivery + checkpoint per run
+    val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "release"))
     val feed = s"$base/feed"; val delivery = s"$base/delivery"; val ckpt = s"$base/checkpoint"
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
     docs.repartition(4).write.mode("overwrite").parquet(feed)
@@ -966,7 +947,7 @@ object StreamingQueries {
     dropped.count()
     try {
       drain(feed, ckpt, "t19_stream_release") {
-        rmrf(new java.io.File(delivery))
+        ScratchDirs.clear(delivery)
         stream
           .filter(col("n_chars") >= CurationQueries.ReleaseMinChars)
           .join(dropped, Seq("doc_id"), "left_anti")
@@ -1011,9 +992,8 @@ object StreamingQueries {
     * micro-batch split equals the one-shot relation and t20 shares
     * `dedup_substring_incremental`'s DuckDB oracle verbatim. */
   def t20StreamSubstringDedup(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.ScratchDirs.dir("stream", tag, "substr_stream")
-    rmrf(new java.io.File(base)) // fresh feed + out + checkpoint per run
+    // fresh feed + out + checkpoint per run
+    val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "substr_stream"))
     val feed = s"$base/feed"; val out = s"$base/out"; val ckpt = s"$base/checkpoint"
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val indexGrams = DedupQueries
@@ -1024,7 +1004,7 @@ object StreamingQueries {
     val stream = StreamOps.fileFeed(spark, feed, delta, maxFilesPerTrigger = 1)
     try {
       drain(feed, ckpt, "t20_stream_substring_dedup") {
-        rmrf(new java.io.File(out))
+        ScratchDirs.clear(out)
         stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
             publishBatch(
@@ -1059,9 +1039,7 @@ object StreamingQueries {
   def t21IndexRetention(spark: SparkSession, dir: String): DataFrame = {
     val epochs = IndexEpochs
     val keep = IndexRetentionKeep
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.ScratchDirs.dir("stream", tag, "gram_index_retention")
-    rmrf(new java.io.File(base))
+    val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "gram_index_retention"))
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     var stored: DataFrame = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1135,9 +1113,7 @@ object StreamingQueries {
   def t22PostingsRetention(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.DedupQueries.ContainmentThreshold
     val keep = IndexRetentionKeep
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.ScratchDirs.dir("stream", tag, "postings_retention")
-    rmrf(new java.io.File(base))
+    val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "postings_retention"))
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     var stored: DataFrame = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

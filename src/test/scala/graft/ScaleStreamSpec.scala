@@ -41,11 +41,10 @@ class ScaleStreamSpec extends SparkSpecBase {
     val df = ScaleQueries.kCompaction(spark, sfDir)
     val rows = df.collect()
     assert(rows.nonEmpty)
-    val suffix = java.lang.Integer.toHexString(sfDir.hashCode)
     def parquets(p: String) =
       new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
-    val nIn = parquets(graft.ScratchDirs.dir("compact_in", suffix))
-    val nOut = parquets(graft.ScratchDirs.dir("compact_out", suffix))
+    val nIn = parquets(graft.ScratchDirs.of("compact_in", sfDir))
+    val nOut = parquets(graft.ScratchDirs.of("compact_out", sfDir))
     assert(nIn == 64, s"fragmented landing should have 64 shards, got $nIn")
     assert(nOut * 8 <= nIn, s"compaction too weak: $nIn -> $nOut files")
     // content equality against the canonical table
@@ -105,8 +104,7 @@ class ScaleStreamSpec extends SparkSpecBase {
   test("z-order layout prunes files on the SECOND dimension where linear cannot") {
     val zdir = ScaleQueries.writeZorder(spark, sfDir)
     // linear comparison layout: same file count, clustered by orderkey only
-    val ldir = graft.ScratchDirs.dir("zorder_linear",
-      java.lang.Integer.toHexString(sfDir.hashCode))
+    val ldir = graft.ScratchDirs.of("zorder_linear", sfDir)
     Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_returnflag"), col("l_quantity"))
       .repartitionByRange(16, col("l_orderkey"))
@@ -218,8 +216,7 @@ class ScaleStreamSpec extends SparkSpecBase {
       s"streamed index diverges from batch assignment: ${got.toSeq} vs ${want.toSeq}")
     // the index must land as a cluster-partitioned layout (the searchable
     // shape ann_ivf_partitioned prunes on) written across >= 4 micro-batches
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val idxDir = graft.ScratchDirs.dir("stream", tag, "ivf_ingest", "index")
+    val idxDir = graft.ScratchDirs.of("stream", sfDir, "ivf_ingest", "index")
     val idx = new java.io.File(idxDir)
     assert(idx.listFiles().exists(f => f.isDirectory && f.getName.startsWith("cluster=")),
       "index is not partitioned by cluster")
@@ -232,7 +229,7 @@ class ScaleStreamSpec extends SparkSpecBase {
       scan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)].*", "$1").nonEmpty,
       s"probe of the streamed index has no partition filters:\n$scan")
     val offsets = new java.io.File(
-      graft.ScratchDirs.dir("stream", tag, "ivf_ingest", "checkpoint", "offsets"))
+      graft.ScratchDirs.of("stream", sfDir, "ivf_ingest", "checkpoint", "offsets"))
     assert(offsets.listFiles().count(!_.getName.endsWith(".crc")) >= 4,
       "feed should drain in >= 4 micro-batches")
   }
@@ -245,9 +242,8 @@ class ScaleStreamSpec extends SparkSpecBase {
     // must equal the one-shot batch join exactly (pairs AND scores)
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
       "streamed containment diverges from the batch incremental relation")
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
     val offsets = new java.io.File(
-      graft.ScratchDirs.dir("stream", tag, "containment_stream", "checkpoint", "offsets"))
+      graft.ScratchDirs.of("stream", sfDir, "containment_stream", "checkpoint", "offsets"))
     assert(offsets.listFiles().count(!_.getName.endsWith(".crc")) >= 4,
       "delta should drain in >= 4 micro-batches")
   }

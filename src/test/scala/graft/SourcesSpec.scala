@@ -72,8 +72,7 @@ class SourcesSpec extends SparkSpecBase {
         && s.contains("pushedPrefix=s")),
       s"aggregation (with composed prefix filter) did not reach the reader: $scans")
     // the pushed result must equal the unpushed replay over the same files
-    val staged = spark.read.text(graft.ScratchDirs.dir("sources",
-        sfDir.replaceAll("[^a-zA-Z0-9]", "_"), "linelist_aggpush"))
+    val staged = spark.read.text(graft.ScratchDirs.of("sources", sfDir, "linelist_aggpush"))
       .filter(col("value").startsWith("s"))
     val expect = staged.agg(count(col("value")), min(col("value")), max(col("value")),
       max(length(col("value"))).cast("long")).collect()(0)
@@ -109,8 +108,7 @@ class SourcesSpec extends SparkSpecBase {
       s"prefix filter did not reach the reader: $scans")
     // value-only projection prunes the derived len column at the source
     val pruned = spark.read.format("graft.sources.LineListSource")
-      .option("path", graft.ScratchDirs.dir("sources",
-        sfDir.replaceAll("[^a-zA-Z0-9]", "_"), "linelist_v2"))
+      .option("path", graft.ScratchDirs.of("sources", sfDir, "linelist_v2"))
       .load().select("value")
     val prunedScans = scansOf(pruned.queryExecution.executedPlan)
     assert(prunedScans.exists(_.endsWith("columns=value")),
@@ -128,8 +126,7 @@ class SourcesSpec extends SparkSpecBase {
   test("s13 custom sink commits exactly the visible part files (no temp leakage)") {
     val row = graft.queries.SourceQueries.s13CustomSink(spark, sfDir).collect().head
     assert(row.getLong(0) > 0)
-    val dir = new java.io.File(graft.ScratchDirs.dir("sources",
-      sfDir.replaceAll("[^a-zA-Z0-9]", "_"), "linelist_sink"))
+    val dir = new java.io.File(graft.ScratchDirs.of("sources", sfDir, "linelist_sink"))
     val names = dir.listFiles().map(_.getName).filterNot(_.startsWith(".")).sorted.toSeq
     assert(names.nonEmpty && names.forall(_.startsWith("part-")),
       s"uncommitted or foreign files in sink dir: $names")
@@ -139,8 +136,7 @@ class SourcesSpec extends SparkSpecBase {
 
   test("t10 streaming connector drains in maxFilesPerTrigger-bounded microbatches") {
     import org.apache.spark.sql.functions._
-    val out = graft.ScratchDirs.dir("sources",
-      sfDir.replaceAll("[^a-zA-Z0-9]", "_"), "linelist_batched")
+    val out = graft.ScratchDirs.of("sources", sfDir, "linelist_batched")
     Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("value"))
       .filter(col("value") =!= "").distinct()
@@ -164,11 +160,9 @@ class SourcesSpec extends SparkSpecBase {
 
   test("t10 streaming connector resumes from its checkpoint without reprocessing") {
     import org.apache.spark.sql.functions._
-    val base = graft.ScratchDirs.dir("sources",
-      sfDir.replaceAll("[^a-zA-Z0-9]", "_"), "linelist_resume")
+    val base = graft.ScratchDirs.clear(graft.ScratchDirs.of("sources", sfDir, "linelist_resume"))
     val data = s"$base/data"
     val ckpt = s"$base/ckpt"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     new java.io.File(data).mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$data/part-00000"), "alpha\nbeta\n")

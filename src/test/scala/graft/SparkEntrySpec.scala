@@ -48,12 +48,18 @@ class SparkEntrySpec extends AnyFunSuite {
       s"README 'Current state' must read '$n queries, $n/$n oracle-ok' — update it")
   }
 
-  private def scalaSources(roots: String*): Seq[java.nio.file.Path] = {
+  /** The Scala sources under `roots`, other than the file `owner`,
+    * in which `pattern` occurs. */
+  private def hitsOutside(owner: String, pattern: scala.util.matching.Regex,
+                          roots: String*): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     roots.flatMap { root =>
       val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
+    }.filter { f =>
+      f.getFileName.toString != owner &&
+        pattern.findFirstIn(java.nio.file.Files.readString(f)).isDefined
     }
   }
 
@@ -61,10 +67,7 @@ class SparkEntrySpec extends AnyFunSuite {
     // every main and spec shares one session config, so a plan a dev
     // tool prints or a spec pins is the plan the bench runs
     val builder = "SparkSession\\.builder".r
-    val hits = scalaSources("src/main/scala", "src/test/scala").filter { f =>
-      f.getFileName.toString != "GraftSession.scala" &&
-        builder.findFirstIn(java.nio.file.Files.readString(f)).isDefined
-    }
+    val hits = hitsOutside("GraftSession.scala", builder, "src/main/scala", "src/test/scala")
     assert(hits.isEmpty, s"SparkSession built outside GraftSession in: ${hits.mkString(", ")}")
   }
 
@@ -76,11 +79,20 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(harnessRead.findFirstIn("""val n = spark.read.parquet(s"$sfDir/nation.parquet")""").isDefined)
     assert(harnessRead.findFirstIn("""spark.read.option("a", "b").parquet(Tables.path(dir, "x"))""").isDefined)
     assert(harnessRead.findFirstIn("""spark.read.parquet(s"$out/date=$day")""").isEmpty)
-    val hits = scalaSources("src/main/scala").filter { f =>
-      f.getFileName.toString != "Tables.scala" &&
-        harnessRead.findFirstIn(java.nio.file.Files.readString(f)).isDefined
-    }
+    val hits = hitsOutside("Tables.scala", harnessRead, "src/main/scala")
     assert(hits.isEmpty, s"harness tables read around Tables.parquet in: ${hits.mkString(", ")}")
+  }
+
+  test("only ScratchDirs derives a scratch name from a data dir") {
+    // a sanitized path aliases dirs and starts with a hidden `_`; a
+    // 32-bit hashCode collides: ScratchDirs.tag / ScratchDirs.of instead
+    val dirName = """\[\^a-zA-Z0-9\]|toHexString\(\s*[\w.]+\.hashCode""".r
+    val sanitizer = "[^a-zA-Z0-9" + "]"
+    assert(dirName.findFirstIn(s"""dir.replaceAll("$sanitizer", "_")""").isDefined)
+    assert(dirName.findFirstIn("java.lang.Integer.toHex" + "String(dir.hashCode)").isDefined)
+    assert(dirName.findFirstIn("java.lang.Long.toHexString(System.nanoTime())").isEmpty)
+    val hits = hitsOutside("ScratchDirs.scala", dirName, "src/main/scala", "src/test/scala")
+    assert(hits.isEmpty, s"scratch names derived around ScratchDirs in: ${hits.mkString(", ")}")
   }
 
   test("oracle coverage: EVERY registered query has a DuckDB oracle") {

@@ -247,8 +247,7 @@ class StreamOpsSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     val got = graft.queries.StreamingQueries.t8StreamMergeUpsert(spark, sfDir)
     // the feed really was multi-file → the merge ran across >1 microbatch
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val feedFiles = new java.io.File(graft.ScratchDirs.dir("stream", tag, "upsert_feed"))
+    val feedFiles = new java.io.File(graft.ScratchDirs.of("stream", sfDir, "upsert_feed"))
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(feedFiles >= 4, s"feed should be sharded, got $feedFiles files")
     val w = org.apache.spark.sql.expressions.Window

@@ -104,8 +104,7 @@ class TransformWithStateSpec extends SparkSpecBase {
     // and the two sessions genuinely split the work: session 1's sink
     // alone must NOT reach the final count for every key (it saw only
     // half the feed), i.e. session 2 contributed the rest from state
-    val p1 = graft.ScratchDirs.dir("stream",
-      sfDir.replaceAll("[^a-zA-Z0-9]", "_"), "ckpt_recovery", "out_p1")
+    val p1 = graft.ScratchDirs.of("stream", sfDir, "ckpt_recovery", "out_p1")
     val p1Max = spark.read.parquet(p1)
       .groupBy(col("user_id")).agg(max(col("n_events")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
