@@ -37,13 +37,12 @@ object Confs {
     *    documented-recommended setting; Spark's own doc calls the
     *    parallelism-first default a compromise "to avoid perf
     *    regression when enabling AQE"). Scale story: the advisory size
-    *    is the parameter (env `SPARK_GRAFT_ADVISORY_PARTITION`,
-    *    default Spark's 64m; a 100 TB deployment raises it to 256m per
-    *    guide §9) — partition COUNT then derives from data volume at
-    *    every scale instead of from the local core count. Stages whose
-    *    cost is CPU-per-row rather than bytes keep their explicit
-    *    `repartition(n, col)` pins (chem seeds, graph loops), which
-    *    AQE never coalesces.
+    *    is the parameter (left at Spark's 64m default; a 100 TB
+    *    deployment raises it to 256m per guide §9) — partition COUNT
+    *    then derives from data volume at every scale instead of from
+    *    the local core count. Stages whose cost is CPU-per-row rather
+    *    than bytes keep their explicit `repartition(n, col)` pins (chem
+    *    seeds, graph loops), which AQE never coalesces.
     *
     *  - FileOutputCommitter v2: commit each task's files straight into
     *    the destination on task commit instead of sequentially renaming
@@ -73,8 +72,6 @@ object Confs {
     *    error. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     .config("spark.buffer.pageSize", "1m")
 }

@@ -63,14 +63,11 @@ object GraftSession {
       } finally release(spark)
     }
 
-  /** Drops every block a query left behind: catalog caches, and the
-    * RDD-level blocks (`localCheckpoint`) that survive `clearCache`.
-    * Cached blocks accumulating across a many-query session age it and
-    * skew the later queries. */
-  def release(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-  }
+  /** Drops every block a query left behind; piled up across a session
+    * they age it and skew the later queries. The one lifetime rule: a
+    * query's caches are catalog-cache entries, which this clears; a
+    * bounded lineage cut is a [[LocalFrame]], which holds no blocks. */
+  def release(spark: SparkSession): Unit = spark.catalog.clearCache()
 
   /** Warm the JVM/codegen/parquet-reader paths once so the first timed
     * query doesn't absorb session startup: exercise the GENERIC

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.chaining._
 
 /** Session-scoped parquet memo for SHARED derived tables: expensive
   * pipelines whose output is the common INPUT of several registered
@@ -20,13 +21,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * An artifact lives at `memo/<sessionTag>/<kind>/<ScratchDirs.tag(dir)>`:
   * the per-JVM tag means a fresh session (fresh data) never reads a
-  * stale file, and [[ScratchDirs.tag]] means two data dirs never alias
-  * one artifact. Assumes a dir's contents are immutable within a
-  * session, which the harness guarantees (testdata regen restarts the
-  * JVM). */
+  * stale file, so the JVM deletes its own tag's dir on exit (never
+  * another's: JVMs share the root); [[ScratchDirs.tag]] means two data
+  * dirs never alias one artifact. Assumes a dir's contents are
+  * immutable within a session, which the harness guarantees (testdata
+  * regen restarts the JVM). */
 object SessionMemo {
   private val memo = new ConcurrentHashMap[(String, String, String), CompletableFuture[Any]]()
-  private lazy val sessionTag = java.lang.Long.toHexString(System.nanoTime())
+  private lazy val sessionTag = java.lang.Long.toHexString(System.nanoTime()).tap(t =>
+    sys.addShutdownHook(ScratchDirs.clear(ScratchDirs.dir("memo", t))))
 
   /** `build` once per (`space`, `kind`, `dir`) key: the first caller
     * builds, concurrent callers wait on its future. */

@@ -84,17 +84,12 @@ object Similarity {
       assigned = df.withColumn("cluster",
         nearestCluster(roundedCentroids(assigned, vecCol), col(vecCol)))
     }
-    // collect the k-row centroid table into a local relation (k × dim
-    // doubles, the same model-parameter transfer nearestCluster makes):
-    // every consumer of `cents` — the nprobe probe pick, the
-    // recall/drift contracts' joins, the partitioned write's pruning
-    // collect — otherwise re-derives the full centroid aggregation
-    // lineage (corpus scan + posexplode + 2 exchanges) PER REFERENCE in
-    // its plan. A local relation holds no cached blocks, so the plan
-    // stays executable after GraftSession.release drops them.
-    val cents = roundedCentroids(assigned, vecCol)
-    (assigned, df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(cents.collect(): _*), cents.schema))
+    // the k-row centroid table as a local relation (k × dim doubles, the
+    // transfer nearestCluster makes): otherwise every consumer — the
+    // nprobe probe pick, the recall/drift contracts' joins, the
+    // partitioned write's pruning collect — re-derives the centroid
+    // lineage (corpus scan + posexplode + 2 exchanges) PER REFERENCE
+    (assigned, graft.LocalFrame.of(roundedCentroids(assigned, vecCol), k, "k centroids"))
   }
 
   /** Literal-argmax nearest-centroid assignment: collect the (tiny)

@@ -631,16 +631,12 @@ object DedupQueries {
   /** (node, comp) for every node of the pair graph `edges` (id_a, id_b):
     * comp is the smallest doc_id of the node's connected component,
     * the oracle's min-label closure. One union-find on the driver over
-    * the collected edges; the collect stops at `maxEdges` + 1 rows, so
-    * an over-bound graph fails before it is held. The labels come back
-    * as a local relation, so consumers hold no cached blocks and no
-    * lineage. */
+    * at most `maxEdges` collected edges ([[graft.LocalFrame.rows]]);
+    * the labels come back as a local relation. */
   private[graft] def componentLabels(edges: DataFrame,
                                      maxEdges: Int = MaxComponentEdges): DataFrame = {
-    val got = edges.select(col("id_a"), col("id_b")).limit(maxEdges + 1).collect()
-    if (got.length > maxEdges)
-      throw new IllegalStateException(s"near-dup pair graph has more than " +
-        s"$maxEdges edges (MaxComponentEdges); component labels are built on the driver")
+    val got = graft.LocalFrame.rows(edges.select(col("id_a"), col("id_b")), maxEdges,
+      "MaxComponentEdges, near-dup pair graph edges")
     val (a, b) = (got.map(_.getLong(0)), got.map(_.getLong(1)))
     // union-find over sorted-id indices: index order is id order, so
     // linking the larger root under the smaller roots each set at its min
@@ -661,14 +657,18 @@ object DedupQueries {
       java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), ids(find(i)))): _*), schema)
   }
 
+  /** The graph loops' lineage cut: a frame of the symmetrized pair
+    * graph's edges or nodes (at most 2 × [[MaxComponentEdges]] rows). */
+  private def graphCut(df: DataFrame): DataFrame =
+    graft.LocalFrame.of(df, 2 * MaxComponentEdges, "2 * MaxComponentEdges")
+
   val PagerankIters = 10
 
   /** Truncate the pagerank lineage every this many iterations: an
     * unrolled rank chain grows the logical plan linearly and the
     * optimizer's cost superlinearly, so past ~20 iterations planning
-    * time dominates. `localCheckpoint` cuts the plan back to a leaf at
-    * executor-memory cost only (no HDFS round-trip); ranks are tiny
-    * (one row per node of the pair graph). */
+    * time dominates. [[graphCut]] makes the ranks (one row per node of
+    * the pair graph) a leaf again. */
   val PagerankCheckpointEvery = 8
 
   /** PageRank over the near-dup pair graph (net-new): centrality of
@@ -691,7 +691,7 @@ object DedupQueries {
       .select(col("id_a"), col("id_b")))
 
   /** The iteration loop runs NARROW (8 shuffle partitions) and is fully
-    * materialized inside that setting via a final localCheckpoint: the
+    * materialized inside that setting via a final [[graphCut]]: the
     * edge frame is the near-dup pair set — orders of magnitude smaller
     * than the corpus — so at the session's fact-tuned width each of the
     * 10 iterations paid ~3 stages of near-empty-task scheduling (this
@@ -728,17 +728,14 @@ object DedupQueries {
             array_sort(collect_list(col("pr") / col("deg"))), lit(0.0),
             (a, x) => a + x), 9).as("pr"))
         // bound the unrolled lineage (see [[PagerankCheckpointEvery]]);
-        // values are identical — checkpointing only cuts the plan
+        // values are identical — the cut only shortens the plan
         if (i % PagerankCheckpointEvery == 0 && i < iters)
-          ranks = ranks.localCheckpoint()
+          ranks = graphCut(ranks)
       }
       // materialize the LAST iterations under the narrow setting too —
-      // the caller sees a checkpoint leaf, not a tail of wide shuffles
-      val out = ranks.select(col("node").as("doc_id"), col("pr")).localCheckpoint()
-      // the checkpoint leaf no longer reads through `ed` — drop it now
-      // (leaving it persisted leaked the edge frame for the session
-      // lifetime in suites that call this repeatedly)
-      ed.unpersist()
+      // the caller sees a local relation, not a tail of wide shuffles
+      val out = graphCut(ranks.select(col("node").as("doc_id"), col("pr")))
+      ed.unpersist() // `out` no longer reads through the edge frame
       out
     }
 
@@ -885,24 +882,22 @@ object DedupQueries {
     * clusters survive, incidental one-off pairs peel away). Each round
     * is one degree aggregate + two semi-join filters over the EDGE
     * set; like the other graph loops the shuffle width is sized to
-    * edge volume, not corpus volume, and `localCheckpoint` keeps the
+    * edge volume, not corpus volume, and [[graphCut]] keeps the
     * per-round plan a leaf. At 100 TB the peel is iterations ×
     * O(|E|) with |E| the near-dup pairs only — orders of magnitude
     * under the corpus — and every join is an equi-join on node id. */
   def graphKcore(spark: SparkSession, dir: String): DataFrame = {
     val pairs = exactPairs(spark, dir).select(col("id_a"), col("id_b"))
     graft.Confs.withShufflePartitions(spark, 8) {
-      var ed = pairs.union(pairs.select(col("id_b"), col("id_a")))
-        .toDF("s", "d").localCheckpoint()
+      var ed = graphCut(pairs.union(pairs.select(col("id_b"), col("id_a"))).toDF("s", "d"))
       for (_ <- 1 to KcorePeels) {
         val keep = ed.groupBy(col("s")).agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= KcoreK).select(col("s"))
-        ed = ed.join(keep, "s")
+        ed = graphCut(ed.join(keep, "s")
           .join(keep.select(col("s").as("d")), "d")
-          .select(col("s"), col("d")).localCheckpoint()
+          .select(col("s"), col("d")))
       }
-      ed.groupBy(col("s").as("doc_id"))
-        .agg(count(lit(1)).as("deg_core")).localCheckpoint()
+      graphCut(ed.groupBy(col("s").as("doc_id")).agg(count(lit(1)).as("deg_core")))
     }
   }
 

@@ -371,12 +371,17 @@ object SimilarityQueries {
     // convention); each round = mean-per-(m, code, j) + re-assignment.
     // Encoding (argmin codeword) uses an ordered d2 fold over the 8
     // dims → bit-identical across engines.
-    def codebookFrom(assign: DataFrame): DataFrame =
+    // each round's codebook is MATERIALIZED (a local relation) before
+    // the next round references it: without the cut, round r's plan
+    // re-derives every earlier round's aggregation chain per reference
+    // and the final plan carries the whole training lineage ~4×
+    def codebookFrom(assign: DataFrame): DataFrame = graft.LocalFrame.of(
       dims.join(assign, Seq("vec_id", "m"))
         .groupBy(col("m"), col("code"), col("j")).agg(round(avg(col("x")), 9).as("c"))
         .groupBy(col("m"), col("code"))
         .agg(array_sort(collect_list(struct(col("j"), col("c")))).as("jc"))
-        .select(col("m"), col("code"), transform(col("jc"), _.getField("c")).as("cv"))
+        .select(col("m"), col("code"), transform(col("jc"), _.getField("c")).as("cv")),
+      PqSubspaces * PqCodes, "PqSubspaces * PqCodes")
     def assignFrom(cb: DataFrame): DataFrame =
       sub.join(broadcast(cb), Seq("m"))
         .withColumn("d2", aggregate(
@@ -391,16 +396,10 @@ object SimilarityQueries {
         .select(col("vec_id"), col("m"), col("mc.code").as("code"))
     var assign = sub.select(col("vec_id"), col("m"),
       (col("vec_id") % PqCodes).cast("int").as("code"))
-    // each round's codebook is MATERIALIZED (128 rows) before the next
-    // round references it: without the cut, round r's plan re-derives
-    // every earlier round's aggregation chain per reference and the
-    // final plan carries the whole training lineage ~4× (r14
-    // optimization; localCheckpoint is within the timed query — the
-    // build still runs from the parquet inputs on every invocation)
-    var cbv: DataFrame = codebookFrom(assign).localCheckpoint()
+    var cbv = codebookFrom(assign)
     for (_ <- 1 until PqLloydSteps) {
       assign = assignFrom(cbv)
-      cbv = codebookFrom(assign).localCheckpoint()
+      cbv = codebookFrom(assign)
     }
     val cb2 = cbv.withColumn("cn2",
       aggregate(zip_with(col("cv"), col("cv"), (a, b) => a * b),

@@ -93,12 +93,25 @@ class SimilarityQueriesSpec extends SparkSpecBase {
     }
   }
 
-  test("IVF search stays executable after the session releases cached blocks") {
-    // the centroid table must not live in blocks that release() drops
-    // and nothing can recompute (a localCheckpoint did)
-    val df = SimilarityQueries.queries("ann_ivf_topk")(spark, sfDir)
-    GraftSession.release(spark)
-    assert(df.count() > 0)
+  test("queries with a lineage cut stay executable after the session releases cached blocks") {
+    // a cut must not live in blocks that release() drops and nothing
+    // can recompute (a localCheckpoint did)
+    for (name <- Seq("ann_ivf_topk", "ann_pq_topk", "ann_pq_recall",
+                     "graph_pagerank", "graph_kcore")) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      GraftSession.release(spark)
+      assert(df.count() > 0, s"$name returned 0 rows")
+    }
+  }
+
+  test("LocalFrame: over maxRows fails naming the bound; within it, same rows and schema") {
+    val df = spark.range(10).selectExpr("id", "cast(id * 2 AS int) AS twice")
+    val err = intercept[IllegalStateException](LocalFrame.of(df, 5, "TenRowBound"))
+    assert(err.getMessage.contains("TenRowBound"), err.getMessage)
+    val five = df.filter(col("id") < 5)
+    val local = LocalFrame.of(five, 5, "TenRowBound")
+    assert(local.schema == five.schema)
+    assert(local.collect().toSeq.sortBy(_.getLong(0)) == five.collect().toSeq.sortBy(_.getLong(0)))
   }
 
   test("LSH near-dup achieves >=80% recall vs exact all-pairs") {

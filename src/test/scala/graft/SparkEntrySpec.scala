@@ -95,6 +95,16 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(hits.isEmpty, s"scratch names derived around ScratchDirs in: ${hits.mkString(", ")}")
   }
 
+  test("no src/main code checkpoints a lineage") {
+    // a checkpoint's blocks cannot be recomputed, so a plan reading them
+    // breaks once GraftSession.release drops them: LocalFrame instead
+    val checkpoint = """localCheckpoint\(|\.checkpoint\(""".r
+    assert(checkpoint.findFirstIn("ranks = ranks.localCheckpoint()").isDefined)
+    assert(checkpoint.findFirstIn("df.checkpoint(eager = false)").isDefined)
+    val hits = hitsOutside("", checkpoint, "src/main/scala")
+    assert(hits.isEmpty, s"lineage checkpointed in: ${hits.mkString(", ")}")
+  }
+
   test("oracle coverage: EVERY registered query has a DuckDB oracle") {
     // round 3 closed the last rows-only gaps: the former hash-seeded
     // five (minhash-LSH, simhash, sign-bucket LSH, IVF, winnowing) now
