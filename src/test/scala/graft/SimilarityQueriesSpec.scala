@@ -93,15 +93,21 @@ class SimilarityQueriesSpec extends SparkSpecBase {
     }
   }
 
-  test("queries with a lineage cut stay executable after the session releases cached blocks") {
-    // a cut must not live in blocks that release() drops and nothing
-    // can recompute (a localCheckpoint did)
-    for (name <- Seq("ann_ivf_topk", "ann_pq_topk", "ann_pq_recall",
-                     "graph_pagerank", "graph_kcore")) {
+  // a lineage cut must not live in blocks that release() drops and
+  // nothing can recompute (a localCheckpoint did)
+  private def runsAfterRelease(names: String*): Unit =
+    for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       GraftSession.release(spark)
       assert(df.count() > 0, s"$name returned 0 rows")
     }
+
+  test("IVF search stays executable after the session releases cached blocks") {
+    runsAfterRelease("ann_ivf_topk")
+  }
+
+  test("PQ and graph cuts stay executable after the session releases cached blocks") {
+    runsAfterRelease("ann_pq_topk", "ann_pq_recall", "graph_pagerank", "graph_kcore")
   }
 
   test("LocalFrame: over maxRows fails naming the bound; within it, same rows and schema") {
