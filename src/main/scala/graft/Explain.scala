@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 
 import java.nio.charset.StandardCharsets
@@ -15,7 +15,8 @@ import java.nio.file.{Files, Paths}
   *
   *   dev/run_main.sh graft.Explain census
   *     one line per query: exchanges, join strategies, SortAggregates,
-  *     codegen stages; `!!` flags cartesians and SortAggregates
+  *     codegen stages, and the Spark jobs started while the query was
+  *     built (`eager`); `!!` flags cartesians and SortAggregates
   *   dev/run_main.sh graft.Explain plan [outDir suffix]
   *     `explain("formatted")` to stdout, or to `outDir/<query>_<suffix>.txt`
   *   dev/run_main.sh graft.Explain jobs
@@ -51,6 +52,23 @@ object Explain {
     ))
   }
 
+  /** The census of the plan `build` returns, plus `eager`: the Spark
+    * jobs started while building it, which the returned plan does not
+    * show (the bus is drained before and after, as in [[runLabelled]]). */
+  def built(spark: SparkSession)(build: => DataFrame): Census = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(counter)
+    val df = try { val df = build; ListenerBridge.drainListenerBus(sc); df }
+      finally sc.removeSparkListener(counter)
+    val c = census(df.queryExecution.executedPlan)
+    c.copy(counts = c.counts :+ ("eager" -> jobs.get))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = GraftSession.sfDir
     val spark = GraftSession.build()
@@ -58,7 +76,7 @@ object Explain {
       case List("census") =>
         spark.sparkContext.setLogLevel("ERROR")
         GraftSession.eachQuery(spark, "census") { (name, fn) =>
-          val c = census(fn(spark, sfDir).queryExecution.executedPlan)
+          val c = built(spark)(fn(spark, sfDir))
           println(f"[audit] $name%-28s ${c.line}")
         }
       case "plan" :: out if out.isEmpty || out.size == 2 =>

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 class ExplainSpec extends SparkSpecBase {
 
   private def censusOf(name: String): Explain.Census =
-    try Explain.census(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+    try Explain.built(spark)(SparkEntry.queries(name)(spark, sfDir))
     finally GraftSession.release(spark)
 
   test("census: j1 broadcasts its dim join, d1 hash-aggregates") {
@@ -19,6 +19,14 @@ class ExplainSpec extends SparkSpecBase {
     assert(j1("bhj") >= 1 && !j1.warnings.contains("CARTESIAN"), j1.line)
     val d1 = censusOf("d1_classify_aggregate")
     assert(!d1.warnings.contains("SORT_AGG"), d1.line)
+  }
+
+  test("census: eager counts the jobs a query starts while it is built") {
+    // pagerank's loop runs at construct time; the plan it returns is a scan
+    val pr = censusOf("graph_pagerank")
+    assert(pr("eager") > 0 && pr.line.contains(s"eager=${pr("eager")}"), pr.line)
+    val j1 = censusOf("j1_dim_join_distinct")
+    assert(j1("eager") == 0 && !j1.line.contains("eager"), j1.line)
   }
 
   test("census flags a SortAggregate and a cartesian (negative control)") {
