@@ -63,8 +63,10 @@ object Explain {
     }
     ListenerBridge.drainListenerBus(sc)
     sc.addSparkListener(counter)
-    val df = try { val df = build; ListenerBridge.drainListenerBus(sc); df }
-      finally sc.removeSparkListener(counter)
+    val df = try build finally {
+      ListenerBridge.drainListenerBus(sc)
+      sc.removeSparkListener(counter)
+    }
     val c = census(df.queryExecution.executedPlan)
     c.copy(counts = c.counts :+ ("eager" -> jobs.get))
   }

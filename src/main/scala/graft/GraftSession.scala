@@ -64,9 +64,10 @@ object GraftSession {
     }
 
   /** Drops every block a query left behind; piled up across a session
-    * they age it and skew the later queries. The one lifetime rule: a
-    * query's caches are catalog-cache entries, which this clears; a
-    * bounded lineage cut is a [[LocalFrame]], which holds no blocks. */
+    * they age it and skew the later queries. It frees the frames a
+    * query made with [[Materialize.cached]] (catalog-cache entries);
+    * the other forms of the [[Materialize]] policy hold no blocks past
+    * their query. */
   def release(spark: SparkSession): Unit = spark.catalog.clearCache()
 
   /** Warm the JVM/codegen/parquet-reader paths once so the first timed

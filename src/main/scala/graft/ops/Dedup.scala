@@ -42,21 +42,6 @@ object Dedup {
     when(size(tokens) >= n, grams).otherwise(array().cast("array<string>"))
   }
 
-  /** Sorted distinct 60-bit shingle-hash array — the canonical hashed
-    * shingle-set representation both dedup queries join and verify on.
-    * Hashed with the ORACLE-EXPRESSIBLE [[graft.expr.TextHash.poly61]]
-    * (not xxhash64) so the MinHash/LSH pipeline built on these hashes
-    * has an exact DuckDB twin the driver can hash-check.
-    *
-    * This is the COMPOSED reference form (HOF lambda per gram) — the
-    * hot path uses the fused equivalent
-    * `array_sort(array_distinct(word_gram_poly61(tokens, n)))`
-    * ([[graft.expr.TextHash.wordGramPoly61]]), which skips the gram
-    * strings and the interpreted lambda; KernelProps pins the two
-    * bit-equal. */
-  def shingleHashes(grams: Column): Column =
-    array_sort(array_distinct(transform(grams, g => graft.expr.hashfunctions.poly61(g))))
-
   /** Exact set Jaccard from two shingle arrays — integer set sizes, so
     * the double division is bit-identical across engines. */
   def jaccard(a: Column, b: Column): Column = {

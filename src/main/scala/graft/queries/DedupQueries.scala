@@ -42,22 +42,14 @@ object DedupQueries {
     * intermediate array, no interpreted per-element lambdas — the
     * scan-stage shape that matters when this runs over 100 TB of text.
     * The short-doc filter stays in the cheap token-count form BEFORE
-    * the hash projection so it pushes down to a single split call.
-    *
-    * The cache is materialized (count) BEFORE consumers fan out: the
-    * index table feeds several join branches, and under AQE those
-    * stages otherwise race to compute the same cached partitions
-    * concurrently (duplicated shingling work + block-lock contention). */
+    * the hash projection so it pushes down to a single split call. */
   private[graft] def shingleTable(spark: SparkSession, dir: String): DataFrame = {
     import graft.expr.hashfunctions.word_gram_poly61
-    val sh = Tables.documents(spark, dir)
+    graft.Materialize.cached(Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= ShingleN)
       .select(col("doc_id"),
-        array_sort(array_distinct(word_gram_poly61(col("ws"), ShingleN))).as("hs"))
-      .persist()
-    sh.count()
-    sh
+        array_sort(array_distinct(word_gram_poly61(col("ws"), ShingleN))).as("hs")))
   }
 
   /** A1/exact dedup: sha256 content digest → canonical (min) doc_id +
@@ -152,14 +144,10 @@ object DedupQueries {
     // (array_intersect is order-independent) — shuffle joins keyed on
     // doc_id (linear in candidates; the 100 TB shape, and no
     // driver-side collect of the persisted shingle table).
-    // rarestFirst is persisted (like shingleTable; Verify/Bench clear
-    // the cache per query): its df-join + per-doc re-sort subtree sits
+    // rarestFirst is persisted: its df-join + per-doc re-sort subtree sits
     // on BOTH sides of the prefix self-join, and exchange reuse is not
     // guaranteed to cover it once AQE re-plans.
-    val ordered = rarestFirst(sh).persist()
-    ordered.count()
-    val cand = ppjoinCandidates(ordered)
-    cand
+    ppjoinCandidates(graft.Materialize.cached(rarestFirst(sh)))
       .join(sh.select(col("doc_id").as("id_a"), col("hs").as("hs_a")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("hs").as("hs_b")), "id_b")
       .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b"))).cast("double"))
@@ -227,12 +215,8 @@ object DedupQueries {
     // the 32-permutation min-aggregation exchange (the pipeline's only
     // corpus-sized shuffle). 16 band rows × 16 bytes per doc is the
     // stored-index footprint a production LSH pipeline persists anyway
-    // (the dedupIncremental scaladoc's "stored table" IS this). Same
-    // persist discipline as ngramPairsFrom's rarest-first table; the
-    // registered query still computes everything from parquet per
-    // invocation (plan: dedup_minhash_lsh 14 → 8 Exchange).
-    val banded = bandedDocs(sh).persist()
-    banded.count()
+    // (the dedupIncremental scaladoc's "stored table" IS this).
+    val banded = graft.Materialize.cached(bandedDocs(sh))
     verifyAgainst(minhashCandidates(banded, BandBucketCap), sh)
   }
 
@@ -303,11 +287,9 @@ object DedupQueries {
     * t7_stream_lsh_dedup. */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val sh = shingleTable(spark, dir)
-    // materialized for the same reason as minhashPairsFrom (r15): the
-    // delta and index legs are two filters of ONE band index — uncached,
-    // each leg re-ran the full signature build
-    val banded = bandedDocs(sh).persist()
-    banded.count()
+    // the delta and index legs are two filters of ONE band index —
+    // uncached, each leg re-ran the full signature build
+    val banded = graft.Materialize.cached(bandedDocs(sh))
     val delta = banded.filter(col("doc_id") % 2 === 1)
       .select(col("band_val"), col("doc_id").as("id_a"))
     val index = banded.filter(col("doc_id") % 2 === 0)
@@ -456,10 +438,9 @@ object DedupQueries {
     }
 
   private def simhashPairsLive(spark: SparkSession, dir: String): DataFrame = {
-    val s = Tables.documents(spark, dir)
-      .select(col("doc_id"), simhash64(split(col("text"), " ")).as("sh"))
-      .persist()
-    s.count() // materialize before the stats and bucket-join branches fan out
+    // read by the bit-ranking stats and both bucket-join branches
+    val s = graft.Materialize.cached(Tables.documents(spark, dir)
+      .select(col("doc_id"), simhash64(split(col("text"), " ")).as("sh")))
     val layout = graft.SessionMemo.value("simhash_bit_ranking", dir)(simhashBitRanking(s))
       .map(simhashChunksFromRanking).getOrElse(simhashChunkExprs(col("sh")))
     simhashVerifiedPairs(s, SimhashBucketCap, layout)
@@ -707,36 +688,35 @@ object DedupQueries {
       // hash-partition the persisted edge frame on the join key: each
       // iteration then joins against it in place (only the 1-row-per-node
       // rank frame moves) and the groupBy(d) is the iteration's one shuffle
-      val ed = edges.join(deg, "s").repartition(col("s")).persist()
-      val n = ed.select(col("s")).distinct().count() // one scalar: node count
-      var ranks = ed.select(col("s").as("node")).distinct()
-        .select(col("node"), round(lit(1.0) / n, 9).as("pr"))
-      for (i <- 1 to iters) {
-        // ORDERED fold, not sum(): a hash aggregate accumulates
-        // contributions in partial-merge arrival order, which drifts
-        // the last ulp across runs AND engines — normally invisible,
-        // but a sum landing exactly on a 9-dp rounding boundary would
-        // flip the pinned value (the one residual flake class VERDICT
-        // r4 flagged in the iterative FP pipelines). Sorting the
-        // (degree-bounded) contribution list and left-folding it makes
-        // the summation order identical everywhere; the oracle runs
-        // the same list_sort + list_reduce. State per node is its
-        // degree — bounded, so the 100 TB shape is unchanged.
-        ranks = ed.join(ranks.withColumnRenamed("node", "s"), "s")
-          .groupBy(col("d").as("node"))
-          .agg(round(lit(0.15) / n + lit(0.85) * aggregate(
-            array_sort(collect_list(col("pr") / col("deg"))), lit(0.0),
-            (a, x) => a + x), 9).as("pr"))
-        // bound the unrolled lineage (see [[PagerankCheckpointEvery]]);
-        // values are identical — the cut only shortens the plan
-        if (i % PagerankCheckpointEvery == 0 && i < iters)
-          ranks = graphCut(ranks)
+      graft.Materialize.scoped(edges.join(deg, "s").repartition(col("s"))) { ed =>
+        val n = ed.select(col("s")).distinct().count() // one scalar: node count
+        var ranks = ed.select(col("s").as("node")).distinct()
+          .select(col("node"), round(lit(1.0) / n, 9).as("pr"))
+        for (i <- 1 to iters) {
+          // ORDERED fold, not sum(): a hash aggregate accumulates
+          // contributions in partial-merge arrival order, which drifts
+          // the last ulp across runs AND engines — normally invisible,
+          // but a sum landing exactly on a 9-dp rounding boundary would
+          // flip the pinned value (the one residual flake class VERDICT
+          // r4 flagged in the iterative FP pipelines). Sorting the
+          // (degree-bounded) contribution list and left-folding it makes
+          // the summation order identical everywhere; the oracle runs
+          // the same list_sort + list_reduce. State per node is its
+          // degree — bounded, so the 100 TB shape is unchanged.
+          ranks = ed.join(ranks.withColumnRenamed("node", "s"), "s")
+            .groupBy(col("d").as("node"))
+            .agg(round(lit(0.15) / n + lit(0.85) * aggregate(
+              array_sort(collect_list(col("pr") / col("deg"))), lit(0.0),
+              (a, x) => a + x), 9).as("pr"))
+          // bound the unrolled lineage (see [[PagerankCheckpointEvery]]);
+          // values are identical — the cut only shortens the plan
+          if (i % PagerankCheckpointEvery == 0 && i < iters)
+            ranks = graphCut(ranks)
+        }
+        // materialize the LAST iterations under the narrow setting too —
+        // the caller sees a local relation, not a tail of wide shuffles
+        graphCut(ranks.select(col("node").as("doc_id"), col("pr")))
       }
-      // materialize the LAST iterations under the narrow setting too —
-      // the caller sees a local relation, not a tail of wide shuffles
-      val out = graphCut(ranks.select(col("node").as("doc_id"), col("pr")))
-      ed.unpersist() // `out` no longer reads through the edge frame
-      out
     }
 
   /** Asymmetric-containment threshold (measured FP gap at the oracle
@@ -818,7 +798,7 @@ object DedupQueries {
   }
 
   /** (doc_id, hs) sorted-distinct shingle hashes from raw (doc_id,
-    * text) rows — [[shingleTable]]'s expressions without the persist,
+    * text) rows — [[shingleTable]]'s expressions without the cache,
     * usable on a streaming micro-batch. */
   private[graft] def shingleDocs(raw: DataFrame): DataFrame = {
     import graft.expr.hashfunctions.word_gram_poly61
@@ -971,15 +951,15 @@ object DedupQueries {
     val dd = sym.join(deg, "src")
       .join(deg.select(col("src").as("dst"), col("deg").as("deg_d")), "dst")
     // orient: keep the copy that points (deg, id)-upward
-    val ed = dd.filter(col("deg") < col("deg_d") ||
+    // read three times by the wedge join
+    val ed = graft.Materialize.cached(dd.filter(col("deg") < col("deg_d") ||
         (col("deg") === col("deg_d") && col("src") < col("dst")))
-      .select(col("src").as("u"), col("dst").as("v")).persist()
+      .select(col("src").as("u"), col("dst").as("v")))
     val wedges = ed.join(ed.select(col("u").as("v"), col("v").as("w")), "v")
       .select(col("u"), col("v"), col("w"))
     val tri = wedges.join(ed.select(col("u"), col("v").as("w")), Seq("u", "w"))
     tri.agg(count(lit(1)).as("n_triangles"))
       .crossJoin(pairs.agg(count(lit(1)).as("n_edges")))
-    // `ed` stays persisted until the consumer drains the result
   }
 
   /** Gram width of [[dedupExactSubstring]] — the minimum repeat length

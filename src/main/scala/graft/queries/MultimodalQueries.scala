@@ -182,11 +182,10 @@ object MultimodalQueries {
     * assumption, as mm_resize). */
   def mmPhashNeardup(spark: SparkSession, dir: String): DataFrame = {
     import graft.expr.hashfunctions.block_hash60
-    val s = Tables.documents(spark, dir)
+    // read by the candidate branch and both verify joins
+    val s = graft.Materialize.cached(Tables.documents(spark, dir)
       .filter(length(col("text")) >= 60)
-      .select(col("doc_id"), block_hash60(col("text").cast("binary")).as("h"))
-      .persist()
-    s.count() // materialize before the candidate and verify branches fan out
+      .select(col("doc_id"), block_hash60(col("text").cast("binary")).as("h")))
     val chunkExprs = (0 until MmPhashChunks).map(i =>
       shiftrightunsigned(col("h"), i * 5).bitwiseAND(lit(0x1FL)))
     val chunks = s.select(col("doc_id"),

@@ -31,7 +31,6 @@ object SimilarityQueries {
     * ~N/2^k per table. */
   val LshTables = 16
   val LshBits = 4
-  val LshSeed = 42L
 
   /** J6/A6: exact top-5 cosine neighbors for each query vector
     * (vec_id < 5), excluding self. Broadcast the query side. */

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.{ScratchDirs, Tables}
+import graft.{Materialize, ScratchDirs, Tables}
 import graft.streaming.StreamOps
 
 /** Streaming pack (SURVEY §2.9): the incremental layer driven through
@@ -483,9 +483,9 @@ object StreamingQueries {
     * partition wholesale; this maintains per-key state across batches).
     * Each microbatch pre-aggregates to one row per key (count + argmax
     * struct), full-outer merges with the current table, and atomically
-    * replaces it (persist+count before overwrite — Spark cannot
-    * overwrite a directory it is still lazily reading). The final table
-    * is INDEPENDENT of how files were batched: counts add and the
+    * replaces it (the merge is materialized before the overwrite —
+    * Spark cannot overwrite a directory it is still lazily reading).
+    * The final table is INDEPENDENT of how files were batched: counts add and the
     * lexicographic (ts, event_id) max is associative — which is exactly
     * what makes the DuckDB replay possible. */
   def t8StreamMergeUpsert(spark: SparkSession, dir: String): DataFrame = {
@@ -520,11 +520,8 @@ object StreamingQueries {
               when(col("cl").isNull, col("dl"))
                 .when(col("dl").isNull, col("cl"))
                 .when(col("dl") > col("cl"), col("dl")).otherwise(col("cl")).as("last"))
-            .persist()
-          merged.count() // materialize BEFORE overwriting the input of the lazy read
-          merged.write.mode("overwrite").parquet(state)
-          merged.unpersist()
-          ()
+          // materialized BEFORE overwriting the input of the lazy read
+          Materialize.scoped(merged)(_.write.mode("overwrite").parquet(state))
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -786,32 +783,27 @@ object StreamingQueries {
     // batch incremental query — see DedupQueries.containmentIndex) and
     // cached in memory across this drain's micro-batches
     val (dfreqRaw, containersRaw, stored) = DedupQueries.containmentIndex(spark, dir)
-    val dfreq = dfreqRaw.persist()
-    val containers = containersRaw.persist()
-    dfreq.count(); containers.count()
     val delta = Tables.documents(spark, dir).filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("text"))
     delta.repartition(4).write.mode("overwrite").parquet(feed)
     val stream = StreamOps.fileFeed(spark, feed, delta, maxFilesPerTrigger = 1)
-    try {
-      drain(feed, ckpt, "t16_stream_containment") {
-        ScratchDirs.clear(out)
-        stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            publishBatch(
-              DedupQueries.containmentOfDelta(
-                  DedupQueries.shingleDocs(batch.toDF()), dfreq, containers, stored)
-                .select(col("id_a").as("new_doc"), col("id_b").as("container_doc"),
-                  col("containment")),
-              bid, out)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
+    Materialize.scoped(dfreqRaw) { dfreq =>
+      Materialize.scoped(containersRaw) { containers =>
+        drain(feed, ckpt, "t16_stream_containment") {
+          ScratchDirs.clear(out)
+          stream.writeStream
+            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
+              publishBatch(
+                DedupQueries.containmentOfDelta(
+                    DedupQueries.shingleDocs(batch.toDF()), dfreq, containers, stored)
+                  .select(col("id_a").as("new_doc"), col("id_b").as("container_doc"),
+                    col("containment")),
+                bid, out)
+            }
+            .option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
+        }
       }
-    } finally {
-      // unpersist on the failure path too — a leaked postings cache
-      // would pin corpus-scale blocks for the rest of the session
-      dfreq.unpersist(); containers.unpersist()
     }
     spark.read.parquet(out)
       .select(col("new_doc"), col("container_doc"), col("containment"))
@@ -943,9 +935,7 @@ object StreamingQueries {
     // joins re-evaluate the static plan per micro-batch, and the drop
     // list's tail is a full keep-best pipeline (corpus quality scan +
     // labels join + cluster collapse) that must not run once per batch
-    val dropped = CurationQueries.releaseDropList(spark, dir).persist()
-    dropped.count()
-    try {
+    Materialize.scoped(CurationQueries.releaseDropList(spark, dir)) { dropped =>
       drain(feed, ckpt, "t19_stream_release") {
         ScratchDirs.clear(delivery)
         stream
@@ -960,7 +950,7 @@ object StreamingQueries {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       }
-    } finally dropped.unpersist() // failure path too — see t16/t20
+    }
     // seal the shards over the accumulated delivery with the SHARED
     // batch-capstone kernel — the two paths answer to one oracle, so
     // the seal must be structurally one function, not a copy
@@ -996,13 +986,11 @@ object StreamingQueries {
     val base = ScratchDirs.clear(ScratchDirs.of("stream", dir, "substr_stream"))
     val feed = s"$base/feed"; val out = s"$base/out"; val ckpt = s"$base/checkpoint"
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val indexGrams = DedupQueries
-      .substrIndexGrams(docs.filter(col("doc_id") % 2 === 0)).persist()
-    indexGrams.count()
     val delta = docs.filter(col("doc_id") % 2 === 1)
     delta.repartition(4).write.mode("overwrite").parquet(feed)
     val stream = StreamOps.fileFeed(spark, feed, delta, maxFilesPerTrigger = 1)
-    try {
+    val index = DedupQueries.substrIndexGrams(docs.filter(col("doc_id") % 2 === 0))
+    Materialize.scoped(index) { indexGrams =>
       drain(feed, ckpt, "t20_stream_substring_dedup") {
         ScratchDirs.clear(out)
         stream.writeStream
@@ -1014,7 +1002,7 @@ object StreamingQueries {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       }
-    } finally indexGrams.unpersist() // failure path too — see t16
+    }
     spark.read.parquet(out)
       .select(col("doc_id"), col("n_dup_spans"), col("dup_tokens"),
         col("total_tokens"), col("dup_frac"))

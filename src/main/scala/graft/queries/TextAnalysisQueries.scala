@@ -408,9 +408,10 @@ object TextAnalysisQueries {
     * the textbook scalable form: one distributed pair-count aggregate
     * over the (word-repr, freq) table, ONE collected row (the argmax
     * pair, deterministic (freq desc, pair asc) tiebreak — the same
-    * ≤k-row driver scalar discipline as the k-means centroids), then a
-    * distributed merge applied as a left fold over each word's symbol
-    * sequence. The fold keeps whole-symbol boundaries (space-joined
+    * ≤k-row driver scalar discipline as the k-means centroids), then the
+    * merge applied as a left fold over each word's symbol sequence; the
+    * ≤[[BpeTopWords]]-row table is a [[graft.LocalFrame]] between
+    * rounds. The fold keeps whole-symbol boundaries (space-joined
     * repr, matched symbol-exactly), so it is greedy-left-to-right
     * non-overlapping — exactly BPE's merge rule — and the DuckDB twin
     * replays every round verbatim with `list_reduce` (identical fold
@@ -455,8 +456,7 @@ object TextAnalysisQueries {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("w").asc).limit(BpeTopWords)
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("repr"), col("freq"))
-    var words = words0.persist()
-    words.count()
+    var words = graft.LocalFrame.of(words0, BpeTopWords, "BpeTopWords")
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, String, Long)]()
     for (step <- 1 to BpeMerges) {
       val sy = split(col("repr"), " ")
@@ -472,13 +472,9 @@ object TextAnalysisQueries {
         .limit(1).collect()
       val (a, b, pf) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
       merges += ((step.toLong, a, b, a + b, pf))
-      val merged = words.select(
-        bpeMergeFold(sy, a, b).as("repr"), col("freq")).persist()
-      merged.count()
-      words.unpersist()
-      words = merged
+      words = graft.LocalFrame.of(words.select(bpeMergeFold(sy, a, b).as("repr"), col("freq")),
+        BpeTopWords, "BpeTopWords")
     }
-    words.unpersist()
     merges.toSeq
   }
 

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** `graft.Explain` on the test session at sf0.001: the census counts
-  * what the executed plan holds, and the pinned shapes match
-  * `plans/r14/plan_census_after.txt`; `jobs` labels every job with the
-  * query run it belongs to. */
+  * what the executed plan holds and the jobs a query starts while it is
+  * built, and the pinned shapes match `plans/census_sf0.01.txt` (the
+  * census at sf0.01); `jobs` labels every job with the query run it
+  * belongs to. */
 class ExplainSpec extends SparkSpecBase {
 
   private def censusOf(name: String): Explain.Census =

@@ -105,6 +105,19 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(hits.isEmpty, s"lineage checkpointed in: ${hits.mkString(", ")}")
   }
 
+  test("only Materialize caches a frame in src/main") {
+    // a hand-written persist picks its own count, unpersist and failure
+    // path: Materialize.cached / .scoped own every cache's lifetime
+    val cache = """\.persist\(|\.cache\(\)|\.unpersist\(""".r
+    assert(cache.findFirstIn("val s = df.persist()").isDefined)
+    assert(cache.findFirstIn("ranks.cache()").isDefined)
+    assert(cache.findFirstIn("} finally dropped.unpersist()").isDefined)
+    assert(cache.findFirstIn("spark.catalog.clearCache()").isEmpty)
+    assert(cache.findFirstIn("graft.Materialize.cached(df)").isEmpty)
+    val hits = hitsOutside("Materialize.scala", cache, "src/main/scala")
+    assert(hits.isEmpty, s"frames cached around Materialize in: ${hits.mkString(", ")}")
+  }
+
   test("oracle coverage: EVERY registered query has a DuckDB oracle") {
     // round 3 closed the last rows-only gaps: the former hash-seeded
     // five (minhash-LSH, simhash, sign-bucket LSH, IVF, winnowing) now
