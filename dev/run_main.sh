@@ -8,7 +8,7 @@
 #   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_BENCH_OUT=out.json dev/run_main.sh graft.Bench
 #   SPARK_GRAFT_ONLY=q1,q2 dev/run_main.sh graft.Explain census
 #   SPARK_GRAFT_ONLY=q1,q2 dev/run_main.sh graft.Explain plan [outDir suffix]
-#   SPARK_GRAFT_ONLY=q1,q2 SPARK_GRAFT_REPEAT=3 dev/run_main.sh graft.Explain jobs
+#   SPARK_GRAFT_ONLY=q1,q2 dev/run_main.sh graft.Explain jobs
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*"

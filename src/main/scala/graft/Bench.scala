@@ -44,8 +44,11 @@ object Bench {
   val Protocol: String =
     s"min of $K samples for ${headline.size} flagships, 1 otherwise; cold = first sample"
 
-  /** One timed run of a query, with the shuffle bytes it moved. */
-  final case class Sample(sec: Double, errored: Boolean, shuffleRead: Long, shuffleWrite: Long)
+  /** One timed run of a query, with the shuffle bytes it moved and the
+    * Spark jobs it started, all of them and those started while the
+    * query was built (see [[Ledger]]). */
+  final case class Sample(sec: Double, errored: Boolean, shuffleRead: Long, shuffleWrite: Long,
+                          jobs: Int = 0, eagerJobs: Int = 0)
 
   def samplesFor(name: String): Int = if (headline.contains(name)) K else 1
 
@@ -78,18 +81,11 @@ object Bench {
 
   private def sampleOnce(spark: SparkSession, sfDir: String, name: String,
                          fn: GraftSession.Query): Sample = {
-    val ((sec, errored), r, w) = ShuffleTelemetry.measure(spark) {
-      val t0 = System.nanoTime()
-      val errored =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); false }
-        catch { case t: Throwable =>
-          System.err.println(s"[bench-error] $name: ${t.getClass.getName}: ${t.getMessage}")
-          true
-        }
-      ((System.nanoTime() - t0) / 1e9, errored)
-    }
+    val (out, run) = Ledger.noop(spark, name)(fn(spark, sfDir))
+    out.swap.foreach(t =>
+      System.err.println(s"[bench-error] $name: ${t.getClass.getName}: ${t.getMessage}"))
     GraftSession.release(spark)
-    Sample(sec, errored, r, w)
+    Sample(run.sec, out.isLeft, run.shuffleRead, run.shuffleWrite, run.jobs.size, run.eager)
   }
 
   def main(args: Array[String]): Unit = {
@@ -129,12 +125,14 @@ object Bench {
     println(json)
     // SPARK_GRAFT_BENCH_OUT=path also writes the full artifact: the
     // totals plus, per query, kept and cold seconds, every sample and
-    // the cold sample's shuffle read/write bytes
+    // the cold sample's shuffle read/write bytes and job counts
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       val detail = results.map { case (k, ss) =>
         val samplesJ = ss.map(s => r3(s.sec)).mkString("[", ",", "]")
+        val c = ss.head
         s""""$k":{"sec":${r3(keptSec(ss))},"cold":${r3(coldSec(ss))},"samples":$samplesJ,""" +
-          s""""shuffle_read":${ss.head.shuffleRead},"shuffle_write":${ss.head.shuffleWrite}}"""
+          s""""shuffle_read":${c.shuffleRead},"shuffle_write":${c.shuffleWrite},""" +
+          s""""jobs":${c.jobs},"eager_jobs":${c.eagerJobs}}"""
       }.mkString("{", ",", "}")
       val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","errors":$errors,"cold":${r3(cold)},"protocol":"$Protocol","sf":"$sfDir","queries_all":$detail}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(p),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 
@@ -20,10 +18,10 @@ import java.nio.file.{Files, Paths}
   *   dev/run_main.sh graft.Explain plan [outDir suffix]
   *     `explain("formatted")` to stdout, or to `outDir/<query>_<suffix>.txt`
   *   dev/run_main.sh graft.Explain jobs
-  *     runs each query into the noop sink (`SPARK_GRAFT_REPEAT` times)
-  *     and prints one line per Spark job: the query run it belongs to,
-  *     duration, stage task counts and the callsite — the Spark UI's
-  *     Jobs page with the UI off
+  *     runs each query once into the noop sink and prints its
+  *     [[Ledger]] record, one line per Spark job: the query it belongs
+  *     to, duration, stage task counts and the callsite — the Spark
+  *     UI's Jobs page with the UI off
   */
 object Explain {
 
@@ -54,21 +52,11 @@ object Explain {
 
   /** The census of the plan `build` returns, plus `eager`: the Spark
     * jobs started while building it, which the returned plan does not
-    * show (the bus is drained before and after, as in [[runLabelled]]). */
-  def built(spark: SparkSession)(build: => DataFrame): Census = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBridge.drainListenerBus(sc)
-    sc.addSparkListener(counter)
-    val df = try build finally {
-      ListenerBridge.drainListenerBus(sc)
-      sc.removeSparkListener(counter)
-    }
-    val c = census(df.queryExecution.executedPlan)
-    c.copy(counts = c.counts :+ ("eager" -> jobs.get))
+    * show. */
+  def built(spark: SparkSession, name: String)(build: => DataFrame): Census = {
+    val (out, run) = Ledger.run(spark, name)(build)(df => census(df.queryExecution.executedPlan))
+    val c = out.toTry.get
+    c.copy(counts = c.counts :+ ("eager" -> run.eager))
   }
 
   def main(args: Array[String]): Unit = {
@@ -78,7 +66,7 @@ object Explain {
       case List("census") =>
         spark.sparkContext.setLogLevel("ERROR")
         GraftSession.eachQuery(spark, "census") { (name, fn) =>
-          val c = built(spark)(fn(spark, sfDir))
+          val c = built(spark, name)(fn(spark, sfDir))
           println(f"[audit] $name%-28s ${c.line}")
         }
       case "plan" :: out if out.isEmpty || out.size == 2 =>
@@ -94,54 +82,14 @@ object Explain {
           }
         }
       case List("jobs") =>
-        spark.sparkContext.addSparkListener(new JobLog(System.err.println))
         GraftSession.eachQuery(spark, "jobs") { (name, fn) =>
-          runLabelled(spark, name, fn, sfDir, GraftSession.repeat)(System.err.println)
+          val (out, run) = Ledger.noop(spark, name)(fn(spark, sfDir))
+          run.lines.foreach(System.err.println)
+          out.toTry.get
         }
       case _ =>
         System.err.println("usage: graft.Explain census | plan [outDir suffix] | jobs")
     }
     spark.stop()
-  }
-
-  /** The local property [[JobLog]] labels a job with. Not the job
-    * description: a streaming query's micro-batch thread inherits the
-    * caller's local properties but sets its own description. */
-  private val RunProperty = "graft.explain.run"
-
-  /** Runs query `name` into the noop sink `repeat` times, each run
-    * (construct and execute) labelled `"<name> run <i>"` in
-    * [[RunProperty]], and logs the run's total once the listener bus
-    * has delivered every job of it. */
-  def runLabelled(spark: SparkSession, name: String, fn: GraftSession.Query, sfDir: String,
-                  repeat: Int)(log: String => Unit): Unit = {
-    val sc = spark.sparkContext
-    (1 to repeat).foreach { i =>
-      val t0 = System.nanoTime()
-      sc.setLocalProperty(RunProperty, s"$name run $i")
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      finally sc.setLocalProperty(RunProperty, null)
-      val dt = (System.nanoTime() - t0) / 1e9
-      ListenerBridge.drainListenerBus(sc)
-      log(f"[prof-total] $name run $i $dt%.3fs")
-    }
-  }
-
-  /** Logs every Spark job: the query run it belongs to
-    * ([[RunProperty]]), duration, stage task counts and the result
-    * stage's callsite (the "X at file:line" the UI shows). */
-  final class JobLog(log: String => Unit) extends SparkListener {
-    private val started = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val run = Option(js.properties).flatMap(p => Option(p.getProperty(RunProperty)))
-        .getOrElse("?")
-      val site = js.stageInfos.lastOption.map(_.name).getOrElse("?")
-      val shape = js.stageInfos.map(_.numTasks).mkString("+")
-      started.put(js.jobId, (System.nanoTime(), s"$run  [$shape tasks] $site"))
-    }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      Option(started.remove(je.jobId)).foreach { case (t0, label) =>
-        log(f"[prof-job] ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%8.3fs  $label")
-      }
   }
 }

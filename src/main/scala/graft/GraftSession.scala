@@ -11,8 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (default: every available processor).
   *  - `SPARK_GRAFT_SF_DIR`: the data dir mains read (default sf0.1).
   *  - `SPARK_GRAFT_ONLY=q1,q2`: restrict a run to the named queries.
-  *  - `SPARK_GRAFT_REPEAT=n`: run each query n times (`Explain jobs`
-  *    only; Bench samples on its own fixed protocol).
   */
 object GraftSession {
   type Query = (SparkSession, String) => DataFrame
@@ -20,8 +18,6 @@ object GraftSession {
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
     .getOrElse(Runtime.getRuntime.availableProcessors)
   val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  val repeat: Int = math.max(1,
-    sys.env.get("SPARK_GRAFT_REPEAT").flatMap(_.toIntOption).getOrElse(1))
   private val only: Option[Set[String]] =
     sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
 

@@ -43,14 +43,8 @@ object DedupQueries {
     * scan-stage shape that matters when this runs over 100 TB of text.
     * The short-doc filter stays in the cheap token-count form BEFORE
     * the hash projection so it pushes down to a single split call. */
-  private[graft] def shingleTable(spark: SparkSession, dir: String): DataFrame = {
-    import graft.expr.hashfunctions.word_gram_poly61
-    graft.Materialize.cached(Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= ShingleN)
-      .select(col("doc_id"),
-        array_sort(array_distinct(word_gram_poly61(col("ws"), ShingleN))).as("hs")))
-  }
+  private[graft] def shingleTable(spark: SparkSession, dir: String): DataFrame =
+    graft.Materialize.cached(shingleDocs(Tables.documents(spark, dir)))
 
   /** A1/exact dedup: sha256 content digest → canonical (min) doc_id +
     * group size. One hash-shuffle on the digest. */
@@ -257,19 +251,24 @@ object DedupQueries {
     * only ADD a candidate pair, which the exact verify rejects — and
     * the oracle replays the identical fold, so parity is exact. */
   private[graft] def bandedDocs(sh: DataFrame): DataFrame = {
-    val rows = MinhashPerms / Bands
     val ex = sh.select(col("doc_id"), explode(col("hs")).as("shash"))
       .withColumn("h", shiftrightunsigned(col("shash"), 29))
     val sigCols = MinhashCoefs.zipWithIndex.map { case ((a, b), i) =>
       min(col("h") * lit(a) + lit(b)).as(s"s_$i")
     }
     val sig = ex.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until Bands).map { bi =>
+    sig.select(col("doc_id"), bandVal)
+  }
+
+  /** `band_val`: one row per band, the band's signature columns
+    * `s_<i>` folded into one long (see [[bandedDocs]]). */
+  private def bandVal: org.apache.spark.sql.Column = {
+    val rows = MinhashPerms / Bands
+    explode(array((0 until Bands).map { bi =>
       (0 until rows).foldLeft(lit(bi.toLong): org.apache.spark.sql.Column) { (acc, r) =>
         (acc * 131L + (col(s"s_${bi * rows + r}") % BandMod)) % BandMod
       }
-    }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("band_val"))
+    }: _*)).as("band_val")
   }
 
   /** Incremental dedup (net-new): check only a DELTA of new documents
@@ -326,23 +325,11 @@ object DedupQueries {
     * to the batch pipeline — same hashes, same affine coefficients,
     * same fold. Emits (band_val, doc_id). */
   private[graft] def streamBandedDocs(docs: DataFrame): DataFrame = {
-    import graft.expr.hashfunctions.word_gram_poly61
-    val rows = MinhashPerms / Bands
-    val hs = docs
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= ShingleN)
-      .select(col("doc_id"),
-        array_sort(array_distinct(word_gram_poly61(col("ws"), ShingleN))).as("hs"))
     val sigCols = MinhashCoefs.zipWithIndex.map { case ((a, b), i) =>
       array_min(transform(col("hs"), h => shiftrightunsigned(h, 29) * a + b)).as(s"s_$i")
     }
-    val sig = hs.select(col("doc_id") +: sigCols.toIndexedSeq: _*)
-    val bandCols = (0 until Bands).map { bi =>
-      (0 until rows).foldLeft(lit(bi.toLong): org.apache.spark.sql.Column) { (acc, r) =>
-        (acc * 131L + (col(s"s_${bi * rows + r}") % BandMod)) % BandMod
-      }
-    }
-    sig.select(explode(array(bandCols: _*)).as("band_val"), col("doc_id"))
+    val sig = shingleDocs(docs).select(col("doc_id") +: sigCols.toIndexedSeq: _*)
+    sig.select(bandVal, col("doc_id"))
   }
 
   /** SimHash near-dup pairs within hamming <= 6, via PIGEONHOLE
@@ -405,17 +392,22 @@ object DedupQueries {
     * corpus (stable sort, ties by bit index); candidate keys only —
     * hamming, verify, and the all-pairs oracle never see the layout.
     *
-    * The stats pass runs ONCE per (corpus dir, JVM): the ranking is a
-    * pure function of the corpus, so the live pipeline memoizes the
-    * 60-int order via [[graft.SessionMemo.value]] (VERDICT r11 #2) —
-    * repeat invocations (bench repeats, the recall artifact, specs)
-    * reuse it instead of re-scanning the print column. An EMPTY corpus
-    * has no ranking (sum() is null over zero rows — the r11 ADVICE
+    * The stats pass ([[simhashBitRanking]]) runs ONCE per (corpus dir,
+    * JVM): the ranking is a pure function of the corpus, so the live
+    * pipeline memoizes the 60-int order via [[graft.SessionMemo.value]]
+    * (VERDICT r11 #2) and passes it here — repeat invocations (bench
+    * repeats, the recall artifact, specs) reuse it instead of
+    * re-scanning the print column. An EMPTY corpus has no ranking (sum() is null over zero rows — the r11 ADVICE
     * NPE); it falls back to the static interleave, whose candidate set
     * over zero docs is identically empty. */
-  private[graft] def adaptiveSimhashChunks(s: DataFrame): Seq[org.apache.spark.sql.Column] =
-    simhashBitRanking(s).map(simhashChunksFromRanking)
-      .getOrElse(simhashChunkExprs(col("sh")))
+  private[graft] def simhashLayout(ranking: Option[Seq[Int]]): Seq[org.apache.spark.sql.Column] =
+    ranking.map { ranked =>
+      (0 until 8).map { c =>
+        ranked.zipWithIndex.filter(_._2 % 8 == c).map { case (bit, r) =>
+          shiftrightunsigned(col("sh"), bit).bitwiseAND(lit(1L)) * lit(1L << (r / 8))
+        }.reduce(_ + _)
+      }
+    }.getOrElse(simhashChunkExprs(col("sh")))
 
   /** The stats pass: print bits ranked by balance (|set fraction − ½|,
     * most balanced first, ties by bit index). None on an empty corpus. */
@@ -429,20 +421,12 @@ object DedupQueries {
     else Some((0 until 60).sortBy(b => math.abs(row.getLong(b) - n / 2.0)))
   }
 
-  /** Deal the ranked bits round-robin across the 8 chunks. */
-  private[graft] def simhashChunksFromRanking(ranked: Seq[Int]): Seq[org.apache.spark.sql.Column] =
-    (0 until 8).map { c =>
-      ranked.zipWithIndex.filter(_._2 % 8 == c).map { case (bit, r) =>
-        shiftrightunsigned(col("sh"), bit).bitwiseAND(lit(1L)) * lit(1L << (r / 8))
-      }.reduce(_ + _)
-    }
-
   private def simhashPairsLive(spark: SparkSession, dir: String): DataFrame = {
     // read by the bit-ranking stats and both bucket-join branches
     val s = graft.Materialize.cached(Tables.documents(spark, dir)
       .select(col("doc_id"), simhash64(split(col("text"), " ")).as("sh")))
-    val layout = graft.SessionMemo.value("simhash_bit_ranking", dir)(simhashBitRanking(s))
-      .map(simhashChunksFromRanking).getOrElse(simhashChunkExprs(col("sh")))
+    val layout = simhashLayout(
+      graft.SessionMemo.value("simhash_bit_ranking", dir)(simhashBitRanking(s)))
     simhashVerifiedPairs(s, SimhashBucketCap, layout)
   }
 
@@ -798,8 +782,8 @@ object DedupQueries {
   }
 
   /** (doc_id, hs) sorted-distinct shingle hashes from raw (doc_id,
-    * text) rows — [[shingleTable]]'s expressions without the cache,
-    * usable on a streaming micro-batch. */
+    * text) rows: the one shingling expression, under [[shingleTable]]
+    * (cached) and on a streaming micro-batch. */
   private[graft] def shingleDocs(raw: DataFrame): DataFrame = {
     import graft.expr.hashfunctions.word_gram_poly61
     raw.select(col("doc_id"), split(col("text"), " ").as("ws"))

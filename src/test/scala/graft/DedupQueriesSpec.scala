@@ -442,7 +442,7 @@ class DedupQueriesSpec extends SparkSpecBase {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("doc_id", "sh")
     assert(DedupQueries.simhashBitRanking(empty).isEmpty)
-    val chunks = DedupQueries.adaptiveSimhashChunks(empty)
+    val chunks = DedupQueries.simhashLayout(DedupQueries.simhashBitRanking(empty))
     assert(chunks.size == 8)
     assert(pairs(DedupQueries.simhashCandidates(empty, 2, chunks)).isEmpty)
   }
@@ -467,7 +467,7 @@ class DedupQueriesSpec extends SparkSpecBase {
       // sf0.1 — majority-amplified print bits made the escalation
       // quadratic at 10×); ranked dealing keeps gate buckets small
       val chunks = s.select(posexplode(array(
-          DedupQueries.adaptiveSimhashChunks(s): _*))
+          DedupQueries.simhashLayout(DedupQueries.simhashBitRanking(s)): _*))
         .as(Seq("chunk_idx", "chunk_val")))
       val maxChunk = chunks.groupBy(col("chunk_idx"), col("chunk_val")).count()
         .agg(max(col("count"))).collect()(0).getLong(0)

@@ -16,7 +16,7 @@ object OccProbe {
     val s = Tables.documents(spark, dir)
       .select(col("doc_id"), graft.expr.hashfunctions.simhash64(split(col("text"), " ")).as("sh"))
     val chunks = s.select(posexplode(array(
-        graft.queries.DedupQueries.adaptiveSimhashChunks(s.select(col("sh"))): _*))
+        DedupQueries.simhashLayout(DedupQueries.simhashBitRanking(s.select(col("sh")))): _*))
       .as(Seq("chunk_idx", "chunk_val")))
     println("top chunk buckets:")
     chunks.groupBy("chunk_idx", "chunk_val").count().orderBy(desc("count")).show(8)

@@ -84,19 +84,29 @@ object PlanLintSpec {
 }
 
 class PlanLintSpec extends SparkSpecBase {
+  import org.apache.spark.sql.DataFrame
+
+  /** Every registered query built once, in name order, for all the
+    * AQE-on lints: its executed plan (and so its analyzed and optimized
+    * plans and its schema) is computed before [[GraftSession.release]]
+    * frees its cached frames, which would otherwise accumulate across
+    * the sweep. */
+  private lazy val built: Seq[(String, DataFrame)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      df.queryExecution.executedPlan
+      GraftSession.release(spark)
+      name -> df
+    }
+
+  private def offending(lint: DataFrame => Boolean): Seq[String] =
+    built.collect { case (name, df) if lint(df) => name }
 
   test("no ScalaUDF in any registered query's optimized plan") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.optimizedPlan
-      val hasUdf = plan.exists(_.expressions.exists(_.exists {
-        case _: ScalaUDF => true
-        case _ => false
-      }))
-      // per-query persisted frames (shingle caches etc.) would otherwise
-      // accumulate across the whole-registry sweep
-      GraftSession.release(spark)
-      if (hasUdf) Some(name) else None
-    }
+    val offenders = offending(_.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+      case _: ScalaUDF => true
+      case _ => false
+    })))
     assert(offenders.isEmpty,
       s"UDF found in: $offenders — use a codegen'd Expression (graft.expr) instead")
   }
@@ -107,18 +117,10 @@ class PlanLintSpec extends SparkSpecBase {
     // means BOTH sides shuffle into an O(N*M) join — only acceptable
     // inside the explicitly row-capped exact baselines.
     val fenced = Set("ann_neardup_pairs") // hard row cap asserted in its own spec
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (fenced(name)) None
-      else {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
-        val hasCartesian = plan.exists {
-          case _: org.apache.spark.sql.execution.joins.CartesianProductExec => true
-          case _ => false
-        }
-        GraftSession.release(spark)
-        if (hasCartesian) Some(name) else None
-      }
-    }
+    val offenders = offending(_.queryExecution.executedPlan.exists {
+      case _: org.apache.spark.sql.execution.joins.CartesianProductExec => true
+      case _ => false
+    }).filterNot(fenced)
     assert(offenders.isEmpty,
       s"CartesianProduct in: $offenders — broadcast the small side or bucket-join")
   }
@@ -132,11 +134,7 @@ class PlanLintSpec extends SparkSpecBase {
     // df counts, stats singletons), or a Limit. A bare
     // scan→project→repartition chain under a broadcast hint would ship
     // the corpus to every executor at scale, so it fails here.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val bad = PlanLintSpec.hasFactBroadcast(fn(spark, sfDir))
-      GraftSession.release(spark)
-      if (bad) Some(name) else None
-    }
+    val offenders = offending(PlanLintSpec.hasFactBroadcast)
     assert(offenders.isEmpty,
       s"broadcast over unreduced fact scan in: $offenders — use an id-keyed shuffle join " +
       "(DedupQueries.verifyAgainst shape) or reduce the side before broadcasting")
@@ -166,11 +164,7 @@ class PlanLintSpec extends SparkSpecBase {
     // sorts the corpus. The two sanctioned global windows (shingle
     // bucket offsets, the events date spine) sit over aggregates and
     // pass via the bareFact reducer rule.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val bad = PlanLintSpec.hasGlobalWindowOverFact(fn(spark, sfDir))
-      GraftSession.release(spark)
-      if (bad) Some(name) else None
-    }
+    val offenders = offending(PlanLintSpec.hasGlobalWindowOverFact)
     assert(offenders.isEmpty,
       s"global window over unreduced fact scan in: $offenders — partition the window " +
       "(or reduce its input) so the sort distributes")
@@ -240,13 +234,12 @@ class PlanLintSpec extends SparkSpecBase {
     // The driver's pandas row-compare hashes every cell; ndarray/dict cells
     // are unhashable and crash the oracle harness (round-3 ta_inverted_index).
     // Convention: results ship scalars only — join collections to strings.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val bad = fn(spark, sfDir).schema.fields.collect {
+    val offenders = built.flatMap { case (name, df) =>
+      val bad = df.schema.fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
                   f.dataType.isInstanceOf[MapType] ||
                   f.dataType.isInstanceOf[StructType] => f.name
       }
-      GraftSession.release(spark)
       if (bad.nonEmpty) Some(s"$name(${bad.mkString(",")})") else None
     }
     assert(offenders.isEmpty,

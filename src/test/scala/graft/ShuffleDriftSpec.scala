@@ -8,6 +8,9 @@ package graft
   * bytes for a representative, SessionMemo-free query set and fails on
   * a >2× move in either direction.
   *
+  * Bytes are the [[Ledger]] record's: the shuffle read/write of the
+  * tasks of the query run's own jobs, build and run.
+  *
   * The pins were measured with graft.ShuffleProbe under this exact
   * session config (the GraftSession test session: bench confs on
   * local[4], 4 shuffle partitions, see SparkSpecBase) and are
@@ -59,9 +62,9 @@ class ShuffleDriftSpec extends SparkSpecBase {
     pins.foreach { case (name, pinR, pinW, band) =>
       GraftSession.release(spark)
       val fn = SparkEntry.queries(name)
-      val (_, r, w) = ShuffleTelemetry.measure(spark) {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      }
+      val (out, run) = Ledger.noop(spark, name)(fn(spark, sfDir))
+      out.toTry.get
+      val (r, w) = (run.shuffleRead, run.shuffleWrite)
       def inBand(actual: Long, pin: Long, kind: String): Unit =
         assert(actual >= pin / band && actual <= pin * band,
           s"$name $kind shuffle bytes drifted >${band}x: $actual vs pinned $pin — " +

@@ -1,9 +1,9 @@
 package graft
 
-/** Dev probe: per-query shuffle read/write bytes under the TEST session
-  * config (the GraftSession test session: bench confs on local[4], 4
-  * shuffle partitions, see SparkSpecBase) — the numbers behind
-  * ShuffleDriftSpec's pins. Run:
+/** Dev probe: per-query shuffle read/write bytes, from each run's
+  * [[Ledger]] record, under the TEST session config (the GraftSession
+  * test session: bench confs on local[4], 4 shuffle partitions, see
+  * SparkSpecBase) — the numbers behind ShuffleDriftSpec's pins. Run:
   *   sbt 'Test/runMain graft.ShuffleProbe q1_pricing_summary,dedup_exact' */
 object ShuffleProbe {
   def main(args: Array[String]): Unit = {
@@ -13,10 +13,9 @@ object ShuffleProbe {
       val fn = SparkEntry.queries(n)
       // twice: first run pays one-off materialization, second is steady
       (1 to 2).foreach { i =>
-        val (_, r, w) = ShuffleTelemetry.measure(spark) {
-          fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-        }
-        println(s"[shuffle-probe] $n run$i read=$r write=$w")
+        val (out, run) = Ledger.noop(spark, s"$n run$i")(fn(spark, "/root/testdata/sf0.001"))
+        out.toTry.get
+        println(s"[shuffle-probe] $n run$i read=${run.shuffleRead} write=${run.shuffleWrite}")
       }
       GraftSession.release(spark)
     }

@@ -118,6 +118,19 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(hits.isEmpty, s"frames cached around Materialize in: ${hits.mkString(", ")}")
   }
 
+  test("only Ledger registers a Spark listener in src/main") {
+    // each hand-written listener picks its own bus drain and its own
+    // rule for which jobs count: Ledger attributes every job to its run
+    val listener = """addSparkListener|extends SparkListener|new SparkListener""".r
+    assert(listener.findFirstIn("sc.addSparkListener(counter)").isDefined)
+    assert(listener.findFirstIn("final class Counter extends SparkListener {").isDefined)
+    assert(listener.findFirstIn("val counter = new SparkListener {").isDefined)
+    assert(listener.findFirstIn("ListenerBridge.drainListenerBus(sc)").isEmpty)
+    assert(listener.findFirstIn("spark.streams.addListener(l)").isEmpty)
+    val hits = hitsOutside("Ledger.scala", listener, "src/main/scala")
+    assert(hits.isEmpty, s"Spark listener registered outside Ledger in: ${hits.mkString(", ")}")
+  }
+
   test("oracle coverage: EVERY registered query has a DuckDB oracle") {
     // round 3 closed the last rows-only gaps: the former hash-seeded
     // five (minhash-LSH, simhash, sign-bucket LSH, IVF, winnowing) now

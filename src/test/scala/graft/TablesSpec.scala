@@ -6,8 +6,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
@@ -21,17 +20,8 @@ class TablesSpec extends SparkSpecBase {
   private def nanosAsLong[T](v: String)(body: => T): T =
     Confs.withSessionConf(spark, "spark.sql.legacy.parquet.nanosAsLong", v)(body)
 
-  private def jobsStartedBy(body: => Unit): Int = {
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    ListenerBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; ListenerBridge.drainListenerBus(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    started.get
-  }
+  private def jobsStartedBy(build: => DataFrame): Int =
+    Ledger.run(spark, "tables")(build)(_ => ())._2.eager
 
   test("every harness table resolves to the inferred schema, nanosAsLong on and off") {
     val tables = new java.io.File(sfDir).list().toSeq.filter(_.endsWith(".parquet"))
