@@ -1,7 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -12,9 +18,10 @@ import java.nio.file.{Files, Paths}
   * action; query constructors may still run their eager prep.
   *
   *   dev/run_main.sh graft.Explain census
-  *     one line per query: exchanges, join strategies, SortAggregates,
-  *     codegen stages, and the Spark jobs started while the query was
-  *     built (`eager`); `!!` flags cartesians and SortAggregates
+  *     one line per query: hash exchanges, join strategies and
+  *     SortAggregates, counted over the plan's nodes (see [[nodes]]),
+  *     and the Spark jobs started while the query was built (`eager`);
+  *     `!!` flags cartesians and SortAggregates
   *   dev/run_main.sh graft.Explain plan [outDir suffix]
   *     `explain("formatted")` to stdout, or to `outDir/<query>_<suffix>.txt`
   *   dev/run_main.sh graft.Explain jobs
@@ -36,17 +43,28 @@ object Explain {
     }
   }
 
+  /** Every physical node of `plan`: through adaptive plans (their
+    * current plan), query stages and subqueries, not into a reused
+    * exchange (perfbench's `Tracer.nodes` rule), and into the cached
+    * plan behind each in-memory scan, once per scan. */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case _: ReusedExchangeExec => Nil
+    case m: InMemoryTableScanExec => m.subqueries :+ m.relation.cachedPlan
+    case p => p.children ++ p.subqueries
+  }).flatMap(nodes)
+
   def census(plan: SparkPlan): Census = {
-    val text = plan.toString
-    def c(op: String) = op.r.findAllIn(text).size
+    val all = nodes(plan)
+    def c(pf: PartialFunction[SparkPlan, Unit]) = all.count(pf.isDefinedAt)
     Census(Seq(
-      "xch" -> c("Exchange hashpartitioning"),
-      "bhj" -> c("BroadcastHashJoin"),
-      "smj" -> c("SortMergeJoin"),
-      "bnlj" -> c("BroadcastNestedLoopJoin"),
-      "cart" -> c("CartesianProduct"),
-      "sortAgg" -> c("SortAggregate"),
-      "wsc" -> c("WholeStageCodegen"),
+      "xch" -> c { case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => },
+      "bhj" -> c { case _: BroadcastHashJoinExec => },
+      "smj" -> c { case _: SortMergeJoinExec => },
+      "bnlj" -> c { case _: BroadcastNestedLoopJoinExec => },
+      "cart" -> c { case _: CartesianProductExec => },
+      "sortAgg" -> c { case _: SortAggregateExec => },
     ))
   }
 

@@ -13,14 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** One record per query run: the Spark jobs a query started while it
   * was built (eager) and while it ran, each with its seconds, stage task
   * counts, callsite and shuffle bytes. [[run]] labels the run's jobs
-  * through a local property, which the threads Spark starts jobs from
+  * with a local property, which the threads Spark starts jobs from
   * inherit (a broadcast's exchange thread, a streaming query's
-  * micro-batch thread); a task counts toward the job that first
-  * submitted its stage. So a record holds its own jobs only, whatever
-  * else the context runs, and no delta of process-wide counters is
-  * taken. One listener per `SparkContext` (task metrics are
-  * context-wide), installed on first use and living as long as the
-  * context. */
+  * micro-batch thread), and a task counts toward the job that first
+  * submitted its stage: a record holds its own jobs, not a delta of
+  * process-wide counters. One listener per `SparkContext`, installed on
+  * first use. */
 object Ledger {
 
   /** One Spark job of a run. */
@@ -40,11 +38,10 @@ object Ledger {
     } :+ f"[prof-total] $label $sec%.3fs"
   }
 
-  /** The local property that names a job's run. Not the job
-    * description: a streaming query's micro-batch thread inherits the
-    * caller's local properties but sets its own description. */
+  // the run's token (not the job description: a micro-batch thread
+  // inherits local properties but sets its own description), and a
+  // flag set while the query is built
   private val RunProperty = "graft.ledger.run"
-  /** Set while the query is built: the job is eager. */
   private val EagerProperty = "graft.ledger.eager"
 
   private final class JobAcc(val id: Int, val start: Long, val tasks: Seq[Int], val site: String,
@@ -94,11 +91,7 @@ object Ledger {
   private val runs = new AtomicLong
 
   private def on(sc: SparkContext): Listener =
-    installed.computeIfAbsent(sc, { sc =>
-      val l = new Listener
-      sc.addSparkListener(l)
-      l
-    })
+    installed.computeIfAbsent(sc, { sc => val l = new Listener; sc.addSparkListener(l); l })
 
   /** Builds the query and applies `act` to the frame, and returns what
     * `act` returned (or the first throwable of either step) with the

@@ -41,6 +41,16 @@ class ExplainSpec extends SparkSpecBase {
     assert(cart.warnings.contains("CARTESIAN"), cart.line)
   }
 
+  test("census counts a cached frame's plan once per reference") {
+    // a materialized cached frame prints its adaptive plan twice (final
+    // and initial); a node walk sees each reference's plan once
+    val agg = Materialize.cached(spark.range(100).groupBy((col("id") % 7).as("k")).count())
+    try {
+      val c = Explain.census(agg.union(agg).queryExecution.executedPlan)
+      assert(c("xch") == 2, c.line)
+    } finally GraftSession.release(spark)
+  }
+
   test("jobs: every job line names the query run it belongs to") {
     val runs = try LedgerSpec.tinyQueries.flatMap { case (name, fn) =>
       (1 to 2).map { i =>

@@ -33,22 +33,23 @@ object LedgerSpec {
 class LedgerSpec extends SparkSpecBase {
   import LedgerSpec.tinyQueries
 
+  /** Runs `body` with a listener that sees every job and task of the context. */
+  private def watching(body: Everything => Unit): Unit = {
+    val all = new Everything
+    ListenerBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(all)
+    try body(all) finally spark.sparkContext.removeSparkListener(all)
+  }
+
   private final class Everything extends SparkListener {
     private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val bytes = new java.util.concurrent.atomic.AtomicLongArray(2)
+    val bytes = new java.util.concurrent.atomic.AtomicLongArray(2) // shuffle read, write
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
       bytes.addAndGet(0, m.shuffleReadMetrics.totalBytesRead)
       bytes.addAndGet(1, m.shuffleWriteMetrics.bytesWritten)
     }
     def jobIds: Set[Int] = { ListenerBridge.drainListenerBus(spark.sparkContext); jobs.asScala.toSet }
-  }
-
-  private def watching(body: Everything => Unit): Unit = {
-    val all = new Everything
-    ListenerBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(all)
-    try body(all) finally spark.sparkContext.removeSparkListener(all)
   }
 
   private def query(name: String) = tinyQueries.toMap.apply(name)(spark, sfDir)

@@ -124,9 +124,7 @@ class SparkEntrySpec extends AnyFunSuite {
     val listener = """addSparkListener|extends SparkListener|new SparkListener""".r
     assert(listener.findFirstIn("sc.addSparkListener(counter)").isDefined)
     assert(listener.findFirstIn("final class Counter extends SparkListener {").isDefined)
-    assert(listener.findFirstIn("val counter = new SparkListener {").isDefined)
     assert(listener.findFirstIn("ListenerBridge.drainListenerBus(sc)").isEmpty)
-    assert(listener.findFirstIn("spark.streams.addListener(l)").isEmpty)
     val hits = hitsOutside("Ledger.scala", listener, "src/main/scala")
     assert(hits.isEmpty, s"Spark listener registered outside Ledger in: ${hits.mkString(", ")}")
   }
