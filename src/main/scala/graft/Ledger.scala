@@ -91,7 +91,11 @@ object Ledger {
   private val runs = new AtomicLong
 
   private def on(sc: SparkContext): Listener =
-    installed.computeIfAbsent(sc, { sc => val l = new Listener; sc.addSparkListener(l); l })
+    installed.computeIfAbsent(sc, { sc =>
+      val l = new Listener
+      sc.addSparkListener(l)
+      l
+    })
 
   /** Builds the query and applies `act` to the frame, and returns what
     * `act` returned (or the first throwable of either step) with the
