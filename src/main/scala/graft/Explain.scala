@@ -28,7 +28,8 @@ import java.nio.file.{Files, Paths}
   *     runs each query once into the noop sink and prints its
   *     [[Ledger]] record, one line per Spark job: the query it belongs
   *     to, duration, stage task counts and the callsite — the Spark
-  *     UI's Jobs page with the UI off
+  *     UI's Jobs page with the UI off — and a total line that also
+  *     counts the jobs started during the run under no run's label
   */
 object Explain {
 

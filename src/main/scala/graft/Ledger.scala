@@ -12,30 +12,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One record per query run: the Spark jobs a query started while it
   * was built (eager) and while it ran, each with its seconds, stage task
-  * counts, callsite and shuffle bytes. [[run]] labels the run's jobs
-  * with a local property, which the threads Spark starts jobs from
-  * inherit (a broadcast's exchange thread, a streaming query's
-  * micro-batch thread), and a task counts toward the job that first
+  * counts and callsite, and the run's shuffle bytes. [[run]] labels the
+  * run's jobs with a local property, which the threads Spark starts jobs
+  * from inherit (a broadcast's exchange thread, a streaming query's
+  * micro-batch thread), and a task counts toward the run whose job first
   * submitted its stage: a record holds its own jobs, not a delta of
-  * process-wide counters. One listener per `SparkContext`, installed on
-  * first use. */
+  * process-wide counters. A job that starts during the run without an
+  * open run's label counts as `unlabelled` in every open run. One
+  * listener per `SparkContext`, installed on first use. */
 object Ledger {
 
-  /** One Spark job of a run. */
-  final case class Job(id: Int, sec: Double, tasks: Seq[Int], site: String, eager: Boolean,
-                       shuffleRead: Long, shuffleWrite: Long)
+  /** One Spark job of a run; `start` and `end` in epoch millis. */
+  final case class Job(id: Int, start: Long, end: Long, tasks: Seq[Int], site: String, eager: Boolean) {
+    def sec: Double = (end - start) / 1e3
+  }
 
-  /** One query run: its wall seconds (build and run) and its jobs. */
-  final case class Run(label: String, sec: Double, jobs: Seq[Job]) {
+  /** One query run: its wall seconds (build and run), its jobs, its
+    * shuffle bytes and the jobs that escaped every run's label. */
+  final case class Run(label: String, sec: Double, jobs: Seq[Job], shuffleRead: Long,
+                       shuffleWrite: Long, unlabelled: Int) {
     def eager: Int = jobs.count(_.eager)
-    def shuffleRead: Long = jobs.map(_.shuffleRead).sum
-    def shuffleWrite: Long = jobs.map(_.shuffleWrite).sum
 
     /** One `[prof-job]` line per job, then the `[prof-total]` line: the
       * Spark UI's Jobs page with the UI off. */
     def lines: Seq[String] = jobs.map { j =>
       f"[prof-job] ${j.id}%4d ${j.sec}%8.3fs  $label  [${j.tasks.mkString("+")} tasks] ${j.site}"
-    } :+ f"[prof-total] $label $sec%.3fs"
+    } :+ (f"[prof-total] $label $sec%.3fs" +
+      (if (unlabelled > 0) s" ($unlabelled unlabelled jobs)" else ""))
   }
 
   // the run's token (not the job description: a micro-batch thread
@@ -44,46 +47,43 @@ object Ledger {
   private val RunProperty = "graft.ledger.run"
   private val EagerProperty = "graft.ledger.eager"
 
-  private final class JobAcc(val id: Int, val start: Long, val tasks: Seq[Int], val site: String,
-                             val eager: Boolean) {
-    var end: Long = start
-    var read = 0L
-    var written = 0L
-    def job: Job = Job(id, (end - start) / 1e3, tasks, site, eager, read, written)
-  }
-
   private final class Listener extends SparkListener {
-    private val open = mutable.Map[String, mutable.ArrayBuffer[JobAcc]]()
-    private val byStage = mutable.Map[Int, JobAcc]()
+    // open runs, and each stage's run, by token
+    private val open = mutable.Map[String, Run]()
+    private val stages = mutable.Map[Int, String]()
 
-    def begin(token: String): Unit = synchronized { open(token) = mutable.ArrayBuffer.empty }
+    private def update(token: String)(f: Run => Run): Unit =
+      open.get(token).foreach(r => open(token) = f(r))
 
-    def end(token: String): Seq[Job] = synchronized {
-      val accs = open.remove(token).toSeq.flatten
-      byStage.filterInPlace((_, a) => !accs.contains(a))
-      accs.map(_.job)
+    def begin(token: String, label: String): Unit =
+      synchronized { open(token) = Run(label, 0, Vector.empty, 0, 0, 0) }
+
+    def end(token: String, sec: Double): Run = synchronized {
+      stages.filterInPlace((_, t) => t != token)
+      open.remove(token).get.copy(sec = sec)
     }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-      prop(RunProperty).flatMap(open.get).foreach { jobs =>
-        val acc = new JobAcc(e.jobId, e.time, e.stageInfos.map(_.numTasks),
-          e.stageInfos.lastOption.map(_.name).getOrElse("?"), prop(EagerProperty).isDefined)
-        jobs += acc
-        e.stageIds.foreach(s => if (!byStage.contains(s)) byStage(s) = acc)
+      prop(RunProperty).filter(open.contains) match {
+        case Some(token) =>
+          e.stageIds.foreach(s => if (!stages.contains(s)) stages(s) = token)
+          val job = Job(e.jobId, e.time, e.time, e.stageInfos.map(_.numTasks),
+            e.stageInfos.lastOption.map(_.name).getOrElse("?"), prop(EagerProperty).isDefined)
+          update(token)(r => r.copy(jobs = r.jobs :+ job))
+        case None => open.keys.toSeq.foreach(update(_)(r => r.copy(unlabelled = r.unlabelled + 1)))
       }
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      open.valuesIterator.flatten.find(_.id == e.jobId).foreach(_.end = e.time)
+      open.keys.toSeq.foreach(update(_)(r =>
+        r.copy(jobs = r.jobs.map(j => if (j.id == e.jobId) j.copy(end = e.time) else j))))
     }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      val m = e.taskMetrics
-      if (m != null) byStage.get(e.stageId).foreach { a =>
-        a.read += m.shuffleReadMetrics.totalBytesRead
-        a.written += m.shuffleWriteMetrics.bytesWritten
-      }
+      Option(e.taskMetrics).foreach(m => stages.get(e.stageId).foreach(update(_)(r => r.copy(
+        shuffleRead = r.shuffleRead + m.shuffleReadMetrics.totalBytesRead,
+        shuffleWrite = r.shuffleWrite + m.shuffleWriteMetrics.bytesWritten))))
     }
   }
 
@@ -108,7 +108,7 @@ object Ledger {
     val ledger = on(sc)
     val token = s"${runs.incrementAndGet()} $label"
     ListenerBridge.drainListenerBus(sc)
-    ledger.begin(token)
+    ledger.begin(token, label)
     val t0 = System.nanoTime()
     val out =
       try {
@@ -124,7 +124,7 @@ object Ledger {
       }
     val sec = (System.nanoTime() - t0) / 1e9
     ListenerBridge.drainListenerBus(sc)
-    (out, Run(label, sec, ledger.end(token)))
+    (out, ledger.end(token, sec))
   }
 
   /** [[run]] into the noop sink: the query fully evaluated. */

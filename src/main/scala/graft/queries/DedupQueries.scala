@@ -397,9 +397,10 @@ object DedupQueries {
     * pipeline memoizes the 60-int order via [[graft.SessionMemo.value]]
     * (VERDICT r11 #2) and passes it here — repeat invocations (bench
     * repeats, the recall artifact, specs) reuse it instead of
-    * re-scanning the print column. An EMPTY corpus has no ranking (sum() is null over zero rows — the r11 ADVICE
-    * NPE); it falls back to the static interleave, whose candidate set
-    * over zero docs is identically empty. */
+    * re-scanning the print column. An EMPTY corpus has no ranking
+    * (sum() is null over zero rows — the r11 ADVICE NPE); it falls back
+    * to the static interleave, whose candidate set over zero docs is
+    * identically empty. */
   private[graft] def simhashLayout(ranking: Option[Seq[Int]]): Seq[org.apache.spark.sql.Column] =
     ranking.map { ranked =>
       (0 until 8).map { c =>

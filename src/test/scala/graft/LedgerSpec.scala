@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -26,22 +28,16 @@ object LedgerSpec {
         .awaitTermination()
       s.table("tiny_stream")
     }))
-}
-
-/** A [[Ledger]] record holds exactly the jobs and shuffle bytes that a
-  * plain listener on the whole context sees over the same run. */
-class LedgerSpec extends SparkSpecBase {
-  import LedgerSpec.tinyQueries
 
   /** Runs `body` with a listener that sees every job and task of the context. */
-  private def watching(body: Everything => Unit): Unit = {
-    val all = new Everything
-    ListenerBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(all)
-    try body(all) finally spark.sparkContext.removeSparkListener(all)
+  def watching[T](spark: SparkSession)(body: Everything => T): T = {
+    val (sc, all) = (spark.sparkContext, new Everything(spark.sparkContext))
+    ListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(all)
+    try body(all) finally sc.removeSparkListener(all)
   }
 
-  private final class Everything extends SparkListener {
+  final class Everything(sc: SparkContext) extends SparkListener {
     private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val bytes = new java.util.concurrent.atomic.AtomicLongArray(2) // shuffle read, write
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
@@ -49,35 +45,35 @@ class LedgerSpec extends SparkSpecBase {
       bytes.addAndGet(0, m.shuffleReadMetrics.totalBytesRead)
       bytes.addAndGet(1, m.shuffleWriteMetrics.bytesWritten)
     }
-    def jobIds: Set[Int] = { ListenerBridge.drainListenerBus(spark.sparkContext); jobs.asScala.toSet }
+    /** The ids of every job started so far, in order. */
+    def jobIds: Seq[Int] = { ListenerBridge.drainListenerBus(sc); jobs.asScala.toSeq.sorted }
   }
+}
+
+/** A [[Ledger]] record holds exactly the jobs and shuffle bytes that a
+  * plain listener on the whole context sees over the same run. */
+class LedgerSpec extends SparkSpecBase {
+  import LedgerSpec.{tinyQueries, watching}
 
   private def query(name: String) = tinyQueries.toMap.apply(name)(spark, sfDir)
 
-  test("one run's record holds every job it started, the construct-time ones eager") {
-    watching { all =>
+  test("one run's record holds every job and shuffle byte it started, the construct-time jobs eager") {
+    watching(spark) { all =>
       var constructJobs = Set.empty[Int]
       val (out, run) = try Ledger.noop(spark, "mixed") {
         query("tiny_agg") // a construct-time count()
         query("tiny_stream") // an AvailableNow memory-sink drain
-        constructJobs = all.jobIds
+        constructJobs = all.jobIds.toSet
         query("tiny_join") // a broadcast join, run by the noop write
       } finally spark.catalog.dropTempView("tiny_stream")
       out.toTry.get
       val detail = run.lines.mkString("\n")
-      assert(run.jobs.map(_.id).toSet == all.jobIds && run.jobs.size == all.jobIds.size, detail)
+      assert(run.jobs.map(_.id) == all.jobIds && run.unlabelled == 0, detail)
       assert(run.jobs.filter(_.eager).map(_.id).toSet == constructJobs, detail)
       assert(run.eager == constructJobs.size && run.eager > 2 && run.jobs.size > run.eager, detail)
-    }
-  }
-
-  test("a groupBy run's shuffle bytes equal the process-wide delta") {
-    watching { all =>
-      val (out, run) = Ledger.noop(spark, "groupBy")(query("tiny_agg"))
-      out.toTry.get
-      assert(run.jobs.map(_.id).toSet == all.jobIds)
-      assert(run.shuffleRead > 0 && run.shuffleWrite > 0, run.lines.mkString("\n"))
-      assert((run.shuffleRead, run.shuffleWrite) == (all.bytes.get(0), all.bytes.get(1)))
+      // tiny_agg's groupBy moves shuffle bytes, every one of them the run's
+      assert(run.shuffleRead > 0 && run.shuffleWrite > 0, detail)
+      assert((run.shuffleRead, run.shuffleWrite) == (all.bytes.get(0), all.bytes.get(1)), detail)
     }
   }
 }

@@ -20,8 +20,11 @@ class TablesSpec extends SparkSpecBase {
   private def nanosAsLong[T](v: String)(body: => T): T =
     Confs.withSessionConf(spark, "spark.sql.legacy.parquet.nanosAsLong", v)(body)
 
-  private def jobsStartedBy(build: => DataFrame): Int =
-    Ledger.run(spark, "tables")(build)(_ => ())._2.eager
+  private def jobsStartedBy(build: => DataFrame): Int = {
+    val (out, run) = Ledger.run(spark, "tables")(build)(_ => ())
+    out.toTry.get
+    run.eager
+  }
 
   test("every harness table resolves to the inferred schema, nanosAsLong on and off") {
     val tables = new java.io.File(sfDir).list().toSeq.filter(_.endsWith(".parquet"))
