@@ -69,9 +69,36 @@ object Confs {
     *    a task's page table holds 8192 pages, so one task's Tungsten
     *    memory is capped at 8 GB, three orders of magnitude above that
     *    peak; a 4-core sf0.1 `graft.Bench` runs every query without
-    *    error. */
+    *    error.
+    *
+    *  - A `file:` filesystem that forks no process: `graft.io`'s
+    *    `ForklessLocalFileSystem` and, for `FileContext`,
+    *    `ForklessLocalFs` (both in `io/LocalFs.scala`). With no native
+    *    Hadoop library, stock Hadoop forks `chmod` for every local file
+    *    and directory it creates and `readlink` twice per `FileContext`
+    *    rename, the rename Spark's streaming checkpoint manager makes
+    *    for every state, offset and commit file. A JFR recording of a
+    *    perfbench corpus_dedup run (4 cores, 4 passes) counted 1,975
+    *    `jdk.ProcessStart` events, 418 in each t7 run; with these
+    *    classes it counts 16, none inside an op. The trade: a
+    *    permission with the sticky bit, and a real symbolic link, still
+    *    take the stock (forking) path. Other schemes are untouched.
+    *    Hadoop caches one `FileSystem` per scheme per JVM, so the conf
+    *    of the first `FileSystem.get` on `file:` decides its class.
+    *
+    *  - No per-session artifact isolation. Janino's generated-class
+    *    cache keys on the task's classloader as well as the code; with
+    *    isolation on, every cloned session (each streaming start clones
+    *    one) runs its tasks under a fresh classloader for its session
+    *    UUID, so every rerun of a streaming query missed the cache (t7:
+    *    24 classes per warm pass; 1 with isolation off). The trade:
+    *    jars or artifacts a session adds are visible to every session;
+    *    this repo adds none. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     .config("spark.buffer.pageSize", "1m")
+    .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForklessLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.ForklessLocalFs].getName)
+    .config("spark.sql.artifact.isolation.enabled", "false")
 }

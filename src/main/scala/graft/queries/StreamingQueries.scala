@@ -145,9 +145,14 @@ object StreamingQueries {
     * partition). The drained backlog is small relative to the
     * session's 32-partition batch tuning, so stateful drains run at 8
     * through [[graft.Confs.withShufflePartitions]], which restores the
-    * setting afterwards. At 100 TB the knob goes the other way — state
-    * partitioning is sized at FIRST start and pinned by the checkpoint. */
-  private val StatePartitions = 8
+    * setting afterwards. The width is capped at the context's default
+    * parallelism (its core count), so every stateful stage runs in one
+    * task wave: a 4-core host otherwise ran 8 store commits per stage in
+    * two waves, each partition's commit a fixed per-batch cost. At
+    * 100 TB the knob goes the other way — state partitioning is sized
+    * at FIRST start and pinned by the checkpoint. */
+  private def statePartitions(spark: SparkSession): Int =
+    math.min(8, spark.sparkContext.defaultParallelism)
 
   /** [[drain]] `frame` from `feed` into the memory table of query
     * `name` over `dir`, on that query's own scratch checkpoint, and
@@ -156,7 +161,7 @@ object StreamingQueries {
                             mode: String)(frame: DataFrame): DataFrame = {
     val qname = s"${name}_${ScratchDirs.tag(dir)}"
     val ckpt = ScratchDirs.of("stream", dir, "checkpoints", name)
-    graft.Confs.withShufflePartitions(spark, StatePartitions) {
+    graft.Confs.withShufflePartitions(spark, statePartitions(spark)) {
       drain(feed, ckpt, qname) {
         frame.writeStream.format("memory").queryName(qname).outputMode(mode)
           .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
@@ -434,7 +439,12 @@ object StreamingQueries {
     * result EQUALS the batch LSH relation — so the SAME DuckDB oracle
     * checks the whole streaming path. At 100 TB/day this is the shape
     * that avoids re-joining the full corpus per increment: each new doc
-    * touches only its 8 buckets. */
+    * touches only its 8 buckets.
+    *
+    * The drain runs no trailing no-data micro-batch. Such a batch only
+    * advances the watermark to fire timeouts and evict state, and under
+    * the constant ingest timestamp below no timeout can fire, so it
+    * would only commit every state store once more, for no output. */
   def t7StreamLshDedup(spark: SparkSession, dir: String): DataFrame = {
     val feed = ScratchDirs.of("stream", dir, "docs_feed")
     stageTable(dir, "documents.parquet", feed)
@@ -456,8 +466,11 @@ object StreamingQueries {
       .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
     val pairs = StreamOps.lshCandidatePairs(spark, banded, failOnHotBucket = true)
       .toDF("id_a", "id_b")
-    DedupQueries.verifyPairs(spark, dir,
-      drainToMemory(spark, dir, feed, "t7_stream_lsh_dedup", "append")(pairs))
+    val drained = graft.Confs.withSessionConf(spark,
+        "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      drainToMemory(spark, dir, feed, "t7_stream_lsh_dedup", "append")(pairs)
+    }
+    DedupQueries.verifyPairs(spark, dir, drained)
   }
 
   /** T3: idempotent re-publish — the busiest day's summary is written
@@ -499,7 +512,7 @@ object StreamingQueries {
     ev.repartition(4).write.mode("overwrite").parquet(feed)
     val ckpt = ScratchDirs.of("stream", dir, "upsert_checkpoint")
     val stream = StreamOps.fileFeed(spark, feed, ev, maxFilesPerTrigger = 1)
-    graft.Confs.withShufflePartitions(spark, StatePartitions) {
+    graft.Confs.withShufflePartitions(spark, statePartitions(spark)) {
       drain(feed, ckpt, "t8_stream_merge_upsert") {
         ScratchDirs.clear(state) // each attempt merges into an empty table
         stream.writeStream
@@ -672,7 +685,7 @@ object StreamingQueries {
         .outputMode("update").option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
     StreamOps.withRocksDBStateStore(spark) {
-      graft.Confs.withShufflePartitions(spark, StatePartitions) {
+      graft.Confs.withShufflePartitions(spark, statePartitions(spark)) {
         // one attempt is the whole restart scenario, so a retry re-runs
         // both sessions from an empty checkpoint and feed
         drain(feed, ckpt, "t14_checkpoint_recovery") {

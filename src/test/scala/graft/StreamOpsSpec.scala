@@ -311,6 +311,26 @@ class StreamOpsSpec extends SparkSpecBase {
       err.getMessage.contains("part-00001-"), err.toString)
   }
 
+  test("drain: a rerun of a stateful stream compiles no new classes") {
+    // each start clones the session; Janino's class cache keys on the
+    // task classloader, which is shared only with artifact isolation off
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val base = Files.createTempDirectory("rerun_codegen").toString
+    spark.range(60).select((col("id") % 7).as("k")).repartition(2).write.parquet(s"$base/feed")
+    def drainOnce(): Long = {
+      graft.queries.StreamingQueries.drain(s"$base/feed", s"$base/ckpt", "rerun_codegen") {
+        spark.readStream.schema("k long").parquet(s"$base/feed").groupBy(col("k")).count()
+          .writeStream.format("memory").queryName("rerun_codegen").outputMode("complete")
+          .option("checkpointLocation", s"$base/ckpt").trigger(Trigger.AvailableNow()).start()
+      }
+      assert(spark.table("rerun_codegen").count() == 7)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    }
+    val first = drainOnce()
+    val second = drainOnce()
+    assert(second == first, s"the rerun compiled ${second - first} classes")
+  }
+
   test("publishBatch: a file: URI publishes the rows a plain path does, with one marker per batch") {
     val root = Files.createTempDirectory("publish").toString
     val df = spark.range(20).select(col("id"), (col("id") % 3).as("shard"))
