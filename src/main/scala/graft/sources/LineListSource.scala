@@ -320,7 +320,9 @@ class LineListMicroBatchStream(path: String, prefix: Option[String],
   * `part-…` name only in [[LineListWrite.commit]], so a failed or
   * speculated task can never leave a half-visible artifact (its
   * temps are deleted in abort, and the reader lists only
-  * non-`_`-prefixed files, the Hadoop visibility convention). */
+  * non-`_`-prefixed files, the Hadoop visibility convention). A part
+  * name that is already taken, or a rename that fails, fails the commit
+  * with an `IOException` naming both paths. */
 class LineListWriteBuilder(path: String, schema: StructType)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
@@ -347,8 +349,15 @@ class LineListWrite(path: String, doTruncate: Boolean, schema: StructType)
     val conf = new Configuration()
     messages.foreach { case LineListCommitMessage(tmp, fin) =>
       val t = new Path(tmp)
+      val dst = new Path(t.getParent, fin)
       val fs = t.getFileSystem(conf)
-      fs.rename(t, new Path(t.getParent, fin))
+      // a Hadoop rename onto an existing directory moves the file INTO
+      // it, and onto an existing local file replaces it: either way a
+      // part would be lost to the reader
+      if (fs.exists(dst))
+        throw new java.io.IOException(s"line-list commit: $dst exists, not renaming $t onto it")
+      if (!fs.rename(t, dst))
+        throw new java.io.IOException(s"line-list commit: rename $t -> $dst failed")
     }
   }
 

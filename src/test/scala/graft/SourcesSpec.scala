@@ -134,6 +134,23 @@ class SourcesSpec extends SparkSpecBase {
     assert(names.size == 3, s"expected 3 committed parts: $names")
   }
 
+  test("s13 custom sink commit fails, naming the path, when a part name is taken") {
+    val out = java.nio.file.Files.createTempDirectory("linelist_taken")
+    val taken = java.nio.file.Files.createDirectories(out.resolve("part-00000"))
+    java.nio.file.Files.writeString(taken.resolve("keep"), "x")
+    val err = intercept[Exception] {
+      spark.range(3).select(col("id").cast("string").as("value"))
+        .select(col("value"), length(col("value")).cast("int").as("len")).coalesce(1)
+        .write.format("graft.sources.LineListSource")
+        .option("path", out.toString).mode("append").save()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toSeq
+    assert(msgs.exists(m => m != null && m.contains(s"$taken")), msgs.mkString(" | "))
+    // the part did not land inside the taken directory
+    assert(taken.toFile.list().toSeq == Seq("keep"))
+  }
+
   test("t10 streaming connector drains in maxFilesPerTrigger-bounded microbatches") {
     import org.apache.spark.sql.functions._
     val out = graft.ScratchDirs.of("sources", sfDir, "linelist_batched")
