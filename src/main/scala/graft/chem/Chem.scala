@@ -592,7 +592,9 @@ object Chem {
     * with a double bond to another system atom contributes 1, a donor
     * 2, a carbon whose only multiple bond leaves the system 0 (still
     * sp2 — the pyranone/quinoid shape), a heteroatom whose only
-    * multiple bond leaves the system fails the whole system. Counting
+    * multiple bond leaves the system fails the whole system, and so
+    * does an atom with two multiple bonds (a cumulated C=C=C centre is
+    * sp, and aromatizing it would add hydrogens). Counting
     * at the system level is what makes perception KEKULÉ-PHASE-
     * INDEPENDENT: per-ring counting sees 3 vs 2 endocyclic doubles for
     * naphthalene's two phases, but every atom of any Kekulé naphthalene
@@ -676,7 +678,8 @@ object Chem {
         (math.min(a, b), math.max(a, b))
       }.toSet
     val ringEdges = ringList.map(edgesOf)
-    def anyMultiple(a: Int): Boolean = m.adj(a).exists(t => t._2 == 2 || t._2 == 3)
+    def multiples(a: Int): Int = m.adj(a).count(t => t._2 == 2 || t._2 == 3)
+    def anyMultiple(a: Int): Boolean = multiples(a) > 0
     def donorish(a: Int): Boolean = {
       val el = m.atoms(a).element
       (el == "N" || el == "O" || el == "S") && !anyMultiple(a)
@@ -725,7 +728,8 @@ object Chem {
       def contrib(a: Int): Option[Int] = {
         val el = m.atoms(a).element
         val intra = m.adj(a).exists { case (b, o) => o == 2 && sysAtoms(b) }
-        if (intra) Some(1)
+        if (multiples(a) > 1) None // cumulated C=C=C centre: sp, not sp2
+        else if (intra) Some(1)
         else if (donorish(a)) Some(2)
         else if (el != "C") None // heteroatom with only exo multiple bonds
         else Some(0) // sp2 carbon with an exocyclic multiple bond

@@ -294,6 +294,18 @@ class ChemSpec extends SparkSpecBase {
     assert(Chem.canonicalIso(a) == a)
   }
 
+  test("a cumulated ring carbon never aromatizes, labelled or not") {
+    // ChemProps' isotope property, shrunk: the C=C=C centre makes the
+    // 6-ring non-aromatic; aromatizing it would add two hydrogens, which
+    // the bracket [13C] (a fixed zero H count) does not take, so the
+    // labelled and unlabelled flat keys would split
+    val flat = Chem.canonical("C=1C(NC=C=C=1)=C2NC2C")
+    assert(flat.forall(!_.isLower), s"cumulated ring aromatized: $flat")
+    assert(Chem.canonical("C=1C(NC=C=[13C]=1)=C2NC2C") == flat)
+    val iso = Chem.canonicalIso("C=1C(NC=C=[13C]=1)=C2NC2C")
+    assert(iso.contains("13C") && Chem.canonicalIso(iso) == iso, iso)
+  }
+
   test("isomeric canonical: isotope-only stereocenter is real chirality") {
     // four substituents distinct ONLY via the mass label: the mark must
     // survive dropFalseStereo (isotope-aware ranks) and the two hands
