@@ -5,13 +5,17 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.unsafe.types.UTF8String
 
-/** SQL surface of the library's custom expressions: every custom
-  * Catalyst expression is also callable from `spark.sql(...)`, either
-  * by registering into an existing session (`Functions.register`) or
-  * via `spark.sql.extensions=graft.plans.GraftExtensions` at session
-  * build (which additionally installs the MultiContains optimizer
-  * rule). Builders take SQL literals for the non-column parameters
-  * (pattern lists, k).
+/** SQL surface of the library's custom expressions, registered into
+  * an existing session (`Functions.register`) or through
+  * `spark.sql.extensions=graft.plans.GraftExtensions` at session build
+  * (which also installs the MultiContains optimizer rule). Registered:
+  * every static-call kernel in [[graft.expr.Kernels]], the hand-written
+  * `dot_product`, `block_hash60`, `multi_contains_any` and
+  * `bpe_apply_merges`, the `topk_mean` and `topk_pairs` aggregates, and
+  * Spark's bloom-filter pair. Not registered: the MisraGries heavy-hitter
+  * aggregate and `max_tuple` / `min_tuple`, which are column-API only.
+  * Builders take SQL literals for the non-column parameters (pattern
+  * lists, k).
   */
 object Functions {
 
@@ -25,29 +29,14 @@ object Functions {
     case l: Long => l.toInt
     case other => other.toString.toInt
   }
-  private def dbl(e: Expression): Double = e.eval() match {
-    case d: Double => d
-    case d: java.math.BigDecimal => d.doubleValue()
-    case d: org.apache.spark.sql.types.Decimal => d.toDouble
-    case other => other.toString.toDouble
-  }
 
   /** name → builder over analyzed argument expressions. Aggregate
     * builders return the raw AggregateFunction; the analyzer wraps it. */
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "normalize_nfc"       -> (e => NormalizeNfc(e.head)),
-    "transliterate_ascii" -> (e => TransliterateAscii(e.head)),
-    "normalize_compound"  -> (e => NormalizeCompound(e.head)),
-    "simhash64"           -> (e => SimHash64(e.head)),
-    "poly61"              -> (e => PolyHash61(e.head)),
-    "word_gram_poly61"    -> (e => WordGramPoly61(e(0), int(e(1)))),
+  val builders: Seq[(String, Seq[Expression] => Expression)] =
+    Kernels.all.map(k => k.name -> (k.expr _)) ++ Seq(
     "dot_product"         -> (e => DotProduct(e(0), e(1))),
-    "bit_tanimoto"        -> (e => BitTanimoto(e(0), e(1))),
-    "bit_tversky"         -> (e => BitTversky(e(0), e(1), dbl(e(2)), dbl(e(3)))),
-    "bit_dice"            -> (e => BitDice(e(0), e(1))),
+    "block_hash60"        -> (e => BlockHash60(e.head)),
     "multi_contains_any"  -> (e => MultiContainsAny(e.head, e.tail.map(str))),
-    "jaro_winkler"        -> (e => JaroWinklerSim(e(0), e(1))),
-    "cdc_boundaries"      -> (e => CdcBoundaries(e.head)),
     // bpe_apply_merges(word, a1, b1, a2, b2, ...): the whole ordered
     // merge table in one call — pairs as alternating literals
     "bpe_apply_merges"    -> (e => {

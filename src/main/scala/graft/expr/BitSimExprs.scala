@@ -1,18 +1,14 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.lit
 
 /** Bit-vector similarity kernels (SURVEY §2.10 D4 — the reference's
   * Tanimoto / Tversky(α=.7,β=.3) / Dice over ECFP fingerprints,
   * finalize_realease.py:213,345-349): fingerprints are `array<long>`
   * words (2048-bit ECFP = 32 words), similarity is popcounts of AND/OR
-  * in ONE fused loop per pair — a single codegen'd static call, no
+  * in ONE fused loop per pair — a single static call, no
   * intermediate arrays, no boxing. The HOF form
   * (`aggregate(zip_with(a,b,(x,y)->bit_count(x&y)),...)`) allocates and
   * re-walks per metric; these kernels compute every popcount a metric
@@ -69,56 +65,12 @@ object BitSimKernels {
   }
 }
 
-sealed trait BitSimExpr extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  private def ok(e: Expression): Boolean = e.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left) && ok(right)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint> bitvec args, got " +
-        s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
-}
-
-case class BitTanimoto(left: Expression, right: Expression) extends BitSimExpr {
-  override def nullSafeEval(a: Any, b: Any): Any =
-    BitSimKernels.tanimoto(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.BitSimKernels.tanimoto($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BitTanimoto =
-    copy(l, r)
-  override def prettyName: String = "bit_tanimoto"
-}
-
-case class BitTversky(left: Expression, right: Expression,
-                      alpha: Double, beta: Double) extends BitSimExpr {
-  override def nullSafeEval(a: Any, b: Any): Any =
-    BitSimKernels.tversky(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], alpha, beta)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expr.BitSimKernels.tversky($a, $b, $alpha, $beta)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BitTversky =
-    copy(l, r, alpha, beta)
-  override def prettyName: String = "bit_tversky"
-}
-
-case class BitDice(left: Expression, right: Expression) extends BitSimExpr {
-  override def nullSafeEval(a: Any, b: Any): Any =
-    BitSimKernels.dice(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.BitSimKernels.dice($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BitDice =
-    copy(l, r)
-  override def prettyName: String = "bit_dice"
-}
-
 object bitsimfunctions {
-  def bit_tanimoto(a: Column, b: Column): Column =
-    Bridge.column(BitTanimoto(Bridge.expression(a), Bridge.expression(b)))
+  /** |A∧B| / |A∨B| over `array<bigint>` bit vectors ([[BitSimKernels.tanimoto]]). */
+  def bit_tanimoto(a: Column, b: Column): Column = Kernels.BitTanimoto(a, b)
+  /** |A∧B| / (|A∧B| + α·|A∖B| + β·|B∖A|) ([[BitSimKernels.tversky]]). */
   def bit_tversky(a: Column, b: Column, alpha: Double, beta: Double): Column =
-    Bridge.column(BitTversky(Bridge.expression(a), Bridge.expression(b), alpha, beta))
-  def bit_dice(a: Column, b: Column): Column =
-    Bridge.column(BitDice(Bridge.expression(a), Bridge.expression(b)))
+    Kernels.BitTversky(a, b, lit(alpha), lit(beta))
+  /** 2·|A∧B| / (|A| + |B|) ([[BitSimKernels.dice]]). */
+  def bit_dice(a: Column, b: Column): Column = Kernels.BitDice(a, b)
 }

@@ -65,19 +65,23 @@ object BpeKernel {
   }
 }
 
+/** One ordered merge table, the per-instance reference object that
+  * generated code calls (`abs` precomputed once per table). */
+final class BpeMerges(as: Array[String], bs: Array[String]) extends Serializable {
+  private val abs = as.lazyZip(bs).map(_ + _)
+  def apply(word: UTF8String): UTF8String = BpeKernel.applyAll(word, as, bs, abs)
+}
+
 /** `bpe_apply_merges(word)` with the learned merge table baked in as
   * literals (driver-bounded: the merge table is ≤|vocab| rows and
   * already collected by the learn step). Seq params keep case-class
   * equality semantic (arrays would compare by reference and break
-  * plan canonicalization); the hot path uses the cached arrays. */
+  * plan canonicalization); the hot path uses the cached table. */
 case class BpeApplyMerges(child: Expression, pairsA: Seq[String], pairsB: Seq[String])
     extends UnaryExpression {
   require(pairsA.length == pairsB.length, "merge pair lists must align")
 
-  @transient private lazy val aArr = pairsA.toArray
-  @transient private lazy val bArr = pairsB.toArray
-  @transient private lazy val abArr =
-    pairsA.lazyZip(pairsB).map((a, b) => a + b).toArray
+  @transient private lazy val merges = new BpeMerges(pairsA.toArray, pairsB.toArray)
 
   override def dataType: DataType = StringType
   override def checkInputDataTypes(): TypeCheckResult =
@@ -85,15 +89,11 @@ case class BpeApplyMerges(child: Expression, pairsA: Seq[String], pairsB: Seq[St
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
 
-  override def nullSafeEval(input: Any): Any =
-    BpeKernel.applyAll(input.asInstanceOf[UTF8String], aArr, bArr, abArr)
+  override def nullSafeEval(input: Any): Any = merges(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("bpeA", aArr, "java.lang.String[]")
-    val bRef = ctx.addReferenceObj("bpeB", bArr, "java.lang.String[]")
-    val abRef = ctx.addReferenceObj("bpeAB", abArr, "java.lang.String[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expr.BpeKernel.applyAll($c, $aRef, $bRef, $abRef)")
+    val m = ctx.addReferenceObj("bpe", merges, classOf[BpeMerges].getName)
+    defineCodeGen(ctx, ev, c => s"$m.apply($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeApplyMerges =

@@ -1,21 +1,16 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.chem.Chem
 
-/** Catalyst expressions over the [[graft.chem.Chem]] kernels — the
+/** `UTF8String` entry points of the [[graft.chem.Chem]] kernels — the
   * in-engine D2/D3/D5 chemistry surface (SURVEY §2.10;
-  * finalize_realease.py:116-144,230-249,275-331). All are codegen'd
-  * static calls (house pattern of [[TextNormExprs]]): the chemistry is
-  * a scan-stage scalar kernel, embarrassingly parallel at 100 TB. */
+  * finalize_realease.py:116-144,230-249,275-331), called by the
+  * [[Kernels]] chemistry declarations: the chemistry is a scan-stage
+  * scalar kernel, embarrassingly parallel at 100 TB. */
 object ChemKernels {
   def fromSeed(seed: Long, variant: Int): UTF8String =
     UTF8String.fromString(Chem.fromSeed(seed, variant))
@@ -54,356 +49,92 @@ object ChemKernels {
     Chem.hasSubstructure(s.toString, p.toString)
 }
 
-/** Deterministic SMILES rendering of the seeded molecule family
-  * ([[Chem.fromSeed]]) — the engine's generative fixture source, with
-  * every structural decision SQL-replicable for the oracle. */
-case class MolFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.fromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.fromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_from_seed"
-}
-
-/** Chiral twin of [[MolFromSeed]] ([[Chem.chiralFromSeed]]): renders a
-  * one-stereocenter molecule family whose enantiomer hand and skeleton
-  * are modular seed arithmetic, for the stereo extension's generative
-  * oracle. */
-case class MolChiralFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_chiral_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.chiralFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.chiralFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolChiralFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_chiral_from_seed"
-}
-
-/** E/Z twin of [[MolChiralFromSeed]] ([[Chem.ezFromSeed]]): renders a
-  * one-double-bond molecule family whose cis/trans geometry and
-  * skeleton are modular seed arithmetic. */
-case class MolEzFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_ez_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.ezFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.ezFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolEzFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_ez_from_seed"
-}
-
-/** Isotope twin of [[MolChiralFromSeed]] ([[Chem.isoFromSeed]]):
-  * renders a mass-labeled molecule family whose label site and
-  * skeleton are modular seed arithmetic (including the deliberate
-  * symmetric-collapse cells the oracle replays as CASE terms). */
-case class MolIsoFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_iso_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.isoFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.isoFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolIsoFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_iso_from_seed"
-}
-
-/** Aromatic-ring twin of [[MolIsoFromSeed]] ([[Chem.aromFromSeed]]):
-  * renders a heteroaromatic ring family as one aromatic and two
-  * Kekulé forms, for the aromaticity-perception extension's
-  * generative oracle. */
-case class MolAromFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_arom_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.aromFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.aromFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolAromFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_arom_from_seed"
-}
-
-/** Fused-bicyclic twin of [[MolAromFromSeed]] ([[Chem.fusedFromSeed]]):
-  * renders a 6-6/6-5 fused heteroaromatic family as one aromatic and
-  * two Kekulé-phase forms — the phase-independence contract of the
-  * fused-system perception ([[Chem.aromatize]] stage 2). */
-case class MolFusedFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_fused_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.fusedFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.fusedFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolFusedFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_fused_from_seed"
-}
-
-/** Polycyclic/quinoid twin of [[MolFusedFromSeed]]
-  * ([[Chem.polyFromSeed]]): renders the pyrene/acenaphthylene/quinone
-  * family as one perceived form and two full-Kekulé phases — the
-  * generative contract of [[Chem.aromatize]]'s per-ring fallback. */
-case class MolPolyFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_poly_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.polyFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.polyFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolPolyFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_poly_from_seed"
-}
-
-/** Quarantine-class twin of [[MolPolyFromSeed]] ([[Chem.quarFromSeed]]):
-  * renders the charged-aromatic/fused-non-candidate family (plus a
-  * benign benzene control) as one aromatic and two Kekulé forms — the
-  * generative oracle of the d15 perception-quarantine flag. */
-case class MolQuarFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_quar_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.quarFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.quarFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolQuarFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_quar_from_seed"
-}
-
-/** Half-aromatic rendering twin of [[MolQuarFromSeed]]
-  * ([[Chem.halfFromSeed]]): renders a fused bicyclic as the aromatic
-  * form, a full Kekulé form, and the HALF-aromatic mixed form real
-  * corpora emit — the generative oracle of the d16 class-3 quarantine
-  * flag (plus a naphthoquinone control whose mixed rendering is
-  * certifiable and must NOT flag). */
-case class MolHalfFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_half_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.halfFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.halfFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolHalfFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_half_from_seed"
-}
-
-/** Tricyclic mixed-rendering twin of [[MolHalfFromSeed]]
-  * ([[Chem.triFromSeed]]): renders a linear 3-ring system mixed at one
-  * and at both fusion bonds — the d17 generative CLOSURE of the
-  * quarantine taxonomy (the candidate "class 4" reduces to class 3;
-  * see [[Chem.perceptionIncompleteGraph]]'s closure note). */
-case class MolTriFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_tri_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.triFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.triFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolTriFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_tri_from_seed"
-}
-
-/** D15/D16 — the perception-incomplete quarantine flag
-  * ([[Chem.perceptionIncomplete]]): true when the input rendering is in
-  * a class the aromatize kernel documents as out of scope (charged ring
-  * carbons; candidate rings fused to conjugated non-candidate rings;
-  * half-aromatic mixed renderings that pass through as written),
-  * so downstream dedup routes the molecule instead of trusting a
-  * canonical key that may not collapse with its other renderings.
-  * True for unparseable input as well. */
-case class PerceptionIncomplete(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"perception_incomplete requires a string argument, got ${child.dataType.catalogString}")
-  override def nullSafeEval(input: Any): Any =
-    ChemKernels.perceptionIncomplete(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.ChemKernels.perceptionIncomplete($c)")
-  override protected def withNewChildInternal(newChild: Expression): PerceptionIncomplete =
-    copy(newChild)
-  override def prettyName: String = "perception_incomplete"
-}
-
-/** Lactam/amide twin of [[MolFromSeed]] ([[Chem.lactamFromSeed]]):
-  * renders an amide family as one amide and two lactim (C–OH, C=N)
-  * forms, for the lactim→lactam tautomer rule's generative oracle. */
-case class MolLactamFromSeed(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mol_lactam_from_seed requires (bigint, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ChemKernels.lactamFromSeed(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.lactamFromSeed($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MolLactamFromSeed =
-    copy(l, r)
-  override def prettyName: String = "mol_lactam_from_seed"
-}
-
-/** ISOMERIC canonical SMILES ([[Chem.canonicalIso]]) — the
-  * stereo-preserving extension beyond the reference's non-isomeric
-  * canonic(); same NULL-on-unparseable result-null codegen as
-  * [[CanonicalSmiles]]. */
-case class CanonicalSmilesIso(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"canonical_smiles_iso requires a string argument, got ${child.dataType.catalogString}")
-  override def nullSafeEval(input: Any): Any =
-    ChemKernels.canonicalIso(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.expr.ChemKernels.canonicalIso($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  override protected def withNewChildInternal(newChild: Expression): CanonicalSmilesIso = copy(newChild)
-  override def prettyName: String = "canonical_smiles_iso"
-}
-
-/** D2 — non-isomeric canonical SMILES (parse → largest fragment →
-  * uncharge → canonical tautomer → canonical ranking; minimal port of
-  * finalize_realease.py:230-249). NULL on unparseable input (the
-  * reference's canonic() returns None and drops the row), so the
-  * codegen tracks result-null, not just input-null — `defineCodeGen`
-  * alone would let a null kernel result flow as a "non-null" value. */
-case class CanonicalSmiles(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"canonical_smiles requires a string argument, got ${child.dataType.catalogString}")
-  override def nullSafeEval(input: Any): Any =
-    ChemKernels.canonical(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.expr.ChemKernels.canonical($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  override protected def withNewChildInternal(newChild: Expression): CanonicalSmiles = copy(newChild)
-  override def prettyName: String = "canonical_smiles"
-}
-
-/** D3 — Morgan/ECFP fingerprint (radius 2, 2048 bits) as 32 long
-  * words, the same `array<long>` shape the D4 popcount kernels
-  * ([[BitSimKernels]]) consume (finalize_realease.py:116-144). */
-case class MorganFingerprint(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true // null on unparseable input, like [[CanonicalSmiles]]
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"morgan_fp requires a string argument, got ${child.dataType.catalogString}")
-  override def nullSafeEval(input: Any): Any =
-    ChemKernels.morganFp(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.expr.ChemKernels.morganFp($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  override protected def withNewChildInternal(newChild: Expression): MorganFingerprint = copy(newChild)
-  override def prettyName: String = "morgan_fp"
-}
-
-/** D5 — tautomer-aware substructure containment: the target is
-  * normalized (largest fragment, uncharge, canonical tautomer) before
-  * the VF2 match, so a keto pattern finds an enol rendering
-  * (finalize_realease.py:275-331). */
-case class HasSubstructure(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType.isInstanceOf[StringType] && right.dataType.isInstanceOf[StringType])
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"has_substructure requires (string, string), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def nullSafeEval(target: Any, pattern: Any): Any =
-    ChemKernels.hasSub(target.asInstanceOf[UTF8String], pattern.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ChemKernels.hasSub($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): HasSubstructure =
-    copy(l, r)
-  override def prettyName: String = "has_substructure"
-}
-
 /** Column-level entry points. */
 object chemfunctions {
-  private def expr(c: Column): Expression = Bridge.expression(c)
-  private def col(e: Expression): Column = Bridge.column(e)
+  import Kernels._
 
-  def mol_from_seed(seed: Column, variant: Column): Column =
-    col(MolFromSeed(expr(seed), expr(variant)))
+  /** Deterministic SMILES rendering of the seeded molecule family
+    * ([[Chem.fromSeed]]) — the engine's generative fixture source, with
+    * every structural decision SQL-replicable for the oracle. */
+  def mol_from_seed(seed: Column, variant: Column): Column = MolFromSeed(seed, variant)
+  /** Chiral twin of [[mol_from_seed]] ([[Chem.chiralFromSeed]]): a
+    * one-stereocenter family whose enantiomer hand and skeleton are
+    * modular seed arithmetic, for the stereo extension's generative
+    * oracle. */
   def mol_chiral_from_seed(seed: Column, variant: Column): Column =
-    col(MolChiralFromSeed(expr(seed), expr(variant)))
-  def mol_ez_from_seed(seed: Column, variant: Column): Column =
-    col(MolEzFromSeed(expr(seed), expr(variant)))
-  def mol_iso_from_seed(seed: Column, variant: Column): Column =
-    col(MolIsoFromSeed(expr(seed), expr(variant)))
-  def mol_arom_from_seed(seed: Column, variant: Column): Column =
-    col(MolAromFromSeed(expr(seed), expr(variant)))
+    MolChiralFromSeed(seed, variant)
+  /** E/Z twin ([[Chem.ezFromSeed]]): a one-double-bond family whose
+    * cis/trans geometry and skeleton are modular seed arithmetic. */
+  def mol_ez_from_seed(seed: Column, variant: Column): Column = MolEzFromSeed(seed, variant)
+  /** Isotope twin ([[Chem.isoFromSeed]]): a mass-labeled family whose
+    * label site and skeleton are modular seed arithmetic (including the
+    * deliberate symmetric-collapse cells the oracle replays as CASE
+    * terms). */
+  def mol_iso_from_seed(seed: Column, variant: Column): Column = MolIsoFromSeed(seed, variant)
+  /** Aromatic-ring twin ([[Chem.aromFromSeed]]): a heteroaromatic ring
+    * family as one aromatic and two Kekulé forms, for the
+    * aromaticity-perception extension's generative oracle. */
+  def mol_arom_from_seed(seed: Column, variant: Column): Column = MolAromFromSeed(seed, variant)
+  /** Fused-bicyclic twin ([[Chem.fusedFromSeed]]): a 6-6/6-5 fused
+    * heteroaromatic family as one aromatic and two Kekulé-phase forms —
+    * the phase-independence contract of the fused-system perception
+    * ([[Chem.aromatize]] stage 2). */
   def mol_fused_from_seed(seed: Column, variant: Column): Column =
-    col(MolFusedFromSeed(expr(seed), expr(variant)))
+    MolFusedFromSeed(seed, variant)
+  /** Lactam/amide twin ([[Chem.lactamFromSeed]]): an amide family as
+    * one amide and two lactim (C–OH, C=N) forms, for the lactim→lactam
+    * tautomer rule's generative oracle. */
   def mol_lactam_from_seed(seed: Column, variant: Column): Column =
-    col(MolLactamFromSeed(expr(seed), expr(variant)))
-  def mol_poly_from_seed(seed: Column, variant: Column): Column =
-    col(MolPolyFromSeed(expr(seed), expr(variant)))
-  def mol_quar_from_seed(seed: Column, variant: Column): Column =
-    col(MolQuarFromSeed(expr(seed), expr(variant)))
-  def mol_half_from_seed(seed: Column, variant: Column): Column =
-    col(MolHalfFromSeed(expr(seed), expr(variant)))
-  def mol_tri_from_seed(seed: Column, variant: Column): Column =
-    col(MolTriFromSeed(expr(seed), expr(variant)))
-  def perception_incomplete(c: Column): Column = col(PerceptionIncomplete(expr(c)))
-  def canonical_smiles(c: Column): Column = col(CanonicalSmiles(expr(c)))
-  def canonical_smiles_iso(c: Column): Column = col(CanonicalSmilesIso(expr(c)))
-  def morgan_fp(c: Column): Column = col(MorganFingerprint(expr(c)))
+    MolLactamFromSeed(seed, variant)
+  /** Polycyclic/quinoid twin ([[Chem.polyFromSeed]]): the
+    * pyrene/acenaphthylene/quinone family as one perceived form and two
+    * full-Kekulé phases — the generative contract of
+    * [[Chem.aromatize]]'s per-ring fallback. */
+  def mol_poly_from_seed(seed: Column, variant: Column): Column = MolPolyFromSeed(seed, variant)
+  /** Quarantine-class twin ([[Chem.quarFromSeed]]): the
+    * charged-aromatic/fused-non-candidate family (plus a benign benzene
+    * control) as one aromatic and two Kekulé forms — the generative
+    * oracle of the d15 perception-quarantine flag. */
+  def mol_quar_from_seed(seed: Column, variant: Column): Column = MolQuarFromSeed(seed, variant)
+  /** Half-aromatic rendering twin ([[Chem.halfFromSeed]]): a fused
+    * bicyclic as the aromatic form, a full Kekulé form, and the
+    * HALF-aromatic mixed form real corpora emit — the generative oracle
+    * of the d16 class-3 quarantine flag (plus a naphthoquinone control
+    * whose mixed rendering is certifiable and must NOT flag). */
+  def mol_half_from_seed(seed: Column, variant: Column): Column = MolHalfFromSeed(seed, variant)
+  /** Tricyclic mixed-rendering twin ([[Chem.triFromSeed]]): a linear
+    * 3-ring system mixed at one and at both fusion bonds — the d17
+    * generative CLOSURE of the quarantine taxonomy (the candidate
+    * "class 4" reduces to class 3; see
+    * [[Chem.perceptionIncompleteGraph]]'s closure note). */
+  def mol_tri_from_seed(seed: Column, variant: Column): Column = MolTriFromSeed(seed, variant)
+  /** D15/D16 — the perception-incomplete quarantine flag
+    * ([[Chem.perceptionIncomplete]]): true when the input rendering is
+    * in a class the aromatize kernel documents as out of scope (charged
+    * ring carbons; candidate rings fused to conjugated non-candidate
+    * rings; half-aromatic mixed renderings that pass through as
+    * written), so downstream dedup routes the molecule instead of
+    * trusting a canonical key that may not collapse with its other
+    * renderings. True for unparseable input as well. */
+  def perception_incomplete(c: Column): Column = PerceptionIncomplete(c)
+  /** D2 — non-isomeric canonical SMILES (parse → largest fragment →
+    * uncharge → canonical tautomer → canonical ranking; minimal port of
+    * finalize_realease.py:230-249). NULL on unparseable input: the
+    * reference's canonic() returns None and drops the row. */
+  def canonical_smiles(c: Column): Column = CanonicalSmiles(c)
+  /** ISOMERIC canonical SMILES ([[Chem.canonicalIso]]) — the
+    * stereo-preserving extension beyond the reference's non-isomeric
+    * canonic(); NULL on unparseable input, as [[canonical_smiles]]. */
+  def canonical_smiles_iso(c: Column): Column = CanonicalSmilesIso(c)
+  /** D3 — Morgan/ECFP fingerprint (radius 2, 2048 bits) as 32 long
+    * words, the same `array<long>` shape the D4 popcount kernels
+    * ([[BitSimKernels]]) consume (finalize_realease.py:116-144); NULL on
+    * unparseable input. */
+  def morgan_fp(c: Column): Column = MorganFingerprint(c)
+  /** D5 — tautomer-aware substructure containment: the target is
+    * normalized (largest fragment, uncharge, canonical tautomer) before
+    * the VF2 match, so a keto pattern finds an enol rendering
+    * (finalize_realease.py:275-331). */
   def has_substructure(target: Column, pattern: Column): Column =
-    col(HasSubstructure(expr(target), expr(pattern)))
+    HasSubstructure(target, pattern)
 }

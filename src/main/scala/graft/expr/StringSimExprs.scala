@@ -1,16 +1,11 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Jaro–Winkler string-similarity kernel (static, codegen-callable —
-  * same pattern as [[TextHash]]). Semantics pinned to the COMMON
+/** Jaro–Winkler string-similarity kernel (a static method, called
+  * through [[Kernels]]). Semantics pinned to the COMMON
   * parameterization that DuckDB's `jaro_winkler_similarity` also
   * implements (verified against it on pinned vectors, see
   * KernelProps):
@@ -69,31 +64,6 @@ object StringSim {
     while (l < lmax && a(l) == b(l)) l += 1
     jaro + l * WinklerScale * (1.0 - jaro)
   }
-}
-
-/** `jaro_winkler(a, b)` — codegen'd Jaro–Winkler similarity (kernel
-  * and parameter rationale in [[StringSim.jaroWinkler]]); the fuzzy
-  * record-linkage scorer whose DuckDB builtin twin makes the whole
-  * fuzzy-join oracle-checkable. */
-case class JaroWinklerSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (_: StringType, _: StringType) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"jaro_winkler requires (string, string), got $other")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    StringSim.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.StringSim.jaroWinkler($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinklerSim =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "jaro_winkler"
 }
 
 /** Content-defined chunking kernel (Rabin/FastCDC family): cut the
@@ -167,31 +137,13 @@ object Cdc {
   }
 }
 
-/** `cdc_boundaries(text)` — codegen'd content-defined chunk boundary
-  * positions (kernel and rationale in [[Cdc]]). */
-case class CdcBoundaries(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"cdc_boundaries requires string, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Cdc.boundaries(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.Cdc.boundaries($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcBoundaries =
-    copy(child = newChild)
-  override def prettyName: String = "cdc_boundaries"
-}
-
 object stringfunctions {
-  def jaro_winkler(a: Column, b: Column): Column =
-    Bridge.column(JaroWinklerSim(Bridge.expression(a), Bridge.expression(b)))
-  def cdc_boundaries(c: Column): Column =
-    Bridge.column(CdcBoundaries(Bridge.expression(c)))
+  /** `jaro_winkler(a, b)` — Jaro–Winkler similarity (kernel and
+    * parameter rationale in [[StringSim.jaroWinkler]]); the fuzzy
+    * record-linkage scorer whose DuckDB builtin twin makes the whole
+    * fuzzy-join oracle-checkable. */
+  def jaro_winkler(a: Column, b: Column): Column = Kernels.JaroWinklerSim(a, b)
+  /** `cdc_boundaries(text)` — content-defined chunk boundary positions
+    * (kernel and rationale in [[Cdc]]). */
+  def cdc_boundaries(c: Column): Column = Kernels.CdcBoundaries(c)
 }

@@ -4,76 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-
-/** SimHash64 — 64-bit near-dup fingerprint of a token array (SURVEY §7
-  * dedup north-star; kernel in [[TextHash]]). Codegen'd static call,
-  * same pattern as the TextNorm expressions. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires array<string>, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.TextHash.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 = copy(newChild)
-  override def prettyName: String = "simhash64"
-}
-
-/** `poly61(s)` — the oracle-expressible polynomial string hash (kernel
-  * and rationale in [[TextHash.poly61]]): the hash under every
-  * driver-checkable dedup/fingerprint pipeline. */
-case class PolyHash61(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"poly61 requires string, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.poly61(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.TextHash.poly61($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyHash61 = copy(newChild)
-  override def prettyName: String = "poly61"
-}
-
-/** `word_gram_poly61(tokens, n)` — fused n-gram hashing (kernel and
-  * rationale in [[TextHash.wordGramPoly61]]): one codegen'd pass per
-  * row, no gram-string materialization, no per-element lambda. */
-case class WordGramPoly61(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) if n >= 1 => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_gram_poly61 requires array<string> and n >= 1, got ${other.catalogString}, n=$n")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.wordGramPoly61(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.TextHash.wordGramPoly61($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordGramPoly61 =
-    copy(child = newChild)
-  override def prettyName: String = "word_gram_poly61"
-}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** `block_hash60(payload)` — block-average perceptual hash of a binary
   * payload (kernel and rationale in [[TextHash.blockHash60]]). Payloads
@@ -110,11 +43,18 @@ case class BlockHash60(child: Expression) extends UnaryExpression {
 }
 
 object hashfunctions {
-  def simhash64(c: Column): Column = Bridge.column(SimHash64(Bridge.expression(c)))
+  /** SimHash64 — 64-bit near-dup fingerprint of a token array (SURVEY §7
+    * dedup north-star; kernel in [[TextHash.simhash64]]). */
+  def simhash64(c: Column): Column = Kernels.SimHash64(c)
   def block_hash60(c: Column): Column = Bridge.column(BlockHash60(Bridge.expression(c)))
-  def poly61(c: Column): Column = Bridge.column(PolyHash61(Bridge.expression(c)))
-  def word_gram_poly61(c: Column, n: Int): Column =
-    Bridge.column(WordGramPoly61(Bridge.expression(c), n))
+  /** `poly61(s)` — the oracle-expressible polynomial string hash (kernel
+    * and rationale in [[TextHash.poly61]]): the hash under every
+    * driver-checkable dedup/fingerprint pipeline. */
+  def poly61(c: Column): Column = Kernels.PolyHash61(c)
+  /** `word_gram_poly61(tokens, n)` — fused n-gram hashing (kernel and
+    * rationale in [[TextHash.wordGramPoly61]]): one pass per row, no
+    * gram-string materialization, no per-element lambda. */
+  def word_gram_poly61(c: Column, n: Int): Column = Kernels.WordGramPoly61(c, lit(n))
 
   /** DuckDB twin of [[TextHash.poly61]] over a SQL string expression
     * `g`. The expression is substituted FOUR times (two folds × two

@@ -1,70 +1,26 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the normalization ops Spark lacks
-  * (SURVEY §2.7 X5/X8/X9, §4 "custom Catalyst work actually required").
-  *
-  * All three are `UnaryExpression`s over strings with real `doGenCode`
-  * (a static call into [[TextNorm]]) so they stay inside whole-stage
-  * codegen — no UDF serialization, no codegen fallback in the hot path.
-  */
-abstract class StringUnaryExpr extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-  /** Fully-qualified static method implementing the kernel. */
-  protected def kernel: String
-
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    UTF8String.fromString(evalString(s))
-  }
-  protected def evalString(s: String): String
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString($kernel($c.toString()))")
+/** `UTF8String` entry points of the [[TextNorm]] kernels, called by the
+  * [[Kernels]] text-normalization declarations. */
+object TextNormKernels {
+  def nfc(s: UTF8String): UTF8String = UTF8String.fromString(TextNorm.nfc(s.toString))
+  def asciiTranslit(s: UTF8String): UTF8String =
+    UTF8String.fromString(TextNorm.asciiTranslit(s.toString))
+  def normalizeCompound(s: UTF8String): UTF8String =
+    UTF8String.fromString(TextNorm.normalizeCompound(s.toString))
 }
 
-/** X5 — Unicode NFC normalization (`uconv -x Any-NFC`, process_pubmed.sh:120). */
-case class NormalizeNfc(child: Expression) extends StringUnaryExpr {
-  override protected def kernel: String = "graft.expr.TextNorm.nfc"
-  override protected def evalString(s: String): String = TextNorm.nfc(s)
-  override protected def withNewChildInternal(newChild: Expression): NormalizeNfc = copy(newChild)
-  override def prettyName: String = "normalize_nfc"
-}
-
-/** X8 — ASCII transliteration (`iconv -t ASCII//TRANSLIT`, process_pubmed.sh:135). */
-case class TransliterateAscii(child: Expression) extends StringUnaryExpr {
-  override protected def kernel: String = "graft.expr.TextNorm.asciiTranslit"
-  override protected def evalString(s: String): String = TextNorm.asciiTranslit(s)
-  override protected def withNewChildInternal(newChild: Expression): TransliterateAscii = copy(newChild)
-  override def prettyName: String = "transliterate_ascii"
-}
-
-/** X9 — compound-name normalization (finalize_realease.py:517-525). */
-case class NormalizeCompound(child: Expression) extends StringUnaryExpr {
-  override protected def kernel: String = "graft.expr.TextNorm.normalizeCompound"
-  override protected def evalString(s: String): String = TextNorm.normalizeCompound(s)
-  override protected def withNewChildInternal(newChild: Expression): NormalizeCompound = copy(newChild)
-  override def prettyName: String = "normalize_compound"
-}
-
-/** Column-level entry points (the library's public function surface). */
+/** Column-level entry points (the library's public function surface)
+  * for the normalization ops Spark lacks (SURVEY §2.7 X5/X8/X9, §4
+  * "custom Catalyst work actually required"). */
 object functions {
-  private def expr(c: Column): Expression = Bridge.expression(c)
-  private def col(e: Expression): Column = Bridge.column(e)
-
-  def normalize_nfc(c: Column): Column = col(NormalizeNfc(expr(c)))
-  def transliterate_ascii(c: Column): Column = col(TransliterateAscii(expr(c)))
-  def normalize_compound(c: Column): Column = col(NormalizeCompound(expr(c)))
+  /** X5 — Unicode NFC normalization (`uconv -x Any-NFC`, process_pubmed.sh:120). */
+  def normalize_nfc(c: Column): Column = Kernels.NormalizeNfc(c)
+  /** X8 — ASCII transliteration (`iconv -t ASCII//TRANSLIT`, process_pubmed.sh:135). */
+  def transliterate_ascii(c: Column): Column = Kernels.TransliterateAscii(c)
+  /** X9 — compound-name normalization (finalize_realease.py:517-525). */
+  def normalize_compound(c: Column): Column = Kernels.NormalizeCompound(c)
 }

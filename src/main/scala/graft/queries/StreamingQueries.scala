@@ -829,7 +829,7 @@ object StreamingQueries {
     * split across batch boundaries, so collapsing them requires the
     * canonicalization to agree across batches and the aggregation
     * state to survive them. Each row canonicalizes in the scan stage
-    * (codegen'd [[graft.expr.CanonicalSmiles]]); one streaming
+    * (the `canonical_smiles` kernel); one streaming
     * aggregation keyed on the canonical form maintains
     * (cluster_rep, counts). Reuses d2_smiles_canonical's oracle
     * VERBATIM — batching-invariance, exactly like t16 reuses the batch

@@ -108,7 +108,7 @@ object TextQueries {
       .groupBy(col("order_year")).agg(count(lit(1)).as("n_orders"))
 
   /** X9 (finalize_realease.py:517-525): compound-name normalization via
-    * the custom `NormalizeCompound` expression (codegen'd). */
+    * the `normalize_compound` kernel ([[graft.expr.functions]]). */
   def x9CompoundNorm(spark: SparkSession, dir: String): DataFrame =
     Tables.part(spark, dir)
       .select(col("p_partkey"), normalize_compound(col("p_name")).as("norm_name"))
@@ -247,9 +247,8 @@ object TextQueries {
 
   val JwThreshold = 0.9
 
-  /** Fuzzy join on the custom codegen'd [[graft.expr.JaroWinklerSim]]
-    * expression (kernel parity with DuckDB's builtin pinned in
-    * KernelProps): same typo corpus and [[fuzzyCandidates]]
+  /** Fuzzy join on the `jaro_winkler` kernel (parity with DuckDB's
+    * builtin pinned in KernelProps): same typo corpus and [[fuzzyCandidates]]
     * prefix-blocking as [[fuzzyJoinLevenshtein]], but scored by
     * Jaro–Winkler — the record-linkage metric that rewards shared
     * prefixes, which is what prefix blocking pairs naturally with.

@@ -90,17 +90,33 @@ class PlanLintSpec extends SparkSpecBase {
     * AQE-on lints: its executed plan (and so its analyzed and optimized
     * plans and its schema) is computed before [[GraftSession.release]]
     * frees its cached frames, which would otherwise accumulate across
-    * the sweep. */
-  private lazy val built: Seq[(String, DataFrame)] =
+    * the sweep. Each entry also lists the persistent RDDs that appeared
+    * while the query was built and outlived its release. */
+  private lazy val sweep: Seq[(String, DataFrame, Seq[String])] = {
+    val sc = spark.sparkContext
+    var persisted = sc.getPersistentRDDs.keySet.toSet
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val df = fn(spark, sfDir)
       df.queryExecution.executedPlan
       GraftSession.release(spark)
-      name -> df
+      val now = sc.getPersistentRDDs
+      val left = now.collect { case (id, rdd) if !persisted(id) => rdd.toString }.toSeq
+      persisted = now.keySet.toSet
+      (name, df, left)
     }
+  }
+  private def built: Seq[(String, DataFrame)] = sweep.map(q => q._1 -> q._2)
 
   private def offending(lint: DataFrame => Boolean): Seq[String] =
     built.collect { case (name, df) if lint(df) => name }
+
+  test("no registered query leaves a persistent RDD after GraftSession.release") {
+    // release frees the catalog cache only: an RDD persisted around
+    // Materialize, or a cut that was never unpersisted, outlives it
+    val offenders = sweep.collect { case (name, _, left) if left.nonEmpty =>
+      s"$name (${left.mkString(", ")})" }
+    assert(offenders.isEmpty, s"persistent RDDs left after release by: ${offenders.mkString("; ")}")
+  }
 
   test("no ScalaUDF in any registered query's optimized plan") {
     val offenders = offending(_.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {

@@ -118,6 +118,23 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(hits.isEmpty, s"frames cached around Materialize in: ${hits.mkString(", ")}")
   }
 
+  test("no src/main expression hand-writes a one-call kernel") {
+    // a scalar function that is one static call is declared once in
+    // graft.expr.Kernels and runs as Spark's StaticInvoke: a hand-written
+    // Expression whose generated code is that call re-implements it
+    val oneCall = """defineCodeGen\(ctx, ev, [^\n]*=>\s*s"graft\.expr\.\w+\.\w+\(""".r
+    assert(oneCall.findFirstIn(
+      """defineCodeGen(ctx, ev, c => s"graft.expr.TextHash.poly61($c)")""").isDefined)
+    assert(oneCall.findFirstIn(
+      "defineCodeGen(ctx, ev, (a, b) =>\n      s\"graft.expr.BitSimKernels.tversky($a, $b)\")").isDefined)
+    assert(oneCall.findFirstIn(
+      """defineCodeGen(ctx, ev, (a, b) => s"graft.expr.VectorKernels.$kernel($a, $b)")""").isEmpty)
+    assert(oneCall.findFirstIn(
+      """defineCodeGen(ctx, ev, c => s"$ac.matchesAny($c.toString())")""").isEmpty)
+    val hits = hitsOutside("", oneCall, "src/main/scala")
+    assert(hits.isEmpty, s"one-call kernels hand-written as expressions in: ${hits.mkString(", ")}")
+  }
+
   test("only Ledger registers a Spark listener in src/main") {
     // each hand-written listener picks its own bus drain and its own
     // rule for which jobs count: Ledger attributes every job to its run
